@@ -1,28 +1,82 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import scala.util.Try
+import scala.util.control.NonFatal
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The timing and diagnostic main. Modes (`runMain graft.Bench <mode>`):
+  *   - `suite [q…]` (default): every SparkEntry query, or the named
+  *     ones, with the regression tripwire; writes the detail JSON and
+  *     prints one JSON line last on stdout.
+  *   - `time <q> [sfDir] [reps]`: `reps` timed counts of one query.
+  *   - `profile <sfDir> <q…>`: attributes each query's wall to Spark jobs.
+  *   - `soak <sfDir>`: every query in one session; residency + heap.
+  *   - `explain <sfDir> [q…]`: `.explain("formatted")` per query.
+  * Every mode exits 1 if a query failed. `SPARK_GRAFT_CPUS` (default 4)
+  * sizes the session of every mode and of [[ScaleSweep]]/[[SkewBench]]. */
 object Bench {
-  /** Re-measure one query in a FRESH JVM (same classpath and JVM
-    * flags as this one — build.sbt forks, so java.class.path is the
-    * real classpath): spawns `graft.TimeOne <name> <sfDir> 2` and
-    * returns the best rep. The r13 adjudication showed trip-sized
-    * swings are JVM/box state that a fresh SparkSession inside the
-    * same JVM cannot shed — only a fresh process adjudicates. The
-    * bench's OWN core count is pinned into the child's environment:
-    * TimeOne defaults SPARK_GRAFT_CPUS to 32 while Bench defaults to
-    * 4, so an un-pinned spawn would re-measure at 8× the parallelism
-    * and a genuine plan regression could read "in-band" (with its
-    * too-fast time leaking into the recorded min). None on spawn
-    * failure or timeout (10 min).
-    *
-    * MEMORY: the child inherits the parent's full JVM args (incl.
-    * -Xmx) while the parent Spark driver stays resident, so a box
-    * sized for ONE bench JVM must hold ~2× the bench heap during
-    * adjudication (r14 ADVICE). The min() recording direction is safe
-    * either way — a thrashing fresh run never exonerates a trip — but
-    * on a tight box set GRAFT_ADJ_XMX (e.g. "4g") to cap the child
-    * heap below the parent's. */
-  private def secondJvmTime(name: String, sfDir: String, cpus: String)
-      : Option[Double] =
+  /** The session recipe of every bench main. The harness GCs between
+    * queries itself ([[hygiene]]), so the session's periodic forced FULL
+    * GC would only inject multi-second stop-the-world pauses INTO timed
+    * windows — schedule it beyond any plausible run. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(cpus)
+      .config("spark.cleaner.periodicGC.interval", "2h")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** JVM warm-up: one codegen'd scan-aggregate before anything is timed. */
+  def warmJvm(spark: SparkSession): Unit =
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+
+  /** Inter-query hygiene, OUTSIDE timed windows: drop result blocks the
+    * previous query left behind (operators free their own big
+    * intermediates via Release.scoped, so this is cheap), then GC so the
+    * collection happens now rather than bleeding into the next timing. */
+  def hygiene(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
+
+  /** Wall seconds of `f` and its outcome. A non-fatal throw is a
+    * Failure, so a query that fails fast is never recorded as fast;
+    * fatal errors (OOM, linkage) propagate. */
+  def timed[A](f: => A): (Double, Try[A]) = {
+    val t0 = System.nanoTime()
+    val r = Try(f)
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+
+  /** The timed action on a query's DataFrame, in every bench main. */
+  def materialize(df: DataFrame): Long = df.count()
+
+  /** A `time` rep line, as the fresh-JVM adjudication parses it. */
+  private[graft] val RepLine = "\\[timeone\\] \\S+ rep\\d+: ([0-9.]+) s".r
+
+  private def lookup(names: Seq[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(" ")}")
+    names.map(n => n -> SparkEntry.queries(n))
+  }
+
+  /** Re-measure one query in a FRESH JVM with this JVM's classpath,
+    * flags and environment (so the same SPARK_GRAFT_CPUS): spawns
+    * `graft.Bench time <name> <sfDir> 2` and returns the best rep.
+    * Trip-sized swings are JVM/box state that a fresh SparkSession in
+    * the same JVM cannot shed (r13). None on spawn failure or timeout
+    * (10 min). The parent driver stays resident, so the box must hold
+    * ~2× the bench heap meanwhile; GRAFT_ADJ_XMX (e.g. "4g") caps the
+    * child's heap. A thrashing child never exonerates a trip: the
+    * recorded time is the min. */
+  private def secondJvmTime(name: String, sfDir: String): Option[Double] =
     try {
       import scala.jdk.CollectionConverters._
       val javaBin = new java.io.File(new java.io.File(
@@ -35,10 +89,9 @@ object Bench {
           (adjXmx.isDefined && a.startsWith("-Xmx"))) ++
         adjXmx.map(x => s"-Xmx$x").toSeq
       val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp",
-        System.getProperty("java.class.path"), "graft.TimeOne",
+        System.getProperty("java.class.path"), "graft.Bench", "time",
         name, sfDir, "2")
       val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
       pb.redirectErrorStream(true)
       val p = pb.start()
       val outF = new java.io.ByteArrayOutputStream()
@@ -49,39 +102,192 @@ object Bench {
       pump.join(10000)
       val out = new String(outF.toByteArray,
         java.nio.charset.StandardCharsets.UTF_8)
-      val times = "\\[timeone\\] \\S+ rep\\d+: ([0-9.]+) s".r
-        .findAllMatchIn(out).map(_.group(1).toDouble).toSeq
+      val times = RepLine.findAllMatchIn(out).map(_.group(1).toDouble).toSeq
       if (times.nonEmpty) Some(times.min) else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // The bench loop GCs between queries itself (hygiene below), so the
-    // session's periodic forced FULL GC would only inject multi-second
-    // stop-the-world pauses INTO timed windows — schedule it beyond any
-    // plausible suite duration.
-    val spark = GraftSession.builder(cpus)
-      .config("spark.cleaner.periodicGC.interval", "2h")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup policy (r9, updated r10): warm the JVM/codegen/parquet-
-    // footer paths AND the shared operator classes — including, for the
-    // dedup/CC family whose r8 cold/warm split was 4-8×, the actual
-    // library kernels on small SYNTHETIC inputs. Measured queries still
-    // pay their own plan + data-specific codegen; what the warmup
-    // removes is first-use compilation of engine/operator classes that
-    // any long-lived production session would have warm. Cold-start
-    // numbers remain measurable with GRAFT_BENCH_NO_OPWARM=1 (skips the
-    // operator-class warmups, keeping only the table scans).
+    val mode: SparkSession => Boolean = args.toList match {
+      case Nil                            => suite(_, sfDir, Nil)
+      case "suite" :: qs                  => suite(_, sfDir, qs)
+      case "time" :: q :: rest if rest.size <= 2 =>
+        time(_, q, rest.headOption.getOrElse(sfDir),
+          rest.lift(1).fold(3)(_.toInt))
+      case "profile" :: dir :: qs if qs.nonEmpty => profile(_, dir, qs)
+      case "soak" :: dir :: Nil           => soak(_, dir)
+      case "explain" :: dir :: qs         => s => { explain(s, dir, qs); true }
+      case _ =>
+        System.err.println("usage: graft.Bench [suite [q…] | " +
+          "time <q> [sfDir] [reps] | profile <sfDir> <q…> | " +
+          "soak <sfDir> | explain <sfDir> [q…]]")
+        sys.exit(2)
+    }
+    val spark = session()
+    val ok = try mode(spark) finally spark.stop()
+    if (!ok) sys.exit(1)
+  }
+
+  /** `time`: the JVM warm-up, then `reps` timed counts of one query with
+    * no hygiene between them — the dev loop for one operator's plan,
+    * and the fresh-JVM adjudication's measurement. */
+  def time(spark: SparkSession, name: String, sfDir: String,
+           reps: Int): Boolean = {
+    warmJvm(spark)
+    val fn = SparkEntry.queries(name)
+    (1 to reps).map { r =>
+      val (sec, rows) = timed(materialize(fn(spark, sfDir)))
+      rows.fold(
+        e => println(f"[timeone] $name rep$r: FAILED after $sec%.3f s: $e"),
+        n => println(f"[timeone] $name rep$r: $sec%.3f s ($n rows)"))
+      rows.isSuccess
+    }.forall(identity)
+  }
+
+  private final case class Job(id: Int, desc: String, start: Long,
+                               stages: Int, tasks: Int, var end: Long = 0L)
+
+  /** The jobs started since the last `clear()`, with their end times. */
+  private final class JobLog extends SparkListener {
+    private val jobs = mutable.LinkedHashMap[Int, Job]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val d = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse("")
+      jobs(e.jobId) = Job(e.jobId, d, e.time, e.stageInfos.size,
+        e.stageInfos.map(_.numTasks).sum)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
+    def clear(): Unit = synchronized { jobs.clear() }
+    def snapshot: Seq[Job] = synchronized { jobs.values.toSeq }
+  }
+
+  /** `profile`: runs each query once (after the JVM warm-up, with
+    * hygiene before each) and prints one summary line per query plus
+    * one line per Spark job (start offset, duration, stages, tasks,
+    * description). `gap` = wall − in-job time = driver-side planning,
+    * codegen and collect work; `build` = DataFrame construction.
+    * `codegen~=` is approximate: Janino compile count × the mean of
+    * CodegenMetrics' sampled (decaying) reservoir, not a true sum. */
+  def profile(spark: SparkSession, sfDir: String,
+              names: Seq[String]): Boolean = {
+    val queries = lookup(names)
+    warmJvm(spark)
+    def codegenMs(): Long = {
+      val h = org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME
+      h.getCount * math.round(h.getSnapshot.getMean)
+    }
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try queries.map { case (n, fn) =>
+      hygiene(spark)
+      log.clear()
+      val cg0 = codegenMs()
+      val t0Ms = System.currentTimeMillis()
+      val (build, df) = timed(fn(spark, sfDir))
+      val (run, rows) = timed(materialize(df.get))
+      val cgMs = codegenMs() - cg0
+      rows.failed.foreach(e => println(s"[profile] $n " +
+        (if (df.isFailure) "CONSTRUCT " else "") + s"FAILED: $e"))
+      Thread.sleep(300) // the listener bus is async; let it drain
+      val js = log.snapshot
+      val inJob = js.map(j =>
+        if (j.end > 0) (j.end - j.start) / 1e3 else 0.0).sum
+      val wall = build + run
+      println(f"[profile] $n wall=$wall%.3f s " +
+        s"rows=${rows.getOrElse(-1L)} " +
+        f"jobs=${js.size} injob=$inJob%.3f s " +
+        f"gap=${wall - inJob}%.3f s build=$build%.3f s " +
+        f"codegen~=${cgMs / 1e3}%.3f s")
+      js.foreach { j =>
+        val dur = if (j.end > 0) (j.end - j.start) / 1e3 else -1.0
+        println(f"[profile]   job ${j.id}%3d " +
+          f"+${(j.start - t0Ms) / 1e3}%6.2fs dur=$dur%7.3f s " +
+          f"stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(80)}")
+      }
+      rows.isSuccess
+    }.forall(identity)
+    finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  /** `soak`: runs EVERY query in ONE session to prove the
+    * persist/unpersist + `Release.scoped` discipline holds — no OOM,
+    * and block residency back at baseline after each query. Blocks a
+    * query hands back (a localCheckpoint'ed result the CALLER owns)
+    * count as `left_behind` and are freed like a disciplined caller
+    * would. Heap is sampled post-GC per query; the JSON line reports
+    * the peak, the final residual, and every query that left blocks or
+    * failed. Run at the executor budget: `SPARK_DRIVER_MEM=8g
+    * SPARK_GRAFT_CPUS=8`. */
+  def soak(spark: SparkSession, sfDir: String): Boolean = {
+    val sc = spark.sparkContext
+    val rt = Runtime.getRuntime
+    def heapMb(): Long = { System.gc()
+      (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024) }
+
+    var peakHeap = 0L
+    var errors = List.empty[String]
+    var leavers = List.empty[(String, Int)]
+    val t0 = System.nanoTime()
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val pre = sc.getPersistentRDDs.keySet
+      timed(materialize(fn(spark, sfDir)))._2.failed.foreach(e =>
+        errors ::= s"$name:${e.getClass.getSimpleName}")
+      val post = sc.getPersistentRDDs
+      val left = (post.keySet -- pre).toSeq
+      if (left.nonEmpty) leavers ::= (name, left.size)
+      // disciplined caller: free the results handed back to us, then
+      // verify residency is back at the pre-query set
+      left.foreach(id => post(id).unpersist(blocking = true))
+      val residual = sc.getPersistentRDDs.keySet -- pre
+      require(residual.isEmpty,
+        s"$name: ${residual.size} blocks survived caller unpersist")
+      val h = heapMb()
+      if (h > peakHeap) peakHeap = h
+      println(f"[soak] $name%-28s heap=${h}%5d MB left_behind=${left.size}")
+    }
+    val total = (System.nanoTime() - t0) / 1e9
+    val finalResident = sc.getPersistentRDDs.size
+    val lv = leavers.reverse.map { case (n, k) => s""""$n":$k""" }
+      .mkString(",")
+    val er = errors.reverse.map(e => s""""$e"""").mkString(",")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
+    println(f"""{"metric":"soak","sf":"$sfDir","cpus":$cpus,""" +
+      s""""heap_max_mb":${rt.maxMemory() / (1024 * 1024)},""" +
+      s""""n_queries":${SparkEntry.queries.size},""" +
+      f""""total_sec":$total%.1f,"peak_heap_mb":$peakHeap,""" +
+      s""""final_heap_mb":${heapMb()},""" +
+      s""""final_resident_rdds":$finalResident,""" +
+      s""""errors":[$er],"left_behind":{$lv}}""")
+    errors.isEmpty
+  }
+
+  /** `explain`: `.explain("formatted")` for the named queries (or a
+    * representative default set), to review scan pruning, pushdown,
+    * broadcasts and codegen spans. */
+  def explain(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
+    lookup(if (names.nonEmpty) names
+      else Seq("q1_agg", "q_lin_reg", "q_roc_auc", "q_knn_kth_dist",
+        "q_jaccard_dup_pairs", "q_pipeline")).foreach { case (n, fn) =>
+      println(s"\n========== $n ==========")
+      fn(spark, sfDir).explain("formatted")
+    }
+
+  /** `suite`: times every SparkEntry query (or the named ones) with the
+    * regression tripwire below. Returns false if any query failed. */
+  def suite(spark: SparkSession, sfDir: String, names: Seq[String]): Boolean = {
+    val selected =
+      if (names.isEmpty) SparkEntry.queries else lookup(names).toMap
+    // Warmup: the JVM, then Spark's own operators and the library
+    // kernels on small SYNTHETIC inputs, then a scan of every table.
+    // Measured queries still pay their own plan + data-specific
+    // codegen; the warmup removes first-use compilation (codegen + C2)
+    // of engine/operator classes that any long-lived production
+    // session would have warm.
     try {
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      // Exercise the core physical operators once on SYNTHETIC data so
-      // the first measured queries aren't charged Spark's own operator
-      // JIT (HashAggregate/SortMergeJoin/Window/Generate codegen + C2).
-      // No measured query's plan is precomputed — each still pays its
-      // own plan + query-specific codegen; this only warms the shared
-      // engine classes, like any long-lived production session.
+      warmJvm(spark)
       locally {
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.expressions.Window
@@ -100,11 +306,8 @@ object Bench {
         a.select(col("id"), col("k"))
           .join(broadcast(a.select(col("k").as("k2")).distinct()),
             col("k") === col("k2")).count()
-        // Higher-order array lambdas (transform/filter/sequence/
-        // element_at/aggregate), md5-derived bucketing and global
-        // top-k: the DSIR/n-gram family plans explode over lambda-
-        // built arrays whose interpreted-eval paths need their own C2
-        // warm — the operator warmups above never touch them.
+        // higher-order array lambdas, md5 bucketing and global top-k
+        // (the DSIR/n-gram family's interpreted-eval paths)
         a.select(explode(
             transform(filter(split(col("s"), " "), w => w =!= ""),
               t => concat_ws(" ", t, t))).as("g"))
@@ -116,23 +319,13 @@ object Bench {
               i => i.cast("double") * col("v")), lit(0.0),
               (acc, x) => acc + x).as("x"))
           .orderBy(col("x").desc).limit(50).collect()
-        // r9 (sizes raised r10): dedup/CC/band-join/crossJoin-of-aggs
-        // DAG shapes. The r8 cold/warm split (q_dedup_survivors 7.9 vs
-        // 1.9 s, q_dup_clusters 6.0 vs 2.0, q_jaccard_dup_pairs 3.4 vs
-        // 0.8, q_krippendorff/q_kappa ~3 s for count-algebra plans) was
-        // first-use compilation of exactly these operator classes:
-        // collect_list-of-struct ObjectHashAggregate + the pair UDF,
-        // star-contraction rounds + union-find finish + label joins,
-        // the banded self-join + signature fetch, and
-        // BroadcastNestedLoopJoin over 1-row aggregates. r10: 300-row
-        // toy inputs left the hot inner loops below C2's invocation
-        // thresholds (the r9 judge run still saw 4-8× first executions
-        // in-suite); a few thousand rows crosses them for ~1 s of
-        // one-time warmup cost.
-        def quietly(f: => Unit): Unit =
-          try f catch { case _: Throwable => }
-        val opWarm = !sys.env.contains("GRAFT_BENCH_NO_OPWARM")
-        if (opWarm) quietly {
+        // dedup/CC/band-join/crossJoin-of-aggs shapes: their first-use
+        // compilation was the r8 cold/warm split (4-8×, e.g.
+        // q_dedup_survivors 7.9 vs 1.9 s). Inputs of a few thousand
+        // rows push the hot inner loops past C2's invocation thresholds
+        // (300-row toys did not, r10) for ~1 s of one-time cost.
+        def quietly(f: => Unit): Unit = Try(f)
+        quietly {
           val docs = spark.range(3000L).selectExpr("id as i",
             "concat('t', id % 29, ' t', id % 7, ' t', (id * 11) % 31," +
               " ' t', id % 3) as txt",
@@ -144,27 +337,27 @@ object Bench {
             col("id1"), col("id2")).count()
           pairs.unpersist(blocking = false)
         }
-        if (opWarm) quietly {
+        quietly {
           graft.text.TextOps.minHashDupPairs(
             spark.range(1000L).selectExpr("id as i",
               "concat('a', id % 13, ' b', id % 5, ' c', id % 7," +
                 " ' d', id % 3) as txt"),
             col("i"), col("txt"), 0.5, 3, 32, 8).count()
         }
-        if (opWarm) quietly { // distributed star rounds (no local finish)
+        quietly { // distributed star rounds (no local finish)
           graft.graph.GraphOps.connectedComponents(
             spark.range(5000L).selectExpr("id % 311 as u",
               "(id * 7) % 311 as v"),
             col("u"), col("v"), 25, 0L).count()
         }
-        if (opWarm) quietly { // breeze first-use init (eigSym/svd class
+        quietly { // breeze first-use init (eigSym/svd class
           // loading + netlib probe — the PCA/SVD family's cold cost,
           // ~1-3 s, that any long-lived session pays exactly once)
           val m = breeze.linalg.DenseMatrix((1.0, 0.2), (0.2, 1.0))
           breeze.linalg.eigSym(m)
           breeze.linalg.svd(m)
         }
-        if (opWarm) quietly { // crossJoin of tiny aggregates (kappa class)
+        quietly { // crossJoin of tiny aggregates (kappa class)
           val one = spark.range(1000L)
             .selectExpr("id % 5 as k", "cast(id % 3 as double) as v")
           one.groupBy("k").agg(sum("v").as("s"))
@@ -183,22 +376,16 @@ object Bench {
             .agg(sum("h")).collect()
         }
       }
-    } catch { case _: Throwable => }
-    // Fixed calibration probe (r12 verdict ask #2; r13 ask #3 made it
-    // best-of-3 WITH its own recorded spread; r15 ask #6 INTERLEAVES
-    // the probes — two up front, one mid-loop, one at the end, each
-    // timestamped). The probe is sf-INDEPENDENT deterministic work (a
-    // codegen'd scan-aggregate plus a shuffle-heavy groupBy-join)
-    // timed after warmup; the BEST probe over the committed run's
-    // calibration value estimates the session speed factor
-    // (min-based: interference inflates, never deflates, a timing —
-    // and a max-based factor would let a noisy canary normalize real
-    // regressions away, the r13 failure). When the first and last
-    // probe disagree by > 1.3× the box drifted mid-session, and trips
-    // are judged against the probe NEAREST each measurement (the r14
-    // driver session took all three probes up front while warming up
-    // — the factor was blind to the tail). All probes + timestamps
-    // are recorded; decision logic lives in [[BenchProtocol]].
+    } catch { case NonFatal(_) => }
+    // Calibration canary: sf-INDEPENDENT deterministic work (a
+    // codegen'd scan-aggregate plus a shuffle-heavy groupBy-join),
+    // probed twice up front, once mid-loop and once at the end, each
+    // timestamped. The BEST probe over the committed calibration is
+    // the session speed factor (min-based: interference inflates,
+    // never deflates, a timing, so a noisy canary cannot normalize a
+    // regression away). If the first and last probe disagree by > 1.3×
+    // the box drifted, and trips are judged against the probe NEAREST
+    // each measurement. Decision logic lives in [[BenchProtocol]].
     val sessionT0 = System.nanoTime()
     def nowAt: Double = (System.nanoTime() - sessionT0) / 1e9
     def canaryOnce(): Double = {
@@ -216,9 +403,8 @@ object Bench {
       g.join(d, "k").agg(sum(col("s") * col("v"))).collect()
       (System.nanoTime() - t0) / 1e9
     }
-    val probeBuf =
-      scala.collection.mutable.ArrayBuffer[BenchProtocol.Probe]()
-    val pairSpreads = scala.collection.mutable.ArrayBuffer[Double]()
+    val probeBuf = mutable.ArrayBuffer[BenchProtocol.Probe]()
+    val pairSpreads = mutable.ArrayBuffer[Double]()
     // r16 verdict ask #7: two back-to-back canary runs per probe
     // point, keep the min (BenchProtocol.pairProbe) — outside every
     // timed query window, so only the session length grows
@@ -230,14 +416,6 @@ object Bench {
         pairSpreads += spread
       } catch { case _: Throwable => }
     takeProbe(); takeProbe()
-    // GRAFT_BENCH_ONLY=q_a,q_b : time just those queries (local
-    // iteration aid; the driver never sets it)
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None    => SparkEntry.queries
-    }
     val detailPath = java.nio.file.Paths.get(
       sys.env.getOrElse("GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json"))
     // Previous run's per-query medians, spread bands, and calibration
@@ -266,40 +444,31 @@ object Bench {
       } catch { case _: Throwable =>
         (Map.empty[String, Double], 0.0,
           Map.empty[String, (Double, Double)]) }
-    def timedRun(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      // inter-query hygiene, OUTSIDE the timed window: drop result
-      // blocks the previous query left behind (operators free their own
-      // big intermediates via Release.scoped, so this is cheap), then
-      // GC so the collection happens now rather than bleeding into the
-      // next query's timed section. Opt out: GRAFT_BENCH_NO_HYGIENE=1.
-      if (!sys.env.contains("GRAFT_BENCH_NO_HYGIENE")) {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
+    // A failed query (first pass or retry) is listed under "failed",
+    // left out of the total, and fails the run.
+    val failed = mutable.LinkedHashSet[String]()
+    def timedRun(name: String): Option[Double] = {
+      hygiene(spark)
+      val (sec, r) = timed(materialize(selected(name)(spark, sfDir)))
+      r.failed.foreach { e =>
+        failed += name
+        println(s"[bench-failed] $name: $e")
       }
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      r.toOption.map(_ => sec)
     }
-    val qseq = selected.toSeq
+    val qseq = selected.keys.toSeq
     val midIdx = qseq.size / 2
-    val firstPassAt = qseq.zipWithIndex.map { case ((name, fn), i) =>
+    val firstPassAt = qseq.zipWithIndex.flatMap { case (name, i) =>
       if (i == midIdx && qseq.size >= 4) takeProbe()
-      (name, timedRun(fn), nowAt)
+      timedRun(name).map(t => (name, t, nowAt))
     }
     takeProbe() // end-of-loop probe: the drifted-tail anchor
     val probes = probeBuf.toSeq
     val calProbes: Seq[Double] = probes.map(_.sec)
     val calibration: Double =
       if (calProbes.nonEmpty) calProbes.min else 0.0
-    // Session speed factor (BenchProtocol): best canary probe over the
-    // committed canary, clamped [0.8, 2.5]; >1 means this session runs
-    // the fixed canary SLOWER than the committed session did, and
-    // committed per-query numbers scale up accordingly. Under drift
-    // (first vs last probe > 1.3× apart) each trip decision swaps in
-    // the factor from the probe NEAREST that query's measurement.
+    // session factor > 1: this session runs the canary SLOWER than the
+    // committed one did, and committed per-query numbers scale up
     val sessionFactor: Double =
       BenchProtocol.sessionFactor(calProbes, prevCal)
     val drift = BenchProtocol.drifted(probes)
@@ -315,19 +484,14 @@ object Bench {
         f"$sessionFactor%.2fx")
     val firstPass = firstPassAt.map { case (n, t, _) => n -> t }.toMap
     val atOf = firstPassAt.map { case (n, _, at) => n -> at }.toMap
-    // Regression tripwire (band-aware, self-adjudicating — r13 verdict
-    // ask #3, decision logic in [[BenchProtocol]]):
+    // Regression tripwire (decision logic in [[BenchProtocol]]):
     //   1. a query trips only past BOTH 1.5× the committed median and
     //      1.25× the committed spread hi, scaled by the session factor
-    //      (or, under drift, the factor at the nearest canary probe —
-    //      r15 ask #6);
+    //      (under drift, the factor at the nearest canary probe);
     //   2. a trip gets ONE in-JVM re-run (GC/scheduling jitter);
-    //   3. a trip surviving the retry is re-measured in a SECOND,
-    //      FRESH JVM (graft.TimeOne, same classpath/JVM flags) before
-    //      being recorded — the r13 forensics showed the swings are
-    //      JVM/box state a fresh SparkSession cannot shed. The
-    //      recorded value is the min across all measurements; only
-    //      still-tripping values are flagged as regressions.
+    //   3. a trip surviving the retry is re-measured in a fresh JVM
+    //      ([[secondJvmTime]]). The recorded value is the min across
+    //      all measurements; only still-tripping values are regressions.
     def bandOf(n: String): Option[BenchProtocol.Band] =
       prev.get(n).map(p => BenchProtocol.Band(p,
         prevSpread.get(n).map(_._2).getOrElse(p)))
@@ -337,9 +501,9 @@ object Bench {
       else sessionFactor
     def trips(n: String, t: Double): Boolean =
       bandOf(n).exists(b => BenchProtocol.isTrip(t, b, factorFor(n)))
-    val retried = firstPass.map { case (name, t) =>
-      name -> (if (trips(name, t))
-        math.min(t, timedRun(selected(name))) else t)
+    val retried = firstPass.flatMap { case (name, t) =>
+      if (trips(name, t)) timedRun(name).map(r => name -> math.min(t, r))
+      else Some(name -> t)
     }
     // fresh-JVM adjudication, worst excess first, bounded (each spawn
     // pays full JVM + Spark + warmup startup; GRAFT_BENCH_MAX_ADJ=0
@@ -353,7 +517,7 @@ object Bench {
           BenchProtocol.tripThreshold(b, factorFor(n))).getOrElse(0.0)) }
     val secondJvm: Map[String, Double] =
       survivors.take(maxAdj).flatMap { case (n, t) =>
-        val fresh = secondJvmTime(n, sfDir, cpus)
+        val fresh = secondJvmTime(n, sfDir)
         fresh.foreach { ft =>
           println(f"[bench-adjudication] $n: in-suite $t%.2f s -> " +
             f"fresh JVM $ft%.2f s" +
@@ -393,7 +557,7 @@ object Bench {
           java.nio.charset.StandardCharsets.UTF_8).trim
         p.waitFor()
         out
-      } catch { case scala.util.control.NonFatal(_) => "" }
+      } catch { case NonFatal(_) => "" }
     val gitHead = gitLine("git", "rev-parse", "HEAD")
     val codeDirty = gitLine("git", "status", "--porcelain", "--",
       "src/main", "build.sbt").nonEmpty
@@ -406,9 +570,10 @@ object Bench {
     val adjJson = secondJvm.toSeq.sortBy(_._1)
       .map { case (n, t) => "\"" + n + "\":" + fmt(t) }
       .mkString("{", ",", "}")
-    val fullJson = results.toSeq.sortBy(-_._2)
+    // slowest queries first — they carry the performance signal
+    val entries = results.toSeq.sortBy(-_._2)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{\"total\":" + fmt(total) + ",\"n\":" + results.size +
+    val fullJson = entries.mkString("{\"total\":" + fmt(total) + ",\"n\":" + results.size +
         ",\"sf\":\"" + sfDir + "\",\"head\":\"" + gitHead +
         "\",\"code_dirty\":" + codeDirty +
         ",\"calibration\":" + fmt(calibration) +
@@ -425,6 +590,7 @@ object Bench {
         ",\"session_factor\":" + fmt(sessionFactor) +
         ",\"second_jvm\":" + adjJson +
         ",\"regressions\":" + regJson +
+        ",\"failed\":" + failed.map("\"" + _ + "\"").mkString("[", ",", "]") +
         ",\"queries\":{", ",", "}}")
     try {
       java.nio.file.Files.write(detailPath,
@@ -433,10 +599,8 @@ object Bench {
     // ONE compact JSON line, last on stdout, packed to a hard character
     // budget: the consumer keeps a ~2000-char stdout tail, and a line
     // that overflows it is unparseable (rounds 1-3 lost all numbers this
-    // way). Slowest queries first — they carry the performance signal.
+    // way).
     val budget = 1600
-    val entries = results.toSeq.sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
     val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"$sfDir","calibration":${fmt(calibration)},"queries":{"""
     val sb = new StringBuilder(head)
     var first = true
@@ -448,6 +612,6 @@ object Bench {
     }
     sb.append("}}")
     println(sb.toString)
-    spark.stop()
+    failed.isEmpty
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.Try
 
 /** sf10 flagship sweep (r11 verdict ask #5): times the most expensive
   * flagship families — dedup (jaccard/minhash/simhash), connected
@@ -33,7 +34,9 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleSweep <label=dir> <label=dir> [...]
   * Env: GRAFT_SWEEP_REPS (default 2 since r14; best-of-n per rung,
   *      cells carry [min,max]),
-  *      GRAFT_SWEEP_QUERIES (csv, overrides the registered-query list).
+  *      GRAFT_SWEEP_QUERIES (csv, overrides the registered-query list),
+  *      SPARK_GRAFT_CPUS (the [[Bench.session]] size, default 4 —
+  *      scripts/scale_sweep.sh sets 32).
   */
 object ScaleSweep {
 
@@ -83,11 +86,7 @@ object ScaleSweep {
     val qNames = sys.env.get("GRAFT_SWEEP_QUERIES")
       .map(_.split(",").toSeq).getOrElse(registered)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus)
-      .config("spark.cleaner.periodicGC.interval", "2h")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     @volatile var executorLosses = 0
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -98,13 +97,6 @@ object ScaleSweep {
           s"[sweep] EXECUTOR LOST: ${e.executorId} (${e.reason})")
       }
     })
-
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
 
     /** Direct operator probes, sized from the rung's own row counts. */
     def direct(dir: String, nDocs: Long, nEmb: Long)
@@ -256,24 +248,20 @@ object ScaleSweep {
           val docs = spark.read.parquet(s"$dir/documents.parquet")
           def pairs = graft.text.TextOps.jaccardDupPairs(docs,
             col("doc_id"), col("text"), col("source"), 0.5)
-          def timed(f: => Long): (Double, Long) = {
-            val t0 = System.nanoTime(); val r = f
-            ((System.nanoTime() - t0) / 1e9, r)
-          }
-          val (tp, np) = timed(pairs.count())
-          val (tf, nf) = timed(graft.graph.GraphOps
+          val (tp, np) = Bench.timed(pairs.count())
+          val (tf, nf) = Bench.timed(graft.graph.GraphOps
             .localSpanningForest(pairs, col("id1"), col("id2")).count())
-          val (tc, nc) = timed(graft.graph.GraphOps
+          val (tc, nc) = Bench.timed(graft.graph.GraphOps
             .dupClusters(pairs, col("id1"), col("id2")).count())
-          val (ts, ns) = timed(graft.graph.GraphOps
+          val (ts, ns) = Bench.timed(graft.graph.GraphOps
             .dedupByClusters(docs, col("doc_id"), pairs,
               col("id1"), col("id2")).count())
           println(f"[sweep] dup_funnel_stages $dir: " +
-            f"pairs $tp%.1f s ($np rows) | +forest ${tf - tp}%.1f s " +
-            f"($nf edges) | +cc+csize ${tc - tf}%.1f s ($nc members) " +
-            f"| survivors $ts%.1f s ($ns rows, " +
+            f"pairs $tp%.1f s (${np.get} rows) | +forest ${tf - tp}%.1f s " +
+            f"(${nf.get} edges) | +cc+csize ${tc - tf}%.1f s " +
+            f"(${nc.get} members) | survivors $ts%.1f s (${ns.get} rows, " +
             f"anti-join delta ${ts - tf}%.1f s)")
-          np
+          np.get
         }),
         // blocking-column path at shape (r15 verdict ask #7): the
         // simhash band table WITH a source blocking key vs the
@@ -318,7 +306,7 @@ object ScaleSweep {
       val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
       val nEmb = spark.read.parquet(s"$dir/embeddings.parquet").count()
       val entry = qNames.filter(SparkEntry.queries.contains).map(q =>
-        q -> (() => SparkEntry.queries(q)(spark, dir).count()))
+        q -> (() => Bench.materialize(SparkEntry.queries(q)(spark, dir))))
       // an explicit GRAFT_SWEEP_QUERIES list scopes the DIRECT probes
       // too (e.g. =pagerank_full for a spread-band re-measure); the
       // default list keeps every direct probe
@@ -333,15 +321,12 @@ object ScaleSweep {
     // Warm engine + operator classes on the SMALLEST rung so first-use
     // codegen/C2 cost doesn't land inside the first timed rung and bias
     // the cross-rung ratio (SkewBench's rationale).
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    Bench.warmJvm(spark)
     val (wl, wd) = rungs.head
     probesFor(wd).foreach { case (n, f) =>
-      try { f(); () }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[sweep] WARM-UP FAILED for $n on rung " +
-            s"$wl: $e — its first timed run includes compilation cost")
-      }
+      Try(f()).failed.foreach(e => System.err.println(s"[sweep] WARM-UP " +
+        s"FAILED for $n on rung $wl: $e — its first timed run includes " +
+        "compilation cost"))
     }
 
     // name -> rung label -> (secMin, rows, secMax) | error
@@ -349,13 +334,14 @@ object ScaleSweep {
       scala.collection.mutable.LinkedHashMap[String,
         Either[String, (Double, Long, Double)]]]()
     for ((label, dir) <- rungs; (name, f) <- probesFor(dir)) {
-      val cell = try {
+      // a failed rep fails the cell and skips the remaining reps
+      val cell = Try {
         var rows = 0L
         val times = (1 to reps).map { _ =>
-          hygiene()
-          val t0 = System.nanoTime()
-          rows = f()
-          (System.nanoTime() - t0) / 1e9
+          Bench.hygiene(spark)
+          val (sec, r) = Bench.timed(f())
+          rows = r.get
+          sec
         }
         if (reps > 1)
           // per-rep times + max/min spread: the jitter-band evidence a
@@ -364,12 +350,9 @@ object ScaleSweep {
           println(f"[sweep] $name%-20s $label%-6s reps " +
             times.map(t => f"$t%.2f").mkString("[", ", ", "] s ") +
             f"spread ${times.max / times.min}%.2fx")
-        Right((times.min, rows, times.max))
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          Left(s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").take(200))
-      }
+        (times.min, rows, times.max)
+      }.toEither.left.map(e => s"${e.getClass.getSimpleName}: " +
+        Option(e.getMessage).getOrElse("").take(200))
       res.getOrElseUpdate(name,
         scala.collection.mutable.LinkedHashMap()) += label -> cell
       cell match {

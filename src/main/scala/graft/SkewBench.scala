@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.util.Try
 
 /** Skew-robustness probe (r10 verdict ask #1): times the dedup / CC /
   * band-join / mixing / bloom / bucketed-join flagships on the
@@ -13,7 +14,8 @@ import org.apache.spark.sql.functions._
   * Each timing is best-of-2 (single-shot local[32] timings carry
   * GC/scheduling jitter; a real skew pathology survives the retry).
   *
-  * Usage: runMain graft.SkewBench <outRootFromMakeSkew>
+  * Usage: `SPARK_GRAFT_CPUS=32 runMain graft.SkewBench <outRootFromMakeSkew>`
+  * (the [[Bench.session]] size defaults to 4).
   */
 object SkewBench {
   private val flagships = Seq(
@@ -30,51 +32,34 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: SkewBench <makeSkewOutRoot>")
     val root = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus)
-      .config("spark.cleaner.periodicGC.interval", "2h")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-    def timeOnce(f: () => Long): Double = {
-      hygiene()
-      val t0 = System.nanoTime()
-      f()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def bestOf2(f: () => Long): Double =
-      math.min(timeOnce(f), timeOnce(f))
+    // a failed timing throws: a ratio over a failed run is meaningless
+    def bestOf2(f: () => Long): Double = Seq.fill(2) {
+      Bench.hygiene(spark)
+      val (sec, r) = Bench.timed(f())
+      r.get
+      sec
+    }.min
 
-    // Warm the engine + operator classes once (Bench's rationale: a
-    // long-lived session has these warm; first-use C2/codegen charges
-    // would otherwise land on whichever twin runs first and bias the
-    // ratio toward "uniform slow").
-    // NonFatal only, and loudly: a flagship that fails warm-up would
-    // otherwise carry its first-use codegen/C2 cost into the timed
-    // uniform run, biasing exactly the ratio this tool gates on (and an
-    // OOM here must crash, not hide).
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    // Warm the engine + operator classes once: first-use C2/codegen
+    // charges would otherwise land on whichever twin runs first and
+    // bias the ratio toward "uniform slow". A warm-up failure is loud
+    // (its flagship's uniform timing then carries that cost), and an
+    // OOM here crashes rather than hides.
+    Bench.warmJvm(spark)
     flagships.foreach { q =>
-      try SparkEntry.queries(q)(spark, s"$root/uniform").count()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[skew] WARM-UP FAILED for $q: $e — its " +
-            "timings below include first-use compilation cost")
-      }
+      Try(Bench.materialize(SparkEntry.queries(q)(spark, s"$root/uniform")))
+        .failed.foreach(e => System.err.println(s"[skew] WARM-UP FAILED for " +
+          s"$q: $e — its timings below include first-use compilation cost"))
     }
 
     val rows = scala.collection.mutable.LinkedHashMap[String,
       (Double, Double)]()
     flagships.foreach { q =>
       val fn = SparkEntry.queries(q)
-      val u = bestOf2(() => fn(spark, s"$root/uniform").count())
-      val s = bestOf2(() => fn(spark, s"$root/skew").count())
+      val u = bestOf2(() => Bench.materialize(fn(spark, s"$root/uniform")))
+      val s = bestOf2(() => Bench.materialize(fn(spark, s"$root/skew")))
       rows += q -> (u, s)
       println(f"[skew] $q%-22s uniform=$u%6.2f s  skew=$s%6.2f s  " +
         f"ratio=${s / u}%5.2f")

@@ -506,11 +506,10 @@ object GraphOps {
   def dupClustersFromJaccard(df: DataFrame, id: Column, text: Column,
                              block: Column, threshold: Double,
                              subBlocks: Int = 4, shingleK: Int = 1,
-                             maxBlockHint: Long = -1L,
                              routeThreshold: Long = 50000L,
                              maxIter: Int = 25): DataFrame = {
     val pairs = graft.text.TextOps.jaccardDupPairs(df, id, text, block,
-      threshold, subBlocks, shingleK, maxBlockHint, routeThreshold)
+      threshold, subBlocks, shingleK, routeThreshold)
     // dupClusters contracts partition-locally itself (r13), so the
     // funnel is just composition — kept as the one-call API
     dupClusters(pairs, col("id1"), col("id2"), maxIter)

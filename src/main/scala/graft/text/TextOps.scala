@@ -351,13 +351,6 @@ object TextOps {
     * compares k-word shingle sets — the similarity MinHash estimates —
     * with [[minHashSignature]]'s whole-text edge case for docs of ≤ k
     * words, so this doubles as minhash's exact twin. */
-  /** `maxBlockHint`: a caller-known upper bound on the largest block's
-    * doc count. When ≥ 0 AND ≤ `routeThreshold`, the per-block sizing
-    * aggregation is skipped entirely and ONE split factor derived from
-    * the hint applies to all blocks — use it when the bound is known
-    * (e.g. a capped crawl per host) to save the counting leg's scan. A
-    * hint above `routeThreshold` falls back to counted routing (the
-    * count leg is what decides which blocks take the prefix path). */
   /** `routeThreshold`: the per-block doc count above which a block is
     * routed to the SSJoin prefix-filter leg instead of the triangle
     * leg. The triangle leg's work is quadratic in block size (spread
@@ -385,7 +378,6 @@ object TextOps {
   def jaccardDupPairs(df: DataFrame, id: Column, text: Column,
                       block: Column, threshold: Double,
                       subBlocks: Int = 4, shingleK: Int = 1,
-                      maxBlockHint: Long = -1L,
                       routeThreshold: Long = 50000L): DataFrame = {
     require(routeThreshold >= 1L,
       s"jaccardDupPairs: routeThreshold must be >= 1, got $routeThreshold")
@@ -407,35 +399,24 @@ object TextOps {
     val base = graft.util.Spread.byKey(
       df.select(block.as("block"), id.cast("long").as("i"),
         text.as("__txt")), col("i"))
-    if (maxBlockHint >= 0L && maxBlockHint <= routeThreshold) {
-      // caller-guaranteed bound below the route threshold: every block
-      // takes the triangle leg with one hint-derived split factor — no
-      // sizing scan at all (the original hint fast path)
-      val sb = math.max(subBlocks,
-        math.min(64L, (maxBlockHint + 1499L) / 1500L).toInt)
-      jaccardTriangleLeg(tokenize(base).withColumn("__sb", lit(sb)),
-        threshold)
-    } else {
-      // Count-based routing. The count leg is the SAME lazy per-block
-      // sizing aggregation the triangle leg always needed (see the
-      // sizing comment in jaccardTriangleLeg) — routing adds zero extra
-      // jobs: blocks at or below routeThreshold keep the triangle
-      // kernel (with their count-derived split factor), larger blocks
-      // divert to the linear SSJoin prefix leg.
-      val cnts = base.groupBy(col("block").as("__cb"))
-        .agg(count(lit(1)).as("__cnt"))
-      val counted = base.join(cnts, col("block") <=> col("__cb"))
-        .drop("__cb")
-      val small = tokenize(counted.filter(col("__cnt") <= routeThreshold))
-        .withColumn("__sb", greatest(lit(subBlocks),
-          least(lit(64L), ceil(col("__cnt") / lit(1500.0)))
-            .cast("int")))
-        .drop("__cnt")
-      val large = tokenize(counted.filter(col("__cnt") > routeThreshold))
-        .drop("__cnt")
-      jaccardTriangleLeg(small, threshold)
-        .unionByName(jaccardPrefixLegHashed(large, threshold))
-    }
+    // Count-based routing. The count leg is the SAME lazy per-block
+    // sizing aggregation the triangle leg always needed (see the sizing
+    // comment in jaccardTriangleLeg) — routing adds zero extra jobs:
+    // blocks at or below routeThreshold keep the triangle kernel (with
+    // their count-derived split factor), larger blocks divert to the
+    // linear SSJoin prefix leg.
+    val cnts = base.groupBy(col("block").as("__cb"))
+      .agg(count(lit(1)).as("__cnt"))
+    val counted = base.join(cnts, col("block") <=> col("__cb"))
+      .drop("__cb")
+    val small = tokenize(counted.filter(col("__cnt") <= routeThreshold))
+      .withColumn("__sb", greatest(lit(subBlocks),
+        least(lit(64L), ceil(col("__cnt") / lit(1500.0))).cast("int")))
+      .drop("__cnt")
+    val large = tokenize(counted.filter(col("__cnt") > routeThreshold))
+      .drop("__cnt")
+    jaccardTriangleLeg(small, threshold)
+      .unionByName(jaccardPrefixLegHashed(large, threshold))
   }
 
   /** The pair kernel of the triangle leg: one bucket's docs → the

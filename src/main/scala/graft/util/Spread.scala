@@ -47,11 +47,6 @@ object Spread {
     * `graft.spreadChunkBytes` default. */
   def byKeyChunked(df: DataFrame, chunkBytes: Long, key: Column,
                    more: Column*): DataFrame = {
-    // measurement kill-switch (-Dgraft.spread.off=true): disables every
-    // spread site — including explicit-chunk callers the
-    // graft.spreadChunkBytes override cannot reach — so sweep-scale
-    // A/Bs can time the fires-branch against a true no-spread run
-    if (java.lang.Boolean.getBoolean("graft.spread.off")) return df
     // streaming frames: micro-batch parallelism is the source's
     // concern, and logical stats are not meaningful pre-trigger
     if (df.isStreaming) return df
