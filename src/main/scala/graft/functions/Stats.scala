@@ -11,6 +11,16 @@ import org.apache.spark.sql.functions._
   * P-values that need special functions (incomplete beta/gamma) are in
   * [[PValues]] as scalar functions applied to the (tiny) aggregated
   * output — they never run over row-scale data.
+  *
+  * A closed-form finish that reuses an intermediate goes in ONE scalar
+  * function over the aggregates, never in a Column tree. A Column val
+  * is a tree, not a variable: each mention copies it, so a finish that
+  * reuses intermediates grows exponentially when inlined. The former
+  * Column-algebra [[normalTest]] generated 1.2 MB of Java for its
+  * final aggregate stage; Janino rejected it on every run ("Code grows
+  * beyond 64 KB") and Spark fell back to interpreting the tree. As one
+  * scalar function over five aggregates, that stage is 28 KB of Java
+  * and compiles (CodegenGuardSpec compiles it on every test run).
   */
 object Stats {
 
@@ -138,36 +148,76 @@ object Stats {
   /** D'Agostino–Pearson K² omnibus normality test:
     * struct{statistic, pvalue}. p = exp(-K²/2) is the exact χ²(2)
     * survival function, so even the p-value is closed-form.
-    * (scipy.stats.normaltest formulas; reference src/stats/normal_test.rs) */
+    * (scipy.stats.normaltest formulas; reference src/stats/normal_test.rs)
+    *
+    * The aggregate is count(x) and the means of x, x², x³ and x⁴ (x cast
+    * to double); [[normalTestFinish]] computes K² and p from those five
+    * values. An empty or constant group, or n ∈ {2, 3}, gives
+    * struct(null, null). */
   def normalTest(x: Column): Column = {
-    val (n, m2, m3, m4) = centralMoments(x)
-    val g1 = m3 / pow(m2, 1.5)
-    val b2 = m4 / (m2 * m2)
-    // skewtest (D'Agostino 1970)
-    val y = g1 * sqrt((n + 1.0) * (n + 3.0) / ((n - 2.0) * 6.0))
-    val beta2 = (n * n + n * 27.0 - 70.0) * (n + 1.0) * (n + 3.0) * 3.0 /
-      ((n - 2.0) * (n + 5.0) * (n + 7.0) * (n + 9.0))
-    val w2 = sqrt((beta2 - 1.0) * 2.0) - 1.0
-    val delta = lit(1.0) / sqrt(log(sqrt(w2)))
-    val alpha = sqrt(lit(2.0) / (w2 - 1.0))
-    val ya = y / alpha
-    val z1 = delta * log(ya + sqrt(ya * ya + 1.0))
-    // kurtosistest (Anscombe & Glynn 1983)
-    val eb2 = (n - 1.0) * 3.0 / (n + 1.0)
-    val vb2 = n * (n - 2.0) * (n - 3.0) * 24.0 /
-      ((n + 1.0) * (n + 1.0) * (n + 3.0) * (n + 5.0))
-    val xk = (b2 - eb2) / sqrt(vb2)
-    val sqrtBeta1 = (n * n - n * 5.0 + 2.0) * 6.0 / ((n + 7.0) * (n + 9.0)) *
-      sqrt((n + 3.0) * (n + 5.0) * 6.0 / (n * (n - 2.0) * (n - 3.0)))
-    val a = lit(8.0) / sqrtBeta1 *
-      (lit(2.0) / sqrtBeta1 + sqrt(lit(4.0) / (sqrtBeta1 * sqrtBeta1) + 1.0)) +
-      6.0
-    val inner = (lit(1.0) - lit(2.0) / a) /
-      (xk * sqrt(lit(2.0) / (a - 4.0)) + 1.0)
-    val cbrt = signum(inner) * pow(abs(inner), 1.0 / 3.0)
-    val z2 = ((lit(1.0) - lit(2.0) / (a * 9.0)) - cbrt) /
-      sqrt(lit(2.0) / (a * 9.0))
-    val k2 = z1 * z1 + z2 * z2
-    struct(k2.as("statistic"), exp(k2 * -0.5).as("pvalue"))
+    val xd = x.cast("double")
+    normalTestFinish(count(xd).cast("double"), avg(xd), avg(xd * xd),
+      avg(xd * xd * xd), avg(xd * xd * xd * xd))
+  }
+
+  /** Result row of [[normalTest]]. */
+  final case class NormalTest(statistic: java.lang.Double,
+                              pvalue: java.lang.Double)
+
+  private val normalTestFinish = udf {
+    (n: Double, m: java.lang.Double, s2: java.lang.Double,
+     s3: java.lang.Double, s4: java.lang.Double) =>
+      val k2 = if (m == null) None else normalTestK2(n, m, s2, s3, s4)
+      k2.fold(NormalTest(null, null))(k =>
+        NormalTest(k, StrictMath.exp(k * -0.5)))
+  }
+
+  private object NullResult extends scala.util.control.ControlThrowable
+
+  /** K² from n and the raw moments (means of x, x², x³, x⁴), or None.
+    * The operation order and the math functions (StrictMath log/pow,
+    * Math sqrt/signum) are those Spark evaluates for the same Column
+    * algebra, and so are its non-ANSI null rules: `a / 0` and
+    * `log(x ≤ 0)` are null, and a null anywhere makes K² null. */
+  private def normalTestK2(n: Double, m: Double, s2: Double,
+                           s3: Double, s4: Double): Option[Double] = {
+    def div(a: Double, b: Double): Double =
+      if (b == 0.0) throw NullResult else a / b
+    def ln(v: Double): Double =
+      if (v <= 0.0) throw NullResult else StrictMath.log(v)
+    try {
+      val m2 = s2 - m * m
+      val m3 = s3 - m * s2 * 3.0 + m * m * m * 2.0
+      val m4 = s4 - m * s3 * 4.0 + m * m * s2 * 6.0 - m * m * m * m * 3.0
+      val g1 = div(m3, StrictMath.pow(m2, 1.5))
+      val b2 = div(m4, m2 * m2)
+      // skewtest (D'Agostino 1970)
+      val y = g1 * math.sqrt(div((n + 1.0) * (n + 3.0), (n - 2.0) * 6.0))
+      val beta2 = div((n * n + n * 27.0 - 70.0) * (n + 1.0) * (n + 3.0) * 3.0,
+        (n - 2.0) * (n + 5.0) * (n + 7.0) * (n + 9.0))
+      val w2 = math.sqrt((beta2 - 1.0) * 2.0) - 1.0
+      val delta = div(1.0, math.sqrt(ln(math.sqrt(w2))))
+      val alpha = math.sqrt(div(2.0, w2 - 1.0))
+      val ya = div(y, alpha)
+      val z1 = delta * ln(ya + math.sqrt(ya * ya + 1.0))
+      // kurtosistest (Anscombe & Glynn 1983)
+      val eb2 = div((n - 1.0) * 3.0, n + 1.0)
+      val vb2 = div(n * (n - 2.0) * (n - 3.0) * 24.0,
+        (n + 1.0) * (n + 1.0) * (n + 3.0) * (n + 5.0))
+      val xk = div(b2 - eb2, math.sqrt(vb2))
+      val sqrtBeta1 = div((n * n - n * 5.0 + 2.0) * 6.0,
+        (n + 7.0) * (n + 9.0)) *
+        math.sqrt(div((n + 3.0) * (n + 5.0) * 6.0,
+          n * (n - 2.0) * (n - 3.0)))
+      val a = div(8.0, sqrtBeta1) * (div(2.0, sqrtBeta1) +
+        math.sqrt(div(4.0, sqrtBeta1 * sqrtBeta1) + 1.0)) + 6.0
+      val inner = div(1.0 - div(2.0, a),
+        xk * math.sqrt(div(2.0, a - 4.0)) + 1.0)
+      val cbrt = math.signum(inner) *
+        StrictMath.pow(math.abs(inner), 1.0 / 3.0)
+      val z2 = div((1.0 - div(2.0, a * 9.0)) - cbrt,
+        math.sqrt(div(2.0, a * 9.0)))
+      Some(z1 * z1 + z2 * z2)
+    } catch { case NullResult => None }
   }
 }

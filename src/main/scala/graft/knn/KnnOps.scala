@@ -139,7 +139,8 @@ object KnnOps {
     *  - `evalMask`: rows where false stay in the frame with null
     *    results (never a filter).
     *  - `dataMask`: restricts who can BE a neighbor (filters the tree
-    *    build only — masked rows are still evaluated). */
+    *    build only — masked rows are still evaluated). A given `refTree`
+    *    is already built, so it cannot be combined with `dataMask`. */
   def knnPtwise(df: DataFrame, id: Column, features: Seq[Column], k: Int,
                 metric: String = "l2", returnDist: Boolean = false,
                 maxBound: Double = Double.PositiveInfinity,
@@ -148,6 +149,9 @@ object KnnOps {
                 evalMask: Option[Column] = None,
                 dataMask: Option[Column] = None,
                 refTree: Option[KdTree] = None): DataFrame = {
+    require(refTree.isEmpty || dataMask.isEmpty,
+      "KnnOps.knnPtwise: dataMask filters the tree build and refTree is " +
+        "already built; mask the frame given to buildRefTree instead")
     val tree = refTree.getOrElse {
       val pool = dataMask.map(df.filter).getOrElse(df)
       collectTree(pool, id, features, metric)

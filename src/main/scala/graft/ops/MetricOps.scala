@@ -41,7 +41,13 @@ object MetricOps {
     * Output columns: groupCols (original names not preserved — caller
     * selects/aliases) … use [[rocAucNamed]] for convenience. */
   def rocAuc(df: DataFrame, y: Column, score: Column,
-             groupCols: Seq[Column], outName: String = "roc_auc"): DataFrame = {
+             groupCols: Seq[Column], outName: String = "roc_auc"): DataFrame =
+    rocAucWithPositives(df, y, score, groupCols, outName, None)
+
+  /** [[rocAuc]], plus Σy per group as `posName` when given. */
+  private def rocAucWithPositives(df: DataFrame, y: Column, score: Column,
+                                  groupCols: Seq[Column], outName: String,
+                                  posName: Option[String]): DataFrame = {
     val (t, g) = keyed(df, groupCols,
       Seq(y.cast("double").as(s"${P}y"), score.cast("double").as(s"${P}s")))
     val gc = g.map(col)
@@ -75,18 +81,23 @@ object MetricOps {
     ranked.groupBy(gc: _*).agg(
       when(nPos === 0.0 || nNeg === 0.0, lit(Double.NaN))
         .otherwise((sum(s"${P}posRank") - nPos * (nPos + 1.0) / 2.0) /
-          (nPos * nNeg)).as(outName))
+          (nPos * nNeg)).as(outName),
+      posName.map(nPos.as(_)).toSeq: _*)
   }
 
   /** rocAuc keeping given output names for the group columns. */
   def rocAucNamed(df: DataFrame, y: Column, score: Column,
                   groupNames: Seq[String], outName: String = "roc_auc")
-      : DataFrame = {
-    val res = rocAuc(df, y, score, groupNames.map(col), outName)
+      : DataFrame =
+    withGroupNames(rocAuc(df, y, score, groupNames.map(col), outName),
+      groupNames)
+
+  /** Rename the [[keyed]] group columns back to `groupNames`. */
+  private def withGroupNames(res: DataFrame, groupNames: Seq[String])
+      : DataFrame =
     groupNames.zipWithIndex.foldLeft(res) { case (d, (n, i)) =>
       d.withColumnRenamed(s"${P}g$i", n)
     }
-  }
 
   /** Gini = 2·AUC − 1. (metrics.py:400) */
   def gini(df: DataFrame, y: Column, score: Column,
@@ -132,9 +143,7 @@ object MetricOps {
         (col(s"${P}cumPos") / col(s"${P}npos")).as("tpr"),
         ((col(s"${P}cumCnt") - col(s"${P}cumPos")) /
           (col(s"${P}n") - col(s"${P}npos"))).as("fpr")): _*)
-    groupNames.zipWithIndex.foldLeft(res) { case (d, (n, i)) =>
-      d.withColumnRenamed(s"${P}g$i", n)
-    }
+    withGroupNames(res, groupNames)
   }
 
   /** sklearn-convention average precision per group:
@@ -177,9 +186,7 @@ object MetricOps {
       .groupBy(gc: _*)
       .agg(sum((col(s"${P}r") - col(s"${P}rPrev")) * col(s"${P}p"))
         .as("avg_precision"))
-    groupNames.zipWithIndex.foldLeft(res) { case (d, (n, i)) =>
-      d.withColumnRenamed(s"${P}g$i", n)
-    }
+    withGroupNames(res, groupNames)
   }
 
   /** Precision/recall/F1/ROC-AUC combo per group
@@ -297,24 +304,27 @@ object MetricOps {
   /** Macro-average one-vs-rest multiclass ROC-AUC.
     * `probs` is an array column of per-class scores; class labels are
     * 0..nClasses-1. Weighted = prevalence-weighted average.
-    * (metrics.py:531 query_multi_roc_auc) */
+    * (metrics.py:531 query_multi_roc_auc)
+    *
+    * One pass: each row stacks into one (class k, y == k, probs[k])
+    * record per class, and a single [[rocAuc]] keyed by (groups, k)
+    * yields every class's AUC and its positive count (the weight). */
   def multiRocAuc(df: DataFrame, yClass: Column, probs: Column,
                   nClasses: Int, groupNames: Seq[String],
                   weighted: Boolean = false,
                   outName: String = "multi_roc_auc"): DataFrame = {
-    val perClass = (0 until nClasses).map { k =>
-      val bin = (yClass === k).cast("int")
-      val sc = element_at(probs, k + 1)
-      val withY = df.withColumn(s"${P}yk", bin).withColumn(s"${P}sk", sc)
-      val auc = rocAucNamed(withY, col(s"${P}yk"), col(s"${P}sk"),
-        groupNames, s"${P}auc")
-      val wgt = withY.groupBy(groupNames.map(col): _*)
-        .agg(sum(s"${P}yk").cast("double").as(s"${P}w"))
-      auc.join(wgt, groupNames)
-    }.reduce(_ unionByName _)
+    require(nClasses >= 1, "multiRocAuc: need nClasses >= 1")
+    val gc = groupNames.map(col)
+    val stacked = df.select(gc :+ explode(array((0 until nClasses).map(k =>
+      struct(lit(k).as("k"), (yClass === k).cast("int").as("y"),
+        element_at(probs, k + 1).as("s"))): _*)).as(s"${P}e"): _*)
+    val perClass = rocAucWithPositives(stacked, col(s"${P}e.y"),
+      col(s"${P}e.s"), gc :+ col(s"${P}e.k"), s"${P}auc", Some(s"${P}w"))
     val wcol = if (weighted) col(s"${P}w") else lit(1.0)
-    perClass.groupBy(groupNames.map(col): _*)
-      .agg((sum(col(s"${P}auc") * wcol) / sum(wcol)).as(outName))
+    withGroupNames(perClass
+      .groupBy(groupNames.indices.map(i => col(s"${P}g$i")): _*)
+      .agg((sum(col(s"${P}auc") * wcol) / sum(wcol)).as(outName)),
+      groupNames)
   }
 
   /** Krippendorff's alpha, nominal metric (Krippendorff 1970/2004,
@@ -432,10 +442,11 @@ object MetricOps {
     // two marginal aggregates → join on label → join with totals)
     // re-executed the scan+aggregate subtree per branch under AQE
     // (ProfileOne: 6 concurrent single-task jobs per q_kappa run).
-    // The count algebra is unchanged and exact: Σ_l ca_l = t,
-    // Σ_l nd_l = d, and labels missing from one rater's marginal
-    // contribute ca·cb = 0, exactly like the former inner join
-    // dropping them.
+    // The count algebra is exact: Σ_l ca_l = t, Σ_l nd_l = d, and
+    // labels missing from one rater's marginal contribute ca·cb = 0.
+    // One difference from the former inner join on label: a group whose
+    // raters use disjoint label sets now gets κ = 0 (p_o = p_e = 0, as
+    // sklearn's cohen_kappa_score), where the join dropped the group.
     val a = r1.cast("string"); val b = r2.cast("string")
     val lbl = df
       .filter(a.isNotNull && b.isNotNull)

@@ -314,9 +314,10 @@ object StatOps {
   /** Spearman rank correlation via average ranks + Pearson corr on ranks.
     * (stats.py corr(method="spearman"))
     *
-    * Grouped: per-group windows (partitioned by the keys — bounded by
-    * group size, never single-partition). UNGROUPED: a zero-column
-    * window would drag the whole frame through one task, so ranks come
+    * Grouped: one per-group window per column (partitioned by the
+    * keys — bounded by group size, never single-partition). UNGROUPED:
+    * a zero-column window would drag the whole frame through one task,
+    * so ranks come
     * from a GlobalCumsum running count over each column's
     * distinct-value table instead (exclusive-cum + (cnt+1)/2 — the
     * identical exact integer-or-half average rank), joined back by
@@ -343,10 +344,13 @@ object StatOps {
       }
       ranked.agg(corr(col(s"${P}x"), col(s"${P}y")).as(outName))
     } else {
+      // one window per column: rank r = 1 + #below and the peer-inclusive
+      // running count r − 1 + t give (2r + t − 1) / 2 = r + (t − 1) / 2,
+      // the same exact half-integer as a second (gc, c) tie-count window
       def avgRank(c: String): Column = {
-        val wr = Window.partitionBy(gc: _*).orderBy(col(c))
-        val wt = Window.partitionBy(gc :+ col(c): _*)
-        rank().over(wr) + (count(lit(1)).over(wt) - 1.0) / 2.0
+        val w = Window.partitionBy(gc: _*).orderBy(col(c))
+        (rank().over(w) + count(lit(1)).over(
+          w.rangeBetween(Window.unboundedPreceding, Window.currentRow))) / 2
       }
       t.withColumn(s"${P}rx", avgRank(s"${P}x"))
         .withColumn(s"${P}ry", avgRank(s"${P}y"))

@@ -249,6 +249,30 @@ class KnnSpec extends AnyFunSuite {
     assert(cosOk)
   }
 
+  test("knnPtwise rejects dataMask together with refTree") {
+    // the mask filters the tree build; a given tree is already built,
+    // so the pair used to drop the mask without a word
+    import spark.implicits._
+    val df = points(50, 2, 3L).toSeq
+      .map { case (id, f) => (id, f(0), f(1)) }.toDF("id", "f1", "f2")
+    val fs = Seq(col("f1"), col("f2"))
+    val tree = Some(KnnOps.buildRefTree(df, col("id"), fs))
+    val e = intercept[IllegalArgumentException] {
+      KnnOps.knnPtwise(df, col("id"), fs, 2,
+        dataMask = Some(col("id") % 2 === 0), refTree = tree)
+    }
+    assert(e.getMessage.contains("dataMask"))
+    intercept[IllegalArgumentException] {
+      KnnOps.knnFreqCnt(df, col("id"), fs, 2,
+        dataMask = Some(col("id") % 2 === 0), refTree = tree)
+    }
+    // each alone is still accepted
+    assert(KnnOps.knnPtwise(df, col("id"), fs, 2, refTree = tree)
+      .count() == 50)
+    assert(KnnOps.knnPtwise(df, col("id"), fs, 2,
+      dataMask = Some(col("id") % 2 === 0)).count() == 50)
+  }
+
   test("shared refTree gives results identical to per-op tree builds") {
     // r17: multi-leg queries build the broadcast kd-tree once via
     // buildRefTree and hand it to every op — pin that the shared-tree

@@ -199,6 +199,23 @@ class MetricsSpec extends AnyFunSuite {
       .collect()(0).isNullAt(1))
   }
 
+  test("cohenKappa: raters with disjoint label sets give kappa = 0, " +
+      "not a dropped group (sklearn cohen_kappa_score)") {
+    import spark.implicits._
+    // group b: rater 1 says x/y, rater 2 says u/v — no shared label, so
+    // p_o = 0 and p_e = 0 (each label has a zero marginal on one side)
+    val df = (Seq.fill(4)(("a", "yes", "yes")) ++ Seq(("a", "yes", "no"),
+      ("a", "no", "no"), ("a", "no", "yes")) ++
+      Seq(("b", "x", "u"), ("b", "y", "v"), ("b", "x", "v")))
+      .toDF("g", "r1", "r2")
+    val k = MetricOps.cohenKappa(df, col("r1"), col("r2"), Seq("g"))
+      .collect().map(r => r.getString(0) -> r.getAs[Double]("kappa")).toMap
+    assert(k.keySet == Set("a", "b"))
+    assert(k("b") == 0.0)
+    // group a: po = 5/7, pe = (5·5 + 2·2)/49 = 29/49 → κ = 6/20
+    assert(approx(k("a"), (5.0 / 7 - 29.0 / 49) / (1 - 29.0 / 49)))
+  }
+
   test("fleissKappa: hand-computed 3-rater value, incomplete items " +
       "dropped") {
     import spark.implicits._
