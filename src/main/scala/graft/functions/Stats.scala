@@ -118,32 +118,7 @@ object Stats {
     struct(t.as("statistic"), (n - 1.0).as("df"))
   }
 
-  // ---- central moments / normality (src/stats/normal_test.rs) ----
-
-  /** Population central moments 2..4 from power sums (algebraic, exact). */
-  private def centralMoments(x: Column): (Column, Column, Column, Column) = {
-    val n = count(x).cast("double")
-    val m = avg(x)
-    val s2 = avg(x * x)
-    val s3 = avg(x * x * x)
-    val s4 = avg(x * x * x * x)
-    val m2 = s2 - m * m
-    val m3 = s3 - m * s2 * 3.0 + m * m * m * 2.0
-    val m4 = s4 - m * s3 * 4.0 + m * m * s2 * 6.0 - m * m * m * m * 3.0
-    (n, m2, m3, m4)
-  }
-
-  /** Population skewness g1 = m3/m2^1.5 (matches scipy bias=True). */
-  def skew(x: Column): Column = {
-    val (_, m2, m3, _) = centralMoments(x)
-    m3 / pow(m2, 1.5)
-  }
-
-  /** Population kurtosis b2 = m4/m2² (NOT excess). */
-  def kurtosisB2(x: Column): Column = {
-    val (_, m2, _, m4) = centralMoments(x)
-    m4 / (m2 * m2)
-  }
+  // ---- normality (src/stats/normal_test.rs) ----
 
   /** D'Agostino–Pearson K² omnibus normality test:
     * struct{statistic, pvalue}. p = exp(-K²/2) is the exact χ²(2)

@@ -104,9 +104,7 @@ object AssocOps {
     val range = t.groupBy(gc: _*)
       .agg(min(s"${P}x").as(s"${P}xlo"), max(s"${P}x").as(s"${P}xhi"),
         min(s"${P}y").as(s"${P}ylo"), max(s"${P}y").as(s"${P}yhi"))
-    val joined =
-      if (gc.isEmpty) t.crossJoin(broadcast(range))
-      else t.join(range, groupNames)
+    val joined = t.join(range, groupNames)
     def bin(c: Column, lo: Column, hi: Column): Column =
       when(hi <= lo, lit(0)).otherwise(least(
         floor((c - lo) / (hi - lo) * bins), lit(bins - 1)).cast("int"))
@@ -117,13 +115,9 @@ object AssocOps {
         bin(col(s"${P}y"), col(s"${P}ylo"), col(s"${P}yhi")))
       .groupBy(gc :+ col(s"${P}bx") :+ col(s"${P}by"): _*)
       .agg(count(lit(1)).cast("double").as(s"${P}c"))
-    val wTot =
-      if (gc.isEmpty) Window.partitionBy(lit(1))
-      else Window.partitionBy(gc: _*)
-    val wX = if (gc.isEmpty) Window.partitionBy(col(s"${P}bx"))
-      else Window.partitionBy(gc :+ col(s"${P}bx"): _*)
-    val wY = if (gc.isEmpty) Window.partitionBy(col(s"${P}by"))
-      else Window.partitionBy(gc :+ col(s"${P}by"): _*)
+    val wTot = Window.partitionBy(gc: _*)
+    val wX = Window.partitionBy(gc :+ col(s"${P}bx"): _*)
+    val wY = Window.partitionBy(gc :+ col(s"${P}by"): _*)
     val probs = cells
       .withColumn(s"${P}p", col(s"${P}c") / sum(s"${P}c").over(wTot))
       .withColumn(s"${P}px",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.GlobalCumsum
+
 /** Offline changepoint detection over keyed series — the batch
   * complement to the streaming CUSUM detector
   * (streaming/StreamOps.scala): where did a metric's distribution
@@ -30,19 +32,8 @@ object ChangeOps {
                             groupNames: Seq[String]): DataFrame = {
     val byV = t.groupBy(gc :+ col(s"${P}x"): _*)
       .agg(count(lit(1)).as(s"${P}cnt"))
-    val ranked =
-      if (gc.nonEmpty) {
-        val wBelow = Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        byV.withColumn(s"${P}below",
-          coalesce(sum(s"${P}cnt").over(wBelow), lit(0L)))
-      } else
-        graft.util.GlobalCumsum.runningSums(byV, col(s"${P}x"),
-            ascending = true, Seq(col(s"${P}cnt") -> s"${P}cum"))
-          .withColumn(s"${P}below", col(s"${P}cum") - col(s"${P}cnt"))
-          .drop(s"${P}cum")
-    val withRank = ranked.withColumn(s"${P}rank",
-      col(s"${P}below") + (col(s"${P}cnt") + 1.0) / 2.0)
+    val withRank = GlobalCumsum.midRanks(byV, gc, col(s"${P}x"),
+        col(s"${P}cnt"), s"${P}rank")
       .select((gc :+ col(s"${P}x") :+ col(s"${P}rank")): _*)
     t.join(withRank, groupNames :+ s"${P}x")
   }
@@ -55,22 +46,21 @@ object ChangeOps {
     * FIRST t attaining K (the last index of the left segment), and the
     * asymptotic p ~= 2 exp(-6 K^2 / (n^3 + n^2)), clamped to [0, 1].
     * Returns {groups..., n, k_stat, change_ord, pvalue}. Plan: rank
-    * join (distinct-value compressed) + one time-ordered cumsum window
-    * + one aggregate with a lexicographic max_by — two shuffles. */
+    * join (distinct-value compressed) + one time-ordered running sum
+    * ([[GlobalCumsum.runningSumsBy]]) + one aggregate with a
+    * lexicographic max_by. */
   def pettitt(df: DataFrame, x: Column, ord: Column,
               groupNames: Seq[String]): DataFrame = {
     val gc = groupNames.map(col)
     val t = df.select(gc :+ x.cast("double").as(s"${P}x")
       :+ ord.as(s"${P}o"): _*)
-    val ranked = withValueRank(t, gc, groupNames)
-    val wOrd = Window.partitionBy(gc: _*).orderBy(col(s"${P}o"))
-    val wAll = Window.partitionBy(gc: _*)
-    val cum = ranked
-      .withColumn(s"${P}n", count(lit(1)).over(wAll).cast("double"))
-      .withColumn(s"${P}rn", row_number().over(wOrd))
-      .withColumn(s"${P}u",
-        sum(col(s"${P}rank") * 2.0 - col(s"${P}n") - 1.0).over(
-          wOrd.rowsBetween(Window.unboundedPreceding, 0)))
+    // U_t = 2 * (rank sum of rows 1..t) - t (n + 1): integers, exact
+    val cum = GlobalCumsum.runningSumsBy(withValueRank(t, gc, groupNames),
+        gc, col(s"${P}o"), ascending = true,
+        Seq(col(s"${P}rank") -> s"${P}rs", lit(1L) -> s"${P}rn"),
+        Seq(lit(1.0) -> s"${P}n"))
+      .withColumn(s"${P}u", col(s"${P}rs") * 2.0 -
+        col(s"${P}rn") * (col(s"${P}n") + 1.0))
       .filter(col(s"${P}rn") < col(s"${P}n")) // t = 1 .. n-1
     // lexicographic max: largest |U|, then smallest t (first hit)
     val best = cum.groupBy(gc: _*)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PValues
+import graft.util.GlobalCumsum
 
 /** Model- and series-diagnostic tests that the reference's stats family
   * (python/polars_ds/exprs/stats.py) stops short of: portmanteau
@@ -18,13 +19,6 @@ import graft.functions.PValues
 object DiagOps {
 
   private val P = "__diag_"
-
-  /** Join per-group stats back onto the row table; ungrouped frames
-    * (gc empty) broadcast the single stats row. */
-  private def joinStats(rows: DataFrame, stats: DataFrame,
-                        groupNames: Seq[String]): DataFrame =
-    if (groupNames.isEmpty) rows.crossJoin(broadcast(stats))
-    else rows.join(stats, groupNames)
 
   /** Ljung-Box (and Box-Pierce) portmanteau test for autocorrelation up
     * to `maxLag`, per group, over the series ordered by `ord`.
@@ -50,7 +44,7 @@ object DiagOps {
     val m = col(s"${P}m")
     val covs = (1 to maxLag).map(k =>
       sum((col(s"${P}x") - m) * (col(s"${P}l$k") - m)).as(s"${P}s$k"))
-    val agged = joinStats(lagged, stats, groupNames)
+    val agged = lagged.join(stats, groupNames)
       .groupBy(gc: _*)
       .agg(sum((col(s"${P}x") - m) * (col(s"${P}x") - m)).as(s"${P}s0"),
         covs :+ first(s"${P}n").as(s"${P}n"): _*)
@@ -108,7 +102,7 @@ object DiagOps {
       :+ ord.as(s"${P}o"): _*)
     val med = base.groupBy(gc: _*)
       .agg(median(col(s"${P}x")).as(s"${P}med"))
-    val signed = joinStats(base, med, groupNames)
+    val signed = base.join(med, groupNames)
       .filter(col(s"${P}x") =!= col(s"${P}med"))
       .withColumn(s"${P}b", (col(s"${P}x") > col(s"${P}med")).cast("int"))
     val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}o"))
@@ -184,15 +178,10 @@ object DiagOps {
     val byV = t.groupBy(gc :+ col(s"${P}x"): _*)
       .agg(sum(s"${P}s1").cast("double").as(s"${P}c1"),
         (count(lit(1)) - sum(s"${P}s1")).cast("double").as(s"${P}c2"))
-    val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wTot = Window.partitionBy(gc: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val cum = byV
-      .withColumn(s"${P}f1", sum(s"${P}c1").over(w))
-      .withColumn(s"${P}f2", sum(s"${P}c2").over(w))
-      .withColumn(s"${P}n1", sum(s"${P}c1").over(wTot))
-      .withColumn(s"${P}n2", sum(s"${P}c2").over(wTot))
+    val cum = GlobalCumsum.runningSumsBy(byV, gc, col(s"${P}x"),
+      ascending = true,
+      Seq(col(s"${P}c1") -> s"${P}f1", col(s"${P}c2") -> s"${P}f2"),
+      Seq(col(s"${P}c1") -> s"${P}n1", col(s"${P}c2") -> s"${P}n2"))
     val diff = col(s"${P}f1") / col(s"${P}n1") -
       col(s"${P}f2") / col(s"${P}n2")
     val wgt = col(s"${P}c1") + col(s"${P}c2")
@@ -224,26 +213,10 @@ object DiagOps {
     val byV = t.groupBy(gc :+ col(s"${P}x"): _*)
       .agg(sum(s"${P}s1").cast("double").as(s"${P}c1"),
         (count(lit(1)) - sum(s"${P}s1")).cast("double").as(s"${P}c2"))
-    val cum =
-      if (gc.nonEmpty) {
-        val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val wTot = Window.partitionBy(gc: _*)
-          .rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)
-        byV
-          .withColumn(s"${P}f1", sum(s"${P}c1").over(w))
-          .withColumn(s"${P}f2", sum(s"${P}c2").over(w))
-          .withColumn(s"${P}n1", sum(s"${P}c1").over(wTot))
-          .withColumn(s"${P}n2", sum(s"${P}c2").over(wTot))
-      } else {
-        val tot = byV.agg(sum(s"${P}c1").as(s"${P}n1"),
-          sum(s"${P}c2").as(s"${P}n2"))
-        graft.util.GlobalCumsum.runningSums(byV, col(s"${P}x"),
-            ascending = true,
-            Seq(col(s"${P}c1") -> s"${P}f1", col(s"${P}c2") -> s"${P}f2"))
-          .crossJoin(broadcast(tot))
-      }
+    val cum = GlobalCumsum.runningSumsBy(byV, gc, col(s"${P}x"),
+      ascending = true,
+      Seq(col(s"${P}c1") -> s"${P}f1", col(s"${P}c2") -> s"${P}f2"),
+      Seq(col(s"${P}c1") -> s"${P}n1", col(s"${P}c2") -> s"${P}n2"))
     val n1 = col(s"${P}n1"); val n2 = col(s"${P}n2")
     val nn = n1 + n2
     val h = (col(s"${P}f1") + col(s"${P}f2")) / nn
@@ -276,7 +249,7 @@ object DiagOps {
         var_pop(col(s"${P}x"))).as(s"${P}b1"),
         avg(s"${P}y").as(s"${P}my"), avg(s"${P}x").as(s"${P}mx"),
         count(lit(1)).cast("double").as(s"${P}n"))
-    val withE = joinStats(base, fit, groupNames)
+    val withE = base.join(fit, groupNames)
       .withColumn(s"${P}e2", pow(col(s"${P}y") - col(s"${P}my") -
         col(s"${P}b1") * (col(s"${P}x") - col(s"${P}mx")), 2.0))
     val agged = withE.groupBy(gc: _*)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.NumFuncs
+import graft.util.GlobalCumsum
 
 /** Distribution-drift distances between two samples of the same frame —
   * the monitoring layer a 100 TB training-data pipeline puts between
@@ -35,9 +36,8 @@ object DriftOps {
     *   energy      = sqrt(2 * cramer)     (scipy energy_distance),
     * with dx the gap to the next pooled value (the last value's term is
     * zero). Returns {groups..., n1, n2, wasserstein, cramer, energy}.
-    * One distinct-value aggregate, then group-keyed running sums
-    * (grouped) or range-partitioned GlobalCumsum (ungrouped) — never a
-    * single-task window. */
+    * One distinct-value aggregate, then running sums and totals from
+    * [[graft.util.GlobalCumsum.runningSumsBy]]. */
   def ecdfDistances(df: DataFrame, x: Column, inFirst: Column,
                     groupNames: Seq[String]): DataFrame = {
     val gc = groupNames.map(col)
@@ -46,34 +46,25 @@ object DriftOps {
     val byV = t.groupBy(gc :+ col(s"${P}x"): _*)
       .agg(sum(s"${P}s1").cast("double").as(s"${P}c1"),
         (count(lit(1)) - sum(s"${P}s1")).cast("double").as(s"${P}c2"))
+    val sums = Seq(col(s"${P}c1") -> s"${P}f1", col(s"${P}c2") -> s"${P}f2")
+    val totals =
+      Seq(col(s"${P}c1") -> s"${P}n1", col(s"${P}c2") -> s"${P}n2")
+    // the next pooled value: a lead() over the group window, or with no
+    // keys the row's global rank (a running count) self-joined
+    // rank -> rank+1 (both sides share GlobalCumsum's persisted range
+    // partitioning)
     val cum =
-      if (gc.nonEmpty) {
-        val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))
-        val wTot = Window.partitionBy(gc: _*)
-        byV
-          .withColumn(s"${P}f1", sum(s"${P}c1")
-            .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-          .withColumn(s"${P}f2", sum(s"${P}c2")
-            .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-          .withColumn(s"${P}nx", lead(col(s"${P}x"), 1).over(w))
-          .withColumn(s"${P}n1", sum(s"${P}c1").over(wTot))
-          .withColumn(s"${P}n2", sum(s"${P}c2").over(wTot))
-      } else {
-        // ungrouped: range-partitioned running sums; the next pooled
-        // value arrives by the same trick lead() would need a zero-key
-        // window for — cumulate count-of-rows to get each row's global
-        // rank, then self-join rank -> rank+1 (both sides share the
-        // range exchange via GlobalCumsum's persisted partitioning).
-        val tot = byV.agg(sum(s"${P}c1").as(s"${P}n1"),
-          sum(s"${P}c2").as(s"${P}n2"))
-        val ranked = graft.util.GlobalCumsum.runningSums(byV,
-          col(s"${P}x"), ascending = true,
-          Seq(col(s"${P}c1") -> s"${P}f1", col(s"${P}c2") -> s"${P}f2",
-            lit(1L) -> s"${P}rk"))
+      if (gc.nonEmpty)
+        GlobalCumsum.runningSumsBy(byV, gc, col(s"${P}x"), ascending = true,
+            sums, totals)
+          .withColumn(s"${P}nx", lead(col(s"${P}x"), 1).over(
+            Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))))
+      else {
+        val ranked = GlobalCumsum.runningSumsBy(byV, Nil, col(s"${P}x"),
+          ascending = true, sums :+ (lit(1L) -> s"${P}rk"), totals)
         val nextX = ranked.select((col(s"${P}rk") - 1).as(s"${P}rk"),
           col(s"${P}x").as(s"${P}nx"))
         ranked.join(nextX, Seq(s"${P}rk"), "left")
-          .crossJoin(broadcast(tot))
       }
     val dx = when(col(s"${P}nx").isNull, lit(0.0))
       .otherwise(col(s"${P}nx") - col(s"${P}x"))
@@ -117,9 +108,7 @@ object DriftOps {
       :+ inFirst.cast("int").as(s"${P}s1"): _*)
     val range = t.groupBy(gc: _*)
       .agg(min(s"${P}x").as(s"${P}lo"), max(s"${P}x").as(s"${P}hi"))
-    val joined =
-      if (gc.isEmpty) t.crossJoin(broadcast(range))
-      else t.join(range, groupNames)
+    val joined = t.join(range, groupNames)
     val width = col(s"${P}hi") - col(s"${P}lo")
     // constant column (width 0) -> everything in bin 0
     val bin = when(width <= 0.0, lit(0))
@@ -130,9 +119,7 @@ object DriftOps {
       .groupBy(gc :+ col(s"${P}b"): _*)
       .agg(sum(s"${P}s1").cast("double").as(s"${P}c1"),
         (count(lit(1)) - sum(s"${P}s1")).cast("double").as(s"${P}c2"))
-    val wTot =
-      if (gc.isEmpty) Window.partitionBy(lit(1))
-      else Window.partitionBy(gc: _*)
+    val wTot = Window.partitionBy(gc: _*)
     val probs = byBin
       .withColumn(s"${P}p", col(s"${P}c1") / sum(s"${P}c1").over(wTot))
       .withColumn(s"${P}q", col(s"${P}c2") / sum(s"${P}c2").over(wTot))
@@ -169,7 +156,7 @@ object DriftOps {
     val base = df.select(vec.cast("array<double>").as(s"${P}v"),
       ord.as(s"${P}o"), inFirst.cast("boolean").as(s"${P}in"))
     def pairs(side: DataFrame): DataFrame = {
-      val ranked = graft.util.GlobalCumsum.runningSums(side,
+      val ranked = GlobalCumsum.runningSums(side,
         col(s"${P}o"), ascending = true, Seq(lit(1L) -> s"${P}rk"))
       ranked
         .withColumn(s"${P}pair", ((col(s"${P}rk") - 1L) / 2L).cast("long"))

@@ -32,9 +32,7 @@ object EconOps {
       (1 to maxLag).map(k => lag(col(s"${P}x"), k).over(w)
         .as(s"${P}l$k")): _*)
     val stats = base.groupBy(gc: _*).agg(avg(s"${P}x").as(s"${P}m"))
-    val joined =
-      if (gc.isEmpty) lagged.crossJoin(broadcast(stats))
-      else lagged.join(stats, groupNames)
+    val joined = lagged.join(stats, groupNames)
     val m = col(s"${P}m")
     val covs = (1 to maxLag).map(k =>
       sum((col(s"${P}x") - m) * (col(s"${P}l$k") - m)).as(s"${P}s$k"))
@@ -200,9 +198,7 @@ object EconOps {
       :+ ord.as(s"${P}o"): _*)
     val means = base.groupBy(gc: _*)
       .agg(avg(s"${P}x").as(s"${P}m"))
-    val joined =
-      if (gc.isEmpty) base.crossJoin(broadcast(means))
-      else base.join(means, groupNames)
+    val joined = base.join(means, groupNames)
     val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}o"))
     val demeaned = joined
       .withColumn(s"${P}e", col(s"${P}x") - col(s"${P}m"))
@@ -249,9 +245,7 @@ object EconOps {
       .agg((covar_pop(col(s"${P}y"), col(s"${P}x")) /
         var_pop(col(s"${P}x"))).as(s"${P}b"),
         avg(s"${P}y").as(s"${P}my"), avg(s"${P}x").as(s"${P}mx"))
-    val joined =
-      if (gc.isEmpty) base.crossJoin(broadcast(fit))
-      else base.join(fit, groupNames)
+    val joined = base.join(fit, groupNames)
     val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}o"))
     val withU = joined.withColumn(s"${P}u",
       col(s"${P}y") - col(s"${P}my") -
@@ -287,9 +281,7 @@ object EconOps {
     val base = df.select(gc :+ x.cast("double").as(s"${P}x")
       :+ ord.as(s"${P}o"): _*)
     val means = base.groupBy(gc: _*).agg(avg(s"${P}x").as(s"${P}m"))
-    val joined =
-      if (gc.isEmpty) base.crossJoin(broadcast(means))
-      else base.join(means, groupNames)
+    val joined = base.join(means, groupNames)
     val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}o"))
     val withE = joined.withColumn(s"${P}e2",
       pow(col(s"${P}x") - col(s"${P}m"), 2.0))

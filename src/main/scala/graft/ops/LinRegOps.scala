@@ -289,9 +289,7 @@ object LinRegOps {
       .agg(graft.agg.LinRegAgg.linReg(array(xb: _*), yd, dTot, lambda)
         .as("_r"))
       .select(gc :+ col("_r.coeffs").as("_beta"): _*)
-    val joined =
-      if (groupNames.isEmpty) df.crossJoin(broadcast(betas))
-      else df.join(broadcast(betas), groupNames, "left")
+    val joined = df.join(broadcast(betas), groupNames, "left")
     val pred = (0 until dTot)
       .map(i => xb(i) * element_at(col("_beta"), i + 1)).reduce(_ + _)
     joined
@@ -483,9 +481,7 @@ object LinRegOps {
         org.apache.spark.sql.Row.fromSeq(
           f.key ++ Seq(f.n, f.beta.toSeq, f.ainv.flatten.toSeq))), 1),
       fitSchema)
-    val keyed =
-      if (groupNames.isEmpty) base.crossJoin(broadcast(fitRows))
-      else base.join(broadcast(fitRows), groupNames)
+    val keyed = base.join(broadcast(fitRows), groupNames)
     val pred = (0 until dTot).map(j =>
       xb(j) * element_at(col("_beta"), j + 1)).reduce(_ + _)
     val e2 = pow(yd - pred, 2.0)

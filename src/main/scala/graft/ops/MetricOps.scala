@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.GlobalCumsum
+
 /** Distributed DataFrame-level metrics that need a sort or a second pass
   * (non-algebraic aggregations). These are the designs that scale: rather
   * than buffering a whole group in an aggregator (the reference kernels
@@ -54,25 +56,10 @@ object MetricOps {
     // 1. compress to distinct thresholds — partial-aggregable, one shuffle
     val thr = t.groupBy((gc :+ col(s"${P}s")): _*)
       .agg(count(lit(1)).as(s"${P}cnt"), sum(s"${P}y").as(s"${P}pos"))
-    // 2. cumulative count below each threshold. Grouped: a window keyed
-    // by the group columns (parallelism = group cardinality). Ungrouped:
-    // Window.partitionBy() would drag the whole threshold table through
-    // ONE task — use the range-partitioned running sum instead.
-    val withBelow =
-      if (gc.nonEmpty) {
-        val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}s"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        thr.withColumn(s"${P}below",
-          coalesce(sum(s"${P}cnt").over(w), lit(0L)))
-      } else {
-        graft.util.GlobalCumsum.runningSums(thr, col(s"${P}s"),
-            ascending = true, Seq(col(s"${P}cnt") -> s"${P}cum"))
-          .withColumn(s"${P}below", col(s"${P}cum") - col(s"${P}cnt"))
-          .drop(s"${P}cum")
-      }
-    val ranked = withBelow
-      .withColumn(s"${P}posRank",
-        col(s"${P}pos") * (col(s"${P}below") + (col(s"${P}cnt") + 1.0) / 2.0))
+    // 2. tie-averaged rank of each threshold's block
+    val ranked = GlobalCumsum.midRanks(thr, gc, col(s"${P}s"),
+        col(s"${P}cnt"), s"${P}mid")
+      .withColumn(s"${P}posRank", col(s"${P}pos") * col(s"${P}mid"))
     // 3. final per-group reduction. A single-class group has no curve:
     // the reference returns NaN there ("when all classes are 0,
     // roc_auc returns NaN", test_metrics.py:139), never null
@@ -115,28 +102,10 @@ object MetricOps {
     val gc = g.map(col)
     val thr = t.groupBy((gc :+ col(s"${P}s")): _*)
       .agg(count(lit(1)).as(s"${P}cnt"), sum(s"${P}y").as(s"${P}pos"))
-    // grouped: group-keyed windows. Ungrouped: totals via one aggregate
-    // broadcast back, cumulatives via the range-partitioned running sum
-    // (a zero-column window would single-task the whole table).
-    val cum =
-      if (gc.nonEmpty) {
-        val wTot = Window.partitionBy(gc: _*)
-        val wGe = Window.partitionBy(gc: _*).orderBy(col(s"${P}s").desc)
-          .rowsBetween(Window.unboundedPreceding, 0)
-        thr
-          .withColumn(s"${P}npos", sum(s"${P}pos").over(wTot))
-          .withColumn(s"${P}n", sum(s"${P}cnt").over(wTot))
-          .withColumn(s"${P}cumPos", sum(s"${P}pos").over(wGe))
-          .withColumn(s"${P}cumCnt", sum(s"${P}cnt").over(wGe))
-      } else {
-        val tot = thr.agg(sum(s"${P}pos").as(s"${P}npos"),
-          sum(s"${P}cnt").as(s"${P}n"))
-        graft.util.GlobalCumsum.runningSums(thr, col(s"${P}s"),
-            ascending = false,
-            Seq(col(s"${P}pos") -> s"${P}cumPos",
-              col(s"${P}cnt") -> s"${P}cumCnt"))
-          .crossJoin(broadcast(tot))
-      }
+    val cum = GlobalCumsum.runningSumsBy(thr, gc, col(s"${P}s"),
+      ascending = false,
+      Seq(col(s"${P}pos") -> s"${P}cumPos", col(s"${P}cnt") -> s"${P}cumCnt"),
+      Seq(col(s"${P}pos") -> s"${P}npos", col(s"${P}cnt") -> s"${P}n"))
     val res = cum
       .select(gc ++ Seq(
         col(s"${P}s").as("threshold"),
@@ -159,25 +128,11 @@ object MetricOps {
       .agg(count(lit(1)).as(s"${P}cnt"), sum(s"${P}y").as(s"${P}pos"))
     // R_{n-1} needs no lag(): the previous (higher-score) threshold's
     // cumPos is just cumPos - pos of the current row — so the whole op
-    // is cumulative sums, and the ungrouped case can use the
-    // range-partitioned running sum instead of a zero-column window.
-    val cum =
-      if (gc.nonEmpty) {
-        val wTot = Window.partitionBy(gc: _*)
-        val wGe = Window.partitionBy(gc: _*).orderBy(col(s"${P}s").desc)
-          .rowsBetween(Window.unboundedPreceding, 0)
-        thr
-          .withColumn(s"${P}npos", sum(s"${P}pos").over(wTot))
-          .withColumn(s"${P}cumPos", sum(s"${P}pos").over(wGe))
-          .withColumn(s"${P}cumCnt", sum(s"${P}cnt").over(wGe))
-      } else {
-        val tot = thr.agg(sum(s"${P}pos").as(s"${P}npos"))
-        graft.util.GlobalCumsum.runningSums(thr, col(s"${P}s"),
-            ascending = false,
-            Seq(col(s"${P}pos") -> s"${P}cumPos",
-              col(s"${P}cnt") -> s"${P}cumCnt"))
-          .crossJoin(broadcast(tot))
-      }
+    // is cumulative sums.
+    val cum = GlobalCumsum.runningSumsBy(thr, gc, col(s"${P}s"),
+      ascending = false,
+      Seq(col(s"${P}pos") -> s"${P}cumPos", col(s"${P}cnt") -> s"${P}cumCnt"),
+      Seq(col(s"${P}pos") -> s"${P}npos"))
     val res = cum
       .withColumn(s"${P}r", col(s"${P}cumPos") / col(s"${P}npos"))
       .withColumn(s"${P}p", col(s"${P}cumPos") / col(s"${P}cumCnt"))

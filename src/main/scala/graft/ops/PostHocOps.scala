@@ -24,11 +24,6 @@ object PostHocOps {
 
   private val P = "__ph_"
 
-  private def joinBack(rows: DataFrame, stats: DataFrame,
-                       groupNames: Seq[String]): DataFrame =
-    if (groupNames.isEmpty) rows.crossJoin(broadcast(stats))
-    else rows.join(stats, groupNames)
-
   /** Jarque-Bera normality test per group: with two-pass central
     * moments m_k = mean((x - mean)^k),
     *   skew = m3 / m2^1.5, exkurt = m4 / m2^2 - 3,
@@ -42,7 +37,7 @@ object PostHocOps {
       .agg(avg(s"${P}x").as(s"${P}mu"),
         count(lit(1)).cast("double").as(s"${P}n"))
     val d = col(s"${P}x") - col(s"${P}mu")
-    val agged = joinBack(base, m, groupNames)
+    val agged = base.join(m, groupNames)
       .groupBy(gc: _*)
       .agg(avg(d * d).as(s"${P}m2"), avg(d * d * d).as(s"${P}m3"),
         avg(d * d * d * d).as(s"${P}m4"), first(s"${P}n").as(s"${P}n"))
@@ -382,10 +377,8 @@ object PostHocOps {
       .agg(count(lit(1)).as(s"${P}cf"))
     val byV = byVF.groupBy(s"${P}x")
       .agg(sum(s"${P}cf").as(s"${P}cnt"))
-    val ranked = graft.util.GlobalCumsum.runningSums(byV, col(s"${P}x"),
-        ascending = true, Seq(col(s"${P}cnt") -> s"${P}cum"))
-      .withColumn(s"${P}r",
-        col(s"${P}cum") - col(s"${P}cnt") + (col(s"${P}cnt") + 1.0) / 2.0)
+    val ranked = graft.util.GlobalCumsum.midRanks(byV, Nil, col(s"${P}x"),
+      col(s"${P}cnt"), s"${P}r")
     val ties = ranked.agg(
       sum(col(s"${P}cnt") * col(s"${P}cnt") * col(s"${P}cnt") -
         col(s"${P}cnt")).cast("double").as(s"${P}ties"),

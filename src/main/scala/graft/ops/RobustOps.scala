@@ -28,11 +28,6 @@ object RobustOps {
 
   private val P = "__rob_"
 
-  private def joinBack(rows: DataFrame, stats: DataFrame,
-                       groupNames: Seq[String]): DataFrame =
-    if (groupNames.isEmpty) rows.crossJoin(broadcast(stats))
-    else rows.join(stats, groupNames)
-
   /** Weighted simple-regression moments -> {slope, intercept} frame. */
   private def wFit(rows: DataFrame, gc: Seq[Column], w: Column,
                    groupNames: Seq[String]): DataFrame = {
@@ -100,7 +95,7 @@ object RobustOps {
       val means = baseAll.groupBy(gc: _*)
         .agg(avg(s"${P}y").as(s"${P}my"), avg(s"${P}x").as(s"${P}mx"))
         .localCheckpoint(true)
-      val base = joinBack(baseAll, means, groupNames)
+      val base = baseAll.join(means, groupNames)
         .select(gc :+ (col(s"${P}y") - col(s"${P}my")).as(s"${P}y")
           :+ (col(s"${P}x") - col(s"${P}mx")).as(s"${P}x"): _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -113,7 +108,7 @@ object RobustOps {
       def scaleOf(ab: DataFrame): DataFrame = {
         val e = col(s"${P}y") - col(s"${P}a") -
           col(s"${P}b") * col(s"${P}x")
-        joinBack(base, ab, groupNames)
+        base.join(ab, groupNames)
           .withColumn(s"${P}ae", abs(e))
           .groupBy(gc: _*)
           .agg((median(col(s"${P}ae")) / 0.6745).as(s"${P}s"))
@@ -121,16 +116,15 @@ object RobustOps {
       var fit = wFit(base, gc, lit(1.0), groupNames)
         .localCheckpoint(true) // OLS start, k rows
       for (_ <- 1 to maxIter) {
-        val withFit = joinBack(
-          joinBack(base, fit, groupNames), scaleOf(fit), groupNames)
+        val withFit = base.join(fit, groupNames)
+          .join(scaleOf(fit), groupNames)
         val e = col(s"${P}y") - col(s"${P}a") -
           col(s"${P}b") * col(s"${P}x")
         val u = e / (col(s"${P}s") * c)
         val w = when(col(s"${P}s") <= 0.0, lit(1.0)).otherwise(weight(u))
         fit = wFit(withFit, gc, w, groupNames).localCheckpoint(true)
       }
-      joinBack(joinBack(fit, scaleOf(fit), groupNames), means,
-          groupNames)
+      fit.join(scaleOf(fit), groupNames).join(means, groupNames)
         .select(gc ++ Seq(col(s"${P}n").as("n"),
           col(s"${P}b").as("slope"),
           (col(s"${P}a") + col(s"${P}my") -
@@ -264,14 +258,14 @@ object RobustOps {
       val means = baseAll.groupBy(gc: _*)
         .agg(avg(s"${P}y").as(s"${P}my"), avg(s"${P}x").as(s"${P}mx"))
         .localCheckpoint(true)
-      val centered = joinBack(baseAll, means, groupNames)
+      val centered = baseAll.join(means, groupNames)
         .select(gc :+ (col(s"${P}y") - col(s"${P}my")).as(s"${P}y")
           :+ (col(s"${P}x") - col(s"${P}mx")).as(s"${P}x"): _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       var fit = wFit(centered, gc, lit(1.0), groupNames)
         .localCheckpoint(true)
       for (_ <- 1 to maxIter) {
-        val withFit = joinBack(centered, fit, groupNames)
+        val withFit = centered.join(fit, groupNames)
         val e = col(s"${P}y") - col(s"${P}a") -
           col(s"${P}b") * col(s"${P}x")
         // smoothed check loss: the asymmetry factor ramps linearly
@@ -287,10 +281,10 @@ object RobustOps {
         fit = wFit(withFit, gc, w, groupNames).localCheckpoint(true)
       }
       val e = col(s"${P}y") - col(s"${P}a") - col(s"${P}b") * col(s"${P}x")
-      val below = joinBack(centered, fit, groupNames)
+      val below = centered.join(fit, groupNames)
         .groupBy(gc: _*)
         .agg(avg((e <= 0.0).cast("double")).as(s"${P}bf"))
-      joinBack(joinBack(fit, below, groupNames), means, groupNames)
+      fit.join(below, groupNames).join(means, groupNames)
         .select(gc ++ Seq(col(s"${P}n").as("n"),
           col(s"${P}b").as("slope"),
           (col(s"${P}a") + col(s"${P}my") -

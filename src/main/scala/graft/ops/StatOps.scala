@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PValues
+import graft.util.GlobalCumsum
 
 /** Distributed statistical tests that need ranks, ECDFs, or two-level
   * aggregation (SURVEY §2.5, the order-sensitive rows). Same design rule
@@ -30,27 +31,10 @@ object StatOps {
     val byV = t.groupBy(gc :+ col(s"${P}x"): _*)
       .agg(sum(s"${P}s1").as(s"${P}c1"),
         (count(lit(1)) - sum(s"${P}s1")).as(s"${P}c2"))
-    // grouped: group-keyed windows; ungrouped (the whole-frame test):
-    // range-partitioned running sums + one broadcast total — a
-    // zero-column window would single-task every distinct pooled value
-    val cum =
-      if (gc.nonEmpty) {
-        val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val wTot = Window.partitionBy(gc: _*)
-        byV
-          .withColumn(s"${P}f1", sum(s"${P}c1").over(w))
-          .withColumn(s"${P}f2", sum(s"${P}c2").over(w))
-          .withColumn(s"${P}n1", sum(s"${P}c1").over(wTot))
-          .withColumn(s"${P}n2", sum(s"${P}c2").over(wTot))
-      } else {
-        val tot = byV.agg(sum(s"${P}c1").as(s"${P}n1"),
-          sum(s"${P}c2").as(s"${P}n2"))
-        graft.util.GlobalCumsum.runningSums(byV, col(s"${P}x"),
-            ascending = true,
-            Seq(col(s"${P}c1") -> s"${P}f1", col(s"${P}c2") -> s"${P}f2"))
-          .crossJoin(broadcast(tot))
-      }
+    val cum = GlobalCumsum.runningSumsBy(byV, gc, col(s"${P}x"),
+      ascending = true,
+      Seq(col(s"${P}c1") -> s"${P}f1", col(s"${P}c2") -> s"${P}f2"),
+      Seq(col(s"${P}c1") -> s"${P}n1", col(s"${P}c2") -> s"${P}n2"))
     val res = cum.groupBy(gc: _*).agg(
       max(abs(col(s"${P}f1") / col(s"${P}n1") -
         col(s"${P}f2") / col(s"${P}n2"))).as("d"),
@@ -79,24 +63,11 @@ object StatOps {
       :+ inFirst.cast("int").as(s"${P}s1"): _*)
     val byV = t.groupBy(gc :+ col(s"${P}x"): _*)
       .agg(count(lit(1)).as(s"${P}cnt"), sum(s"${P}s1").as(s"${P}c1"))
-    val ranked =
-      if (gc.nonEmpty) {
-        val wBelow = Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        byV.withColumn(s"${P}below",
-          coalesce(sum(s"${P}cnt").over(wBelow), lit(0L)))
-      } else {
-        // whole-frame test: range-partitioned running count instead of
-        // a zero-column (single-task) window over the distinct values
-        graft.util.GlobalCumsum.runningSums(byV, col(s"${P}x"),
-            ascending = true, Seq(col(s"${P}cnt") -> s"${P}cum"))
-          .withColumn(s"${P}below", col(s"${P}cum") - col(s"${P}cnt"))
-          .drop(s"${P}cum")
-      }
+    val ranked = GlobalCumsum.midRanks(byV, gc, col(s"${P}x"),
+      col(s"${P}cnt"), s"${P}mid")
     // rank-sum of sample1 + tie term Σ(t³−t)
     val agg = ranked.groupBy(gc: _*).agg(
-      sum(col(s"${P}c1") *
-        (col(s"${P}below") + (col(s"${P}cnt") + 1.0) / 2.0)).as(s"${P}r1"),
+      sum(col(s"${P}c1") * col(s"${P}mid")).as(s"${P}r1"),
       sum(s"${P}c1").cast("double").as(s"${P}n1"),
       (sum(s"${P}cnt") - sum(s"${P}c1")).cast("double").as(s"${P}n2"),
       sum(col(s"${P}cnt") * col(s"${P}cnt") * col(s"${P}cnt") -
@@ -129,8 +100,8 @@ object StatOps {
     *
     * Scale shape: moments come from ONE map-side-combinable
     * aggregation; the rank-sum reuses [[mannWhitneyU]]'s
-    * distinct-value compression (threshold-cardinality window /
-    * GlobalCumsum, never a row-cardinality sort). */
+    * distinct-value compression ([[GlobalCumsum.midRanks]], never a
+    * row-cardinality sort). */
   def effectSizes(df: DataFrame, x: Column, inFirst: Column,
                   groupNames: Seq[String]): DataFrame = {
     val gc = groupNames.map(col)
@@ -147,24 +118,11 @@ object StatOps {
         .as(s"${P}sq2"))
     val byV = t.groupBy(gc :+ col(s"${P}x"): _*)
       .agg(count(lit(1)).as(s"${P}cnt"), sum(s"${P}s1").as(s"${P}c1"))
-    val ranked =
-      if (gc.nonEmpty) {
-        val wBelow = Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        byV.withColumn(s"${P}below",
-          coalesce(sum(s"${P}cnt").over(wBelow), lit(0L)))
-      } else {
-        graft.util.GlobalCumsum.runningSums(byV, col(s"${P}x"),
-            ascending = true, Seq(col(s"${P}cnt") -> s"${P}cum"))
-          .withColumn(s"${P}below", col(s"${P}cum") - col(s"${P}cnt"))
-          .drop(s"${P}cum")
-      }
-    val rs = ranked.groupBy(gc: _*).agg(
-      sum(col(s"${P}c1") *
-        (col(s"${P}below") + (col(s"${P}cnt") + 1.0) / 2.0))
-        .as(s"${P}r1"))
-    val j = if (gc.isEmpty) mom.crossJoin(rs)
-            else mom.join(rs, groupNames)
+    val ranked = GlobalCumsum.midRanks(byV, gc, col(s"${P}x"),
+      col(s"${P}cnt"), s"${P}mid")
+    val rs = ranked.groupBy(gc: _*)
+      .agg(sum(col(s"${P}c1") * col(s"${P}mid")).as(s"${P}r1"))
+    val j = mom.join(rs, groupNames)
     val n1 = col(s"${P}n1"); val n2 = col(s"${P}n2")
     val m1 = col(s"${P}sx1") / n1
     val m2 = col(s"${P}sx2") / n2
@@ -303,42 +261,36 @@ object StatOps {
       ((countDistinct(s"${P}a") - 1) * (countDistinct(s"${P}b") - 1))
         .cast("double").as("dof"))
       .withColumn("pvalue", PValues.chi2Sf(col("statistic"), col("dof")))
-    val joined =
-      if (groupNames.isEmpty) withE.crossJoin(broadcast(scalars))
-      else withE.join(broadcast(scalars), groupNames)
-    joined.select(gc ++ Seq(col(s"${P}a").as("a"), col(s"${P}b").as("b"),
+    withE.join(broadcast(scalars), groupNames).select(gc ++ Seq(
+      col(s"${P}a").as("a"), col(s"${P}b").as("b"),
       col(s"${P}o").as("observed"), col(s"${P}e").as("expected"),
       col("statistic"), col("dof"), col("pvalue")): _*)
   }
 
   /** Spearman rank correlation via average ranks + Pearson corr on ranks.
-    * (stats.py corr(method="spearman"))
+    * (stats.py corr(method="spearman")) Rows whose x or y is null or
+    * NaN are dropped before ranking (pairwise deletion, as pandas), so
+    * a group with no complete pair has no output row.
     *
     * Grouped: one per-group window per column (partitioned by the
     * keys — bounded by group size, never single-partition). UNGROUPED:
-    * a zero-column window would drag the whole frame through one task,
-    * so ranks come
-    * from a GlobalCumsum running count over each column's
-    * distinct-value table instead (exclusive-cum + (cnt+1)/2 — the
-    * identical exact integer-or-half average rank), joined back by
-    * value — every stage distributed at any frame size. */
+    * ranks come from [[GlobalCumsum.midRanks]] over each column's
+    * distinct-value table, joined back by value — every stage
+    * distributed at any frame size. */
   def spearman(df: DataFrame, x: Column, y: Column,
                groupNames: Seq[String], outName: String = "spearman")
       : DataFrame = {
     val gc = groupNames.map(col)
+    val cols = Seq(s"${P}x", s"${P}y")
     val t = df.select(gc :+ x.cast("double").as(s"${P}x")
       :+ y.cast("double").as(s"${P}y"): _*)
+      .where(cols.map(c => col(c).isNotNull && !isnan(col(c))).reduce(_ && _))
     if (gc.isEmpty) {
-      val ranked = Seq(s"${P}x", s"${P}y").foldLeft(t) { (d, c) =>
-        val counts = t.select(col(c).as(s"${P}v"))
-          .where(col(s"${P}v").isNotNull && !isnan(col(s"${P}v")))
-          .groupBy(col(s"${P}v")).agg(count(lit(1)).as(s"${P}n"))
-        val cum = graft.util.GlobalCumsum.runningSums(counts,
-          col(s"${P}v"), ascending = true,
-          Seq(col(s"${P}n") -> s"${P}cum"))
-        val rankMap = cum.select(col(s"${P}v"),
-          ((col(s"${P}cum") - col(s"${P}n")) +
-            (col(s"${P}n") + lit(1)) / 2.0).as(s"${P}r"))
+      val ranked = cols.foldLeft(t) { (d, c) =>
+        val counts = t.groupBy(col(c).as(s"${P}v"))
+          .agg(count(lit(1)).as(s"${P}n"))
+        val rankMap = GlobalCumsum.midRanks(counts, Nil, col(s"${P}v"),
+          col(s"${P}n"), s"${P}r").select(s"${P}v", s"${P}r")
         d.join(rankMap, d(c) === rankMap(s"${P}v"), "left")
           .withColumn(c, col(s"${P}r")).drop(s"${P}v", s"${P}r")
       }
@@ -423,7 +375,7 @@ object StatOps {
     val row = graft.util.Release.scopedValue(spark) {
       val counts = t.groupBy(col(s"${P}y"))
         .agg(count(lit(1)).as(s"${P}cv"))
-      val cum = graft.util.GlobalCumsum.runningSums(counts,
+      val cum = GlobalCumsum.runningSums(counts,
         col(s"${P}y"), ascending = true,
         Seq(col(s"${P}cv") -> s"${P}r"))
       val nRow = t.agg(count(lit(1)).cast("double").as(s"${P}n"))
@@ -581,9 +533,9 @@ object StatOps {
     * (N³−N)); p from χ²(k−1) (the standard large-sample reference
     * distribution). Same distinct-value compression as
     * [[mannWhitneyU]]: ranks are computed on the value→count table
-    * (threshold-cardinality window per group — never a row-cardinality
-    * sort), each (value, level) pair then carries its tie-averaged
-    * rank by construction, and the finish is one algebraic aggregate
+    * ([[GlobalCumsum.midRanks]] — never a row-cardinality sort), each
+    * (value, level) pair then carries its tie-averaged rank by
+    * construction, and the finish is one algebraic aggregate
     * of Σrank²/n per level. */
   def kruskalWallis(df: DataFrame, x: Column, factor: Column,
                     groupNames: Seq[String]): DataFrame = {
@@ -596,19 +548,8 @@ object StatOps {
       .agg(count(lit(1)).as(s"${P}cf"))
     val byV = byVF.groupBy(gc :+ col(s"${P}x"): _*)
       .agg(sum(s"${P}cf").as(s"${P}cnt"))
-    val ranked =
-      if (gc.nonEmpty) {
-        val wBelow = Window.partitionBy(gc: _*).orderBy(col(s"${P}x"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        byV.withColumn(s"${P}below",
-          coalesce(sum(s"${P}cnt").over(wBelow), lit(0L)))
-      } else
-        graft.util.GlobalCumsum.runningSums(byV, col(s"${P}x"),
-            ascending = true, Seq(col(s"${P}cnt") -> s"${P}cum"))
-          .withColumn(s"${P}below", col(s"${P}cum") - col(s"${P}cnt"))
-          .drop(s"${P}cum")
-    val withRank = ranked.withColumn(s"${P}rank",
-      col(s"${P}below") + (col(s"${P}cnt") + 1.0) / 2.0)
+    val withRank = GlobalCumsum.midRanks(byV, gc, col(s"${P}x"),
+      col(s"${P}cnt"), s"${P}rank")
     val joinKeys = (groupNames :+ s"${P}x")
     // each (value, level) inherits the pooled tie-averaged rank
     val perLevel = byVF.join(withRank, joinKeys)
@@ -623,9 +564,7 @@ object StatOps {
         sum(s"${P}nf").as(s"${P}n"),
         sum(col(s"${P}rf") * col(s"${P}rf") / col(s"${P}nf"))
           .as(s"${P}r2"))
-    val joined =
-      if (gc.nonEmpty) agg.join(ties, groupNames)
-      else agg.crossJoin(broadcast(ties))
+    val joined = agg.join(ties, groupNames)
     val n = col(s"${P}n")
     val h = lit(12.0) / (n * (n + 1.0)) * col(s"${P}r2") -
       lit(3.0) * (n + 1.0)
@@ -693,9 +632,8 @@ object StatOps {
     * normal p (the large-sample reference, n ≳ 20).
     *
     * Scale shape: identical to [[mannWhitneyU]] — compress to the
-    * distinct-|d| table (map-side combinable), rank with a keyed
-    * window (grouped) or [[graft.util.GlobalCumsum]] (whole-frame),
-    * finish with one algebraic aggregate. */
+    * distinct-|d| table (map-side combinable), rank with
+    * [[GlobalCumsum.midRanks]], finish with one algebraic aggregate. */
   def wilcoxonSignedRank(df: DataFrame, x: Column, y: Column,
                          groupNames: Seq[String]): DataFrame = {
     val gc = groupNames.map(col)
@@ -706,21 +644,10 @@ object StatOps {
     val byV = d.groupBy(gc :+ abs(col(s"${P}d")).as(s"${P}a"): _*)
       .agg(count(lit(1)).as(s"${P}cnt"),
         sum(when(col(s"${P}d") > 0, 1L).otherwise(0L)).as(s"${P}cp"))
-    val ranked =
-      if (gc.nonEmpty) {
-        val wBelow = Window.partitionBy(gc: _*).orderBy(col(s"${P}a"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        byV.withColumn(s"${P}below",
-          coalesce(sum(s"${P}cnt").over(wBelow), lit(0L)))
-      } else
-        graft.util.GlobalCumsum.runningSums(byV, col(s"${P}a"),
-            ascending = true, Seq(col(s"${P}cnt") -> s"${P}cum"))
-          .withColumn(s"${P}below", col(s"${P}cum") - col(s"${P}cnt"))
-          .drop(s"${P}cum")
+    val ranked = GlobalCumsum.midRanks(byV, gc, col(s"${P}a"),
+      col(s"${P}cnt"), s"${P}mid")
     val agg = ranked.groupBy(gc: _*).agg(
-      sum(col(s"${P}cp") *
-        (col(s"${P}below") + (col(s"${P}cnt") + 1.0) / 2.0))
-        .as(s"${P}wp"),
+      sum(col(s"${P}cp") * col(s"${P}mid")).as(s"${P}wp"),
       sum(s"${P}cnt").cast("double").as(s"${P}n"),
       sum(col(s"${P}cnt") * col(s"${P}cnt") * col(s"${P}cnt") -
         col(s"${P}cnt")).cast("double").as(s"${P}ties"))
@@ -775,13 +702,10 @@ object StatOps {
         avg(s"${P}x").as(s"${P}mg"),
         var_samp(s"${P}x").as(s"${P}vg"))
       .withColumn(s"${P}w", col(s"${P}ng") / col(s"${P}vg"))
-    // total weight per group via a broadcast join (k·groups rows) —
-    // no zero-column window even in the whole-frame case
+    // total weight per group via a broadcast join (k·groups rows)
     val totals = perLevel.groupBy(gc: _*)
       .agg(sum(s"${P}w").as(s"${P}Wt"))
-    val withW =
-      if (gc.nonEmpty) perLevel.join(broadcast(totals), groupNames)
-      else perLevel.crossJoin(broadcast(totals))
+    val withW = perLevel.join(broadcast(totals), groupNames)
     val agg = withW.groupBy(gc: _*).agg(
       count(lit(1)).cast("double").as(s"${P}k"),
       sum(s"${P}w").as(s"${P}W"),

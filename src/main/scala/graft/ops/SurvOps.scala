@@ -64,9 +64,7 @@ object SurvOps {
       // one Newton step: given the per-group beta frame, return the
       // per-group {beta', I} frame (k rows)
       def step(beta: DataFrame): DataFrame = {
-        val joined =
-          if (gc.isEmpty) base.crossJoin(broadcast(beta))
-          else base.join(beta, groupNames)
+        val joined = base.join(beta, groupNames)
         val exb = exp(col(s"${P}b") * col(s"${P}x"))
         val w = Window.partitionBy(gc: _*).orderBy(col(s"${P}t").desc)
           .rangeBetween(Window.unboundedPreceding, Window.currentRow)

@@ -21,8 +21,11 @@ object QueryPack {
   // table resolves once per session; this mirrors that by memoizing
   // the RESOLVED DataFrame (logical plan leaf: schema + file index)
   // per (session, path). No row data is cached — every action still
-  // scans the parquet files — and the memo dies with the session
-  // (weak keys), so a fresh process/bench run always re-resolves.
+  // scans the parquet files. The memo assumes one session per JVM and
+  // input files that do not change while it lives: each memoized
+  // DataFrame strongly references its session, so the weak key never
+  // clears and the session stays reachable, and a rewritten table dir
+  // keeps its stale file index. A fresh process re-resolves.
   private val cache =
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()

@@ -411,9 +411,7 @@ object SampleOps {
         .as("__bs_ci"))
     val stats = base.groupBy(gc: _*)
       .agg(avg("__bs_x").as("mean"), count(lit(1)).as("n"))
-    val joined =
-      if (gc.nonEmpty) stats.join(ci, groupNames)
-      else stats.crossJoin(broadcast(ci))
+    val joined = stats.join(ci, groupNames)
     joined.select(gc ++ Seq(col("mean"),
       element_at(col("__bs_ci"), 1).as("ci_lo"),
       element_at(col("__bs_ci"), 2).as("ci_hi"),

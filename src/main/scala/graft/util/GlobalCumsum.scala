@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Whole-frame running sums WITHOUT an unbounded single-partition
-  * WindowExec.
+/** Running sums, per group or over the whole frame, WITHOUT an
+  * unbounded single-partition WindowExec.
   *
   * `Window.orderBy(x)` with no partition keys plans a WindowExec that
   * drags every row through ONE task ("Moving all data to a single
@@ -47,12 +47,20 @@ import org.apache.spark.sql.types._
   * cleaner, or explicit unpersist (Quantiles.exact).
   *
   * The inclusive frame (unboundedPreceding..currentRow) is computed;
-  * callers needing the exclusive frame subtract the row's own value —
-  * the algebra every call site in MetricOps/StatOps already uses. Rows
-  * whose `order` value ties are NOT distinguishable by a rows-frame,
-  * so call this on a distinct-key table (every caller compresses to
-  * distinct thresholds first) or treat the result as rangeBetween
-  * semantics per tie-group.
+  * callers needing the exclusive frame subtract the row's own value
+  * (cum − cnt, exact for integral counts). Rows whose `order` value
+  * ties are NOT distinguishable by a rows-frame, so call this on a
+  * distinct-key table (rank callers compress to distinct thresholds
+  * first; series callers pass a unique order) or treat the result as
+  * rangeBetween semantics per tie-group.
+  *
+  * This object is the ONE place that decides grouped vs whole-frame.
+  * Operators never branch on empty group keys: running sums and
+  * per-group totals go through [[runningSumsBy]], tie-averaged ranks
+  * through [[midRanks]], and per-group stats meet their rows via
+  * `rows.join(stats, groupNames)` — with no names that join plans as
+  * the same broadcast nested-loop join of the one stats row as an
+  * explicit `crossJoin(broadcast(stats))`.
   */
 object GlobalCumsum {
 
@@ -60,7 +68,9 @@ object GlobalCumsum {
 
   /** Add inclusive global running sums of `sums._1` ordered by `order`
     * (ascending or descending), one output column per `sums._2` name.
-    * All original columns pass through. `numParts` overrides the range
+    * Only int, long, float and double columns can be summed (the
+    * per-partition kernel reads them unboxed); the sums come out as
+    * double. All original columns pass through. `numParts` overrides the range
     * partition count (default: derived from leaf bytes, capped at the
     * session's parallelism) — exposed so the offset algebra is testable
     * at every partition count and so callers with tiny key tables can
@@ -69,6 +79,51 @@ object GlobalCumsum {
                   sums: Seq[(Column, String)],
                   numParts: Option[Int] = None): DataFrame =
     runningSumsMulti(df, Seq(order), ascending, sums, numParts)
+
+  /** Inclusive running sums of `sums` ordered by `order` within each
+    * group of `groups`, plus each group's `totals` (sums over the whole
+    * group), one output column per name; all original columns pass
+    * through. With keys: a `Window.partitionBy(groups)` rows-frame
+    * (parallel by group cardinality), sums keep Spark's sum type. With
+    * no keys: the range-partitioned [[runningSums]] kernel (sums come
+    * out as double) and the totals from one aggregate broadcast back —
+    * a zero-column window would drag the whole table through one task.
+    * Same distinct-key caveat as [[runningSums]]. */
+  def runningSumsBy(df: DataFrame, groups: Seq[Column], order: Column,
+                    ascending: Boolean, sums: Seq[(Column, String)],
+                    totals: Seq[(Column, String)] = Nil): DataFrame =
+    if (groups.nonEmpty) {
+      val wGroup = Window.partitionBy(groups: _*)
+      val wRun = wGroup.orderBy(if (ascending) order.asc else order.desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val run = sums.foldLeft(df) { case (d, (c, name)) =>
+        d.withColumn(name, sum(c).over(wRun))
+      }
+      totals.foldLeft(run) { case (d, (c, name)) =>
+        d.withColumn(name, sum(c).over(wGroup))
+      }
+    } else {
+      val run = runningSums(df, order, ascending, sums)
+      if (totals.isEmpty) run
+      else {
+        val tot = totals.map { case (c, name) => sum(c).as(name) }
+        run.crossJoin(broadcast(df.agg(tot.head, tot.tail: _*)))
+      }
+    }
+
+  /** Tie-averaged (mid) rank of `value` within each group, as column
+    * `out`, over a table with one row per distinct (groups, value) and
+    * that value's row `count`: cum − count + (count + 1) / 2, with cum
+    * the inclusive running count ([[runningSumsBy]], ascending). The
+    * result is the exact integer-or-half average rank. */
+  def midRanks(byValue: DataFrame, groups: Seq[Column], value: Column,
+               count: Column, out: String): DataFrame = {
+    val cum = "__gcs_cum"
+    runningSumsBy(byValue, groups, value, ascending = true,
+        Seq(count -> cum))
+      .withColumn(out, col(cum) - count + (count + 1.0) / 2.0)
+      .drop(cum)
+  }
 
   /** [[runningSums]] over a COMPOSITE order key (lexicographic over
     * `orders`) — lets several per-key cumsum pipelines share ONE range

@@ -120,6 +120,35 @@ class GlobalCumsumSpec extends AnyFunSuite {
     }
   }
 
+  test("runningSumsBy under a constant key equals the unkeyed kernel " +
+      "exactly: running sums and totals, both orders") {
+    import spark.implicits._
+    val seed = 20261018L
+    val raw = (0 until 300).map(i =>
+      (sample(Gen.choose(-1e6, 1e6), seed + i),
+        sample(Gen.choose(0L, 9L), seed - i)))
+    val dist = raw.toDF("k", "w").groupBy("k").agg(sum("w").as("w"))
+      .withColumn("g", lit("all"))
+    for (asc <- Seq(true, false)) {
+      def run(groups: Seq[org.apache.spark.sql.Column]) =
+        graft.util.Release.scopedValue(spark) {
+          graft.util.GlobalCumsum.runningSumsBy(dist, groups, col("k"),
+              asc, Seq(col("w") -> "cum", lit(1L) -> "rk"),
+              Seq(col("w") -> "tot"))
+            .select(col("k"), col("cum").cast("double"),
+              col("rk").cast("double"), col("tot").cast("double"))
+            .collect()
+        }.map(r => (r.getDouble(0), (r.getDouble(1), r.getDouble(2),
+          r.getDouble(3)))).toMap
+      val keyed = run(Seq(col("g")))
+      val unkeyed = run(Nil)
+      assert(keyed.size == dist.count() && keyed == unkeyed,
+        s"asc=$asc: keyed and unkeyed running sums differ")
+      val total = raw.map(_._2).sum.toDouble
+      assert(unkeyed.values.forall(_._3 == total))
+    }
+  }
+
   test("single row, single partition, and empty frame edges") {
     import spark.implicits._
     val one = Seq((5.0, 3L)).toDF("k", "w")

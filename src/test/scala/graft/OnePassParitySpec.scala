@@ -55,12 +55,16 @@ object FormerFormulations {
   }
 
   /** Grouped StatOps.spearman with the two-window average rank:
-    * rank over (g order by c) plus (tie count over (g, c) − 1) / 2. */
+    * rank over (g order by c) plus (tie count over (g, c) − 1) / 2,
+    * over the rows whose x and y are both non-null and non-NaN (the
+    * pairwise deletion StatOps.spearman applies before ranking). */
   def spearmanTwoWindow(df: DataFrame, x: Column, y: Column,
                         groupNames: Seq[String]): DataFrame = {
     val gc = groupNames.map(col)
     val t = df.select(gc :+ x.cast("double").as("_x")
       :+ y.cast("double").as("_y"): _*)
+      .where(col("_x").isNotNull && !isnan(col("_x")) &&
+        col("_y").isNotNull && !isnan(col("_y")))
     def avgRank(c: String): Column = {
       val wr = Window.partitionBy(gc: _*).orderBy(col(c))
       val wt = Window.partitionBy(gc :+ col(c): _*)

@@ -519,6 +519,14 @@ class PlanSpec extends AnyFunSuite {
       graft.ops.StatOps.ks2Samp(ev, col("p"), col("y") === 1, Nil))
     assertBoundedWindows(
       graft.ops.StatOps.mannWhitneyU(ev, col("p"), col("y") === 1, Nil))
+    assertBoundedWindows(
+      graft.ops.StatOps.effectSizes(ev, col("p"), col("y") === 1, Nil))
+    assertBoundedWindows(
+      graft.ops.StatOps.kruskalWallis(ev, col("p"), col("event_type"), Nil))
+    assertBoundedWindows(graft.ops.StatOps.wilcoxonSignedRank(ev,
+      col("p"), col("value"), Nil))
+    assertBoundedWindows(
+      graft.ops.ChangeOps.pettitt(ev, col("p"), col("event_id"), Nil))
   }
 
   test("ungrouped drift/rank ops plan no single-partition window") {
@@ -594,6 +602,69 @@ class PlanSpec extends AnyFunSuite {
       .mannWhitneyU(ev, col("p"), col("y") === 1, Seq("g")).head
     assert(math.abs(d(mwU.get(0)) - d(mwG.get(1))) < 1e-9)
     assert(math.abs(d(mwU.get(2)) - d(mwG.get(3))) < 1e-12)
+    // one-row-per-group operators: the ungrouped row equals the
+    // constant-key row without its key — rank/ECDF operators through
+    // GlobalCumsum, and one operator per file whose per-group stats
+    // meet their rows via join(stats, groupNames)
+    def sameRow(name: String,
+                f: Seq[String] => org.apache.spark.sql.DataFrame,
+                tol: Double = 1e-12): Unit = {
+      val u = f(Nil).collect()
+      val g = f(Seq("g")).drop("g").collect()
+      assert(u.length == 1 && g.length == 1, name)
+      u(0).toSeq.zip(g(0).toSeq).foreach {
+        case (a: Double, b: Double) =>
+          assert((a.isNaN && b.isNaN) ||
+            math.abs(a - b) <= tol * math.max(1.0, math.abs(a)),
+            s"$name: $a vs $b")
+        case (a, b) => assert(a == b, s"$name: $a vs $b")
+      }
+    }
+    import graft.ops._
+    val in1 = col("user_id") % 2 === 0
+    sameRow("effectSizes", StatOps.effectSizes(ev, col("p"), in1, _))
+    sameRow("kruskalWallis",
+      StatOps.kruskalWallis(ev, col("p"), col("event_type"), _), 1e-9)
+    sameRow("wilcoxonSignedRank",
+      StatOps.wilcoxonSignedRank(ev, col("p"), col("value"), _))
+    sameRow("welchAnova",
+      StatOps.welchAnova(ev, col("value"), col("event_type"), _), 1e-9)
+    sameRow("pettitt", ChangeOps.pettitt(ev, col("p"), col("event_id"), _))
+    sameRow("ad2Samp", DiagOps.ad2Samp(ev, col("value"), in1, _))
+    sameRow("breuschPagan",
+      DiagOps.breuschPagan(ev, col("value"), col("p"), _), 1e-9)
+    sameRow("jarqueBera", PostHocOps.jarqueBera(ev, col("value"), _), 1e-9)
+    sameRow("kpss", EconOps.kpss(ev, col("value"), col("event_id"), _),
+      1e-9)
+    sameRow("miBinned", AssocOps.miBinned(ev, col("value"), col("p"), _, 8),
+      1e-9)
+    sameRow("histDivergences",
+      DriftOps.histDivergences(ev, col("value"), in1, _, 10), 1e-9)
+    sameRow("bootstrapMeanCI", graft.sample.SampleOps.bootstrapMeanCI(ev,
+      col("event_id"), col("value"), _, reps = 8), 1e-9)
+    // the attach sites of the distributed Newton / IRLS loops
+    System.setProperty("graft.maxLocalIrls", "1")
+    try {
+      sameRow("coxPh", SurvOps.coxPh(ev, col("p"), col("y"), col("value"),
+        _, maxIter = 2), 1e-8)
+      sameRow("huberReg", RobustOps.huberReg(ev, col("value"), col("p"),
+        _, maxIter = 2), 1e-8)
+    } finally System.clearProperty("graft.maxLocalIrls")
+  }
+
+  test("an ungrouped stats attach plans a broadcast nested-loop join " +
+      "(join on no names, default settings)") {
+    val ev = spark.read.parquet(s"$dir/events.parquet")
+    import graft.ops._
+    for (df <- Seq(
+        EconOps.kpss(ev, col("value"), col("event_id"), Nil),
+        DiagOps.breuschPagan(ev, col("value"), col("user_id"), Nil),
+        PostHocOps.jarqueBera(ev, col("value"), Nil),
+        LinRegOps.linRegPred(ev, Seq(col("user_id")), col("value")))) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastNestedLoopJoin BuildRight"), plan)
+      assert(!plan.contains("CartesianProduct"), plan)
+    }
   }
 
   test("curation gates are single-scan plans: rules + repair + split " +

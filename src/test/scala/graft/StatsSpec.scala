@@ -68,6 +68,17 @@ class StatsSpec extends AnyFunSuite {
       .collect()(0).getAs[Double]("spearman")
     assert(approx(ungrouped, grouped, 1e-12),
       s"ungrouped $ungrouped vs grouped $grouped")
+    // rows with a null or NaN x or y are dropped before ranking on both
+    // paths (pairwise deletion): ranks of (1,2,3,5) vs (5,6,7,7)
+    val withGaps = Seq[(java.lang.Double, java.lang.Double)](
+      (1.0, 5.0), (2.0, 6.0), (3.0, 7.0), (null, 8.0), (5.0, 7.0),
+      (Double.NaN, 1.0)).toDF("x", "y")
+    val gapG = StatOps.spearman(withGaps.withColumn("g", lit(1)),
+      col("x"), col("y"), Seq("g")).collect()(0).getAs[Double]("spearman")
+    val gapU = StatOps.spearman(withGaps, col("x"), col("y"), Nil)
+      .collect()(0).getAs[Double]("spearman")
+    assert(approx(gapU, gapG, 1e-12), s"ungrouped $gapU vs grouped $gapG")
+    assert(approx(gapU, 4.5 / math.sqrt(22.5), 1e-12))
     // scipy doc example through the ungrouped path
     val d2 = Seq((1.0, 5.0), (2.0, 6.0), (3.0, 7.0), (4.0, 8.0),
       (5.0, 7.0)).toDF("x", "y")
