@@ -227,80 +227,80 @@ object EdaOps {
     val pairs = for (x <- subset; y <- numerics) yield (x, y)
     val vals: Map[(String, String), Double] = method match {
       case "pearson" | "spearman" =>
-        val all = (subset ++ numerics).distinct
-        val base = df.select(all.map(c => col(c).cast("double").as(c)): _*)
-        val src =
-          if (method == "pearson") base
-          else {
-            // Tie-averaged ranks WITHOUT a global single-partition
-            // window: the distinct-value count tables of ALL columns
-            // are STACKED under a discriminator and ranked through ONE
-            // shared cumsum pipeline (r16 — the previous shape ran one
-            // GlobalCumsum persist + range shuffle + broadcast-offset
-            // join PER COLUMN; this is one range shuffle ordered by
-            // (column, value) total). Per-column cumulative counts =
-            // the stacked running count minus the exclusive prefix of
-            // whole-column totals (a ≤ #columns-row window, broadcast
-            // back); the tie group's average 1-based rank is then
-            // exclusive-cum + (cnt+1)/2 — an exact integer-or-half
-            // double, identical to averaging the positions. The
-            // (value → rank) map joins back by value; every stage
-            // stays distributed at any frame size. corr is
-            // shift-invariant, so null rows (rank null via the left
-            // join) drop out pairwise exactly like the windowed
-            // formulation.
-            val colIdx = all.zipWithIndex
-            // one scan, not one per column (r17): posexplode stacks
-            // every column's value under its index in a single pass —
-            // the former per-column select + unionAll re-scanned the
-            // source once per column
-            val stacked = base
-              .select(posexplode(array(all.map(col): _*))
-                .as(Seq("__k", "__v")))
-              .where(col("__v").isNotNull && !isnan(col("__v")))
-              .groupBy(col("__k"), col("__v"))
-              .agg(count(lit(1)).as("__n"))
-            val cum = graft.util.GlobalCumsum.runningSumsMulti(stacked,
-              Seq(col("__k"), col("__v")), ascending = true,
-              Seq(col("__n") -> "__cum"))
-            // exclusive prefix of per-column totals: one row per
-            // column, so the keyless window is bounded by the column
-            // count, never the data. Derived from `cum` (checkpoint-
-            // backed inside GlobalCumsum) rather than `stacked`, whose
-            // re-execution would re-run the whole scan+aggregate (r17).
-            val baseOff = cum.groupBy(col("__k"))
-              .agg(sum(col("__n")).as("__tot"))
-              .withColumn("__base", coalesce(sum(col("__tot")).over(
-                org.apache.spark.sql.expressions.Window
-                  .orderBy(col("__k"))
-                  .rowsBetween(
-                    org.apache.spark.sql.expressions.Window
-                      .unboundedPreceding, -1)),
-                lit(0L)))
-              .select(col("__k"), col("__base"))
-            // persist the finished rank map: each of the per-column
-            // join-back branches otherwise re-runs the whole stacked
-            // pipeline past GlobalCumsum's internal cache (blocks
-            // reclaimed by the Release.scopedValue wrapping the
-            // aggregate below). Lazy, not an eager checkpoint — the
-            // barrier on a distinct-value-sized frame measured slower
-            // warm than the branch races it removes (r17).
-            val rankMap = cum.join(broadcast(baseOff), "__k")
-              .select(col("__k"), col("__v"),
-                ((col("__cum") - col("__base") - col("__n")) +
-                  (col("__n") + lit(1)) / 2.0).as("__r"))
-              .persist(org.apache.spark.storage.StorageLevel
-                .MEMORY_AND_DISK)
-            colIdx.foldLeft(base) { case (d, (c, k)) =>
-              val rm = rankMap.filter(col("__k") === k)
-                .select(col("__v"), col("__r"))
-              d.join(rm, d(c) === rm("__v"), "left")
-                .withColumn(c, col("__r")).drop("__v", "__r")
-            }
-          }
-        val aggs = pairs.zipWithIndex.map { case ((x, y), k) =>
-          corr(col(x), col(y)).as(s"__c$k") }
+        // one scope around the rank map's persist and the aggregate
+        // that consumes it, so the scope releases the map
         val r = graft.util.Release.scopedValue(df.sparkSession) {
+          val all = (subset ++ numerics).distinct
+          val base = df.select(all.map(c => col(c).cast("double").as(c)): _*)
+          val src =
+            if (method == "pearson") base
+            else {
+              // Tie-averaged ranks WITHOUT a global single-partition
+              // window: the distinct-value count tables of ALL columns
+              // are STACKED under a discriminator and ranked through ONE
+              // shared cumsum pipeline (r16 — the previous shape ran one
+              // GlobalCumsum persist + range shuffle + broadcast-offset
+              // join PER COLUMN; this is one range shuffle ordered by
+              // (column, value) total). Per-column cumulative counts =
+              // the stacked running count minus the exclusive prefix of
+              // whole-column totals (a ≤ #columns-row window, broadcast
+              // back); the tie group's average 1-based rank is then
+              // exclusive-cum + (cnt+1)/2 — an exact integer-or-half
+              // double, identical to averaging the positions. The
+              // (value → rank) map joins back by value; every stage
+              // stays distributed at any frame size. corr is
+              // shift-invariant, so null rows (rank null via the left
+              // join) drop out pairwise exactly like the windowed
+              // formulation.
+              val colIdx = all.zipWithIndex
+              // one scan, not one per column (r17): posexplode stacks
+              // every column's value under its index in a single pass —
+              // the former per-column select + unionAll re-scanned the
+              // source once per column
+              val stacked = base
+                .select(posexplode(array(all.map(col): _*))
+                  .as(Seq("__k", "__v")))
+                .where(col("__v").isNotNull && !isnan(col("__v")))
+                .groupBy(col("__k"), col("__v"))
+                .agg(count(lit(1)).as("__n"))
+              val cum = graft.util.GlobalCumsum.runningSumsMulti(stacked,
+                Seq(col("__k"), col("__v")), ascending = true,
+                Seq(col("__n") -> "__cum"))
+              // exclusive prefix of per-column totals: one row per
+              // column, so the keyless window is bounded by the column
+              // count, never the data. Derived from `cum` (checkpoint-
+              // backed inside GlobalCumsum) rather than `stacked`, whose
+              // re-execution would re-run the whole scan+aggregate (r17).
+              val baseOff = cum.groupBy(col("__k"))
+                .agg(sum(col("__n")).as("__tot"))
+                .withColumn("__base", coalesce(sum(col("__tot")).over(
+                  org.apache.spark.sql.expressions.Window
+                    .orderBy(col("__k"))
+                    .rowsBetween(
+                      org.apache.spark.sql.expressions.Window
+                        .unboundedPreceding, -1)),
+                  lit(0L)))
+                .select(col("__k"), col("__base"))
+              // persist the finished rank map: each of the per-column
+              // join-back branches otherwise re-runs the whole stacked
+              // pipeline past GlobalCumsum's internal cache. Lazy, not an
+              // eager checkpoint — the barrier on a distinct-value-sized
+              // frame measured slower warm than the branch races it
+              // removes (r17).
+              val rankMap = graft.util.Release.persist(
+                cum.join(broadcast(baseOff), "__k")
+                  .select(col("__k"), col("__v"),
+                    ((col("__cum") - col("__base") - col("__n")) +
+                      (col("__n") + lit(1)) / 2.0).as("__r")))
+              colIdx.foldLeft(base) { case (d, (c, k)) =>
+                val rm = rankMap.filter(col("__k") === k)
+                  .select(col("__v"), col("__r"))
+                d.join(rm, d(c) === rm("__v"), "left")
+                  .withColumn(c, col("__r")).drop("__v", "__r")
+              }
+            }
+          val aggs = pairs.zipWithIndex.map { case ((x, y), k) =>
+            corr(col(x), col(y)).as(s"__c$k") }
           src.agg(aggs.head, aggs.tail: _*).head
         }
         pairs.zipWithIndex.map { case (p, k) =>

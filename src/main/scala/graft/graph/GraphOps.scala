@@ -110,6 +110,7 @@ object GraphOps {
         r
       }
     }
+    // persist-ok: both branches below unpersist it
     val cached = canonEdges.persist(StorageLevel.MEMORY_AND_DISK)
     val edgeCount = dbg("count")(cached.count())
     if (localFinishThreshold > 0L && edgeCount <= localFinishThreshold) {
@@ -148,8 +149,8 @@ object GraphOps {
       // localCheckpoint cuts lineage per round (the plan would
       // otherwise grow geometrically — each round references the
       // previous plan several times)
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val next = graft.util.Release.persist(
+        smallStar(largeStar(e)).localCheckpoint(false))
       val nextSum = checksum(next)
       e.unpersist(false)
       e = next

@@ -52,6 +52,7 @@ object PageRankOps {
           .filter(col("u").isNotNull && col("v").isNotNull),
         col("u"), col("v"))
       .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
+      // persist-ok: unpersisted below, or by the catch
       .persist(StorageLevel.MEMORY_AND_DISK)
     // every frame this op persists, unpersisted on EXCEPTION exits
     // (r16 ADVICE: a failure inside the iteration otherwise leaked
@@ -66,12 +67,14 @@ object PageRankOps {
     val trans = e.join(out, "u")
       .select(col("u"), col("v"), (col("w") / col("wout")).as("p"))
       .repartition(col("u"))
+      // persist-ok: unpersisted below, or by the catch
       .persist(StorageLevel.MEMORY_AND_DISK)
     pinned += trans
     val nodes = e.select(col("u"))
       .unionAll(e.select(col("v").as("u")))
       .distinct()
       .select(col("u").as("id"))
+      // persist-ok: the result's resident; Release.free(result)
       .persist(StorageLevel.MEMORY_AND_DISK)
     pinned += nodes
     val n = nodes.count()
@@ -142,10 +145,12 @@ object PageRankOps {
     // no-dangling case once so the loop can skip the per-iteration
     // mass job (host graphs rarely have true sinks)
     val danglingNodes = nodes.join(out, nodes("id") === out("u"),
+      // persist-ok: unpersisted below, or by the catch
       "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
     pinned += danglingNodes
     val hasDangling = danglingNodes.limit(1).count() > 0L
     var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
+      // persist-ok: unpersisted next round; the last: Release.free(result)
       .persist(StorageLevel.MEMORY_AND_DISK)
     pinned += ranks
     var it = 0
@@ -174,6 +179,7 @@ object PageRankOps {
             lit(damping) * coalesce(col("c"), lit(0.0)))
             .as("rank"))
         .localCheckpoint(false)
+        // persist-ok: unpersisted next round; the last: Release.free(result)
         .persist(StorageLevel.MEMORY_AND_DISK)
       pinned += next
       next.count()

@@ -197,7 +197,7 @@ class GLM(family: String, addBias: Boolean = true,
     val cached = df.filter(validRow)
       .select(feats0.zipWithIndex.map { case (c, i) =>
       c.cast("double").as(s"__f$i") } :+ target.cast("double").as("__t"): _*)
-      .persist()
+      .persist() // persist-ok: the finally below unpersists it
     val feats = (0 until d).map(i => col(s"__f$i"))
     val tgt = col("__t")
     var beta = new Array[Double](d)
@@ -246,7 +246,7 @@ class GLM(family: String, addBias: Boolean = true,
     // local path collects the rows exactly once — skip the extra cache
     val data =
       if (graft.ops.LinRegOps.irlsGoesLocal(mRows, d, maxIter)) data0
-      else data0.persist()
+      else data0.persist() // persist-ok: the finally below unpersists it
     val solve = (xtx: Array[Array[Double]], xty: Array[Double], _: Int) =>
       Solvers.ridge(xtx, xty)
     try {

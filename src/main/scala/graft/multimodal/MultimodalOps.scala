@@ -556,8 +556,8 @@ object MultimodalOps {
       graft.util.Release.scoped(df.sparkSession) {
     // persist the banded hash frame: both join sides (and the probe
     // expansion) would otherwise decode + hash each image again
-    val banded = imageBandTable(df, id, payload, blocking)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = graft.util.Release.persist(
+      imageBandTable(df, id, payload, blocking))
     imageDupPairsFromBands(banded, maxDist)
   }
 
@@ -643,8 +643,8 @@ object MultimodalOps {
                                maxDist: Int,
                                blocking: Option[Column] = None)
       : DataFrame = graft.util.Release.scoped(newDf.sparkSession) {
-    val nb = imageBandTable(newDf, id, payload, blocking)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nb = graft.util.Release.persist(
+      imageBandTable(newDf, id, payload, blocking))
     incrementalImageDupPairsFromBands(nb, corpusBands, maxDist)
   }
 

@@ -934,7 +934,7 @@ object LinRegOps {
     val cached = df.filter(validRow)
       .select((fx :+ y.cast("double").as(s"${P}y")).zipWithIndex
       .map { case (c, i) => if (i < d) c.cast("double").as(s"${P}f$i")
-        else c }: _*).persist()
+        else c }: _*).persist() // persist-ok: the finally below unpersists it
     // one strict count: materializes the projection cache, scales the
     // l1 threshold, and feeds irlsEngine's local-path gate so the
     // engine never pays its own counting pass
@@ -949,6 +949,7 @@ object LinRegOps {
     // local path reads the rows exactly once (collect) — persisting
     // the RDD would only add a second cache of `cached`'s bytes
     val data = if (irlsGoesLocal(mRows, d, maxIter)) data0
+      // persist-ok: the finally below unpersists it
       else data0.persist()
     // w = μ(1−μ)+ε ; z = η + (y − μ)/w — one weighted-Gram pass per step
     val wz = (eta: Double, y: Double) => {
@@ -1112,7 +1113,7 @@ object LinRegOps {
       features.zipWithIndex.map { case (c, i) =>
         c.cast("double").as(s"${P}f$i") } ++
       Seq(lit(1.0).as(s"${P}f${d - 1}"), y.cast("double").as(s"${P}y")): _*)
-      .persist()
+      .persist() // persist-ok: the finally below unpersists it
     try {
       // group inventory + sizes + mean(y) in one pass; fail fast on
       // cardinality
@@ -1173,7 +1174,7 @@ object LinRegOps {
           (bcIdx.value(key), arr)
         }
         val data = if (goLocal) data0
-          else data0.persist(
+          else data0.persist( // persist-ok: the finally below unpersists it
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val mArr = keys.map(mOf)
         val wz: (Double, Double) => (Double, Double) = family match {

@@ -67,6 +67,7 @@ object PreferenceOps {
     // One count on the persisted frame evaluates the aggregation once;
     // the collect (small case) and distributedFit's first stats pass
     // (large case) both read the cached blocks.
+    // persist-ok: both branches below unpersist it
     val cached = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     val nPairs = cached.count()
     if (nPairs <= cap) {
@@ -130,24 +131,22 @@ object PreferenceOps {
     }
   }
 
-  /** Distributed MM loop for pair tables above graft.maxLocalBt.
-    * Release.scoped drops every persisted intermediate once the
-    * result is materialized.
+  /** Distributed MM loop for pair tables above graft.maxLocalBt, over
+    * the caller's cached pair table. Release.scoped drops every
+    * persisted intermediate once the result is materialized.
     */
   private def distributedFit(spark: org.apache.spark.sql.SparkSession,
-                             pairs0: DataFrame,
+                             pairs: DataFrame,
                              iterations: Int): DataFrame = {
     graft.util.Release.scoped(spark) {
-      val pairs = pairs0.persist(StorageLevel.MEMORY_AND_DISK)
       // per-player wins/games from the pair table (pair-table-sized
       // shuffle, never match-log-sized)
-      val stats = pairs
+      val stats = graft.util.Release.persist(pairs
         .select(col("a").as("id"), col("n"), col("aw").as("wins"))
         .unionAll(pairs.select(col("b").as("id"), col("n"),
           (col("n") - col("aw")).as("wins")))
         .groupBy(col("id"))
-        .agg(sum(col("n")).as("games"), sum(col("wins")).as("wins"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(sum(col("n")).as("games"), sum(col("wins")).as("wins")))
       // one job: player count + degeneracy count together
       val chk = stats.agg(count(lit(1)).as("np"),
         sum(when(col("wins") === 0L ||
@@ -159,8 +158,8 @@ object PreferenceOps {
         s"bradleyTerry: $nBad player(s) have no win or no loss — " +
           "the BT MLE diverges for them. Filter them out (or add " +
           "regularizing pseudo-games) before fitting.")
-      var s = stats.select(col("id"), lit(1.0).as("strength"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      var s = graft.util.Release.persist(
+        stats.select(col("id"), lit(1.0).as("strength")))
       var it = 0
       while (it < iterations) {
         val j = pairs
@@ -177,11 +176,10 @@ object PreferenceOps {
           .select(col("id"),
             (col("wins").cast("double") / col("den")).as("st"))
         val tot = raw.agg(sum(col("st")).as("tot"))
-        val next = raw.crossJoin(tot)
+        val next = graft.util.Release.persist(raw.crossJoin(tot)
           .select(col("id"),
             (col("st") * nP / col("tot")).as("strength"))
-          .localCheckpoint(false)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .localCheckpoint(false))
         next.count()
         s.unpersist(blocking = false)
         s = next

@@ -72,6 +72,7 @@ object RobustOps {
     val baseAll = df.select(gc :+ y.cast("double").as(s"${P}y")
       :+ x.cast("double").as(s"${P}x"): _*)
     val mRows = baseAll
+      // persist-ok: baseAll is unpersisted on both paths below
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .count()
     if (mRows * 3 <= localCap) {
@@ -95,10 +96,9 @@ object RobustOps {
       val means = baseAll.groupBy(gc: _*)
         .agg(avg(s"${P}y").as(s"${P}my"), avg(s"${P}x").as(s"${P}mx"))
         .localCheckpoint(true)
-      val base = baseAll.join(means, groupNames)
+      val base = graft.util.Release.persist(baseAll.join(means, groupNames)
         .select(gc :+ (col(s"${P}y") - col(s"${P}my")).as(s"${P}y")
-          :+ (col(s"${P}x") - col(s"${P}mx")).as(s"${P}x"): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          :+ (col(s"${P}x") - col(s"${P}mx")).as(s"${P}x"): _*))
       def weight(u: Column): Column = method match {
         case "huber" => least(lit(1.0), lit(1.0) / abs(u))
         case _ => when(abs(u) < 1.0,
@@ -245,6 +245,7 @@ object RobustOps {
     val gc = groupNames.map(col)
     val baseAll = df.select(gc :+ y.cast("double").as(s"${P}y")
       :+ x.cast("double").as(s"${P}x"): _*)
+      // persist-ok: baseAll is unpersisted on both paths below
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mRows = baseAll.count()
     val localCap = java.lang.Long.getLong("graft.maxLocalIrls", 4000000L)
@@ -258,10 +259,10 @@ object RobustOps {
       val means = baseAll.groupBy(gc: _*)
         .agg(avg(s"${P}y").as(s"${P}my"), avg(s"${P}x").as(s"${P}mx"))
         .localCheckpoint(true)
-      val centered = baseAll.join(means, groupNames)
-        .select(gc :+ (col(s"${P}y") - col(s"${P}my")).as(s"${P}y")
-          :+ (col(s"${P}x") - col(s"${P}mx")).as(s"${P}x"): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val centered = graft.util.Release.persist(
+        baseAll.join(means, groupNames)
+          .select(gc :+ (col(s"${P}y") - col(s"${P}my")).as(s"${P}y")
+            :+ (col(s"${P}x") - col(s"${P}mx")).as(s"${P}x"): _*))
       var fit = wFit(centered, gc, lit(1.0), groupNames)
         .localCheckpoint(true)
       for (_ <- 1 to maxIter) {

@@ -64,7 +64,7 @@ object SketchOps {
   def heavyHitters(df: DataFrame, key: String, support: Double,
                    topK: Int): DataFrame = {
     val counts = df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-    val cached = counts.persist()
+    val cached = counts.persist() // persist-ok: the finally below unpersists it
     try {
       val total = Option(cached.agg(sum(col("n"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)

@@ -384,10 +384,9 @@ object StatOps {
         .withColumn(s"${P}l",
           col(s"${P}n") - col(s"${P}r") + col(s"${P}cv"))
       val p = spark.sparkContext.defaultParallelism
-      val parted = withR
+      val parted = graft.util.Release.persist(withR
         .repartitionByRange(p, col(s"${P}x"), col(s"${P}y"))
-        .withColumn(s"${P}pid", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn(s"${P}pid", spark_partition_id()))
       val ord = struct(col(s"${P}x"), col(s"${P}y"))
       val bounds = parted.groupBy(col(s"${P}pid"))
         .agg(min_by(col(s"${P}r"), ord).as(s"${P}first"),
@@ -559,11 +558,19 @@ object StatOps {
     val ties = withRank.groupBy(gc: _*)
       .agg(sum(col(s"${P}cnt") * col(s"${P}cnt") * col(s"${P}cnt") -
         col(s"${P}cnt")).cast("double").as(s"${P}ties"))
+    // Σ rf²/nf folded in level order: a plain sum adds the terms in
+    // whatever order the rows arrive (AQE's join choice reorders them),
+    // and the cancellation in H amplifies that last-bit difference.
+    // rf (a sum of count × half-integer ranks), nf and n are exact.
+    val r2 = aggregate(
+      array_sort(collect_list(struct(col(s"${P}f").as("f"),
+        col(s"${P}rf").as("rf"), col(s"${P}nf").as("nf")))),
+      lit(0.0),
+      (acc, t) => acc + t("rf") * t("rf") / t("nf"))
     val agg = perLevel.groupBy(gc: _*)
       .agg(count(lit(1)).cast("double").as(s"${P}k"),
         sum(s"${P}nf").as(s"${P}n"),
-        sum(col(s"${P}rf") * col(s"${P}rf") / col(s"${P}nf"))
-          .as(s"${P}r2"))
+        r2.as(s"${P}r2"))
     val joined = agg.join(ties, groupNames)
     val n = col(s"${P}n")
     val h = lit(12.0) / (n * (n + 1.0)) * col(s"${P}r2") -

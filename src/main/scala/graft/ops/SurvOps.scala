@@ -52,6 +52,7 @@ object SurvOps {
     val base = df.select(gc :+ time.cast("double").as(s"${P}t")
       :+ event.cast("int").as(s"${P}e")
       :+ x.cast("double").as(s"${P}x"): _*)
+      // persist-ok: unpersisted on both paths below
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mRows = base.count()
     val localCap = java.lang.Long.getLong("graft.maxLocalIrls", 4000000L)

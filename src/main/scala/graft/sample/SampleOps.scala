@@ -283,9 +283,9 @@ object SampleOps {
     val keyed = df.withColumn("__td_dom", domain)
       .withColumn("__td_h",
         md5(concat(id.cast("string"), lit(":"), lit(seed.toString))))
-    val parted = keyed.repartitionByRange(p, col("__td_dom"), col("__td_h"))
-      .withColumn("__td_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val parted = graft.util.Release.persist(
+      keyed.repartitionByRange(p, col("__td_dom"), col("__td_h"))
+        .withColumn("__td_pid", spark_partition_id()))
     val wLocal = Window.partitionBy(col("__td_pid"), col("__td_dom"))
       .orderBy(col("__td_h"))
     val local = parted.withColumn("__td_rn", row_number().over(wLocal))

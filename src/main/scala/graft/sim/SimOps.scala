@@ -236,13 +236,12 @@ object SimOps {
                     tables: Int = 4): DataFrame =
       graft.util.Release.scoped(df.sparkSession) {
     val base = df.select(col("id"), col("vec"))
-    val tabbed = (0 until tables).map { t =>
+    // persist: the self-join scans this twice; without it both sides
+    // recompute every hyperplane signature (nPlanes × dim flops/row)
+    val tabbed = graft.util.Release.persist((0 until tables).map { t =>
       base.withColumn("tbl", lit(t))
         .withColumn("sig", hyperplaneSig(col("vec"), nPlanes, salt = t))
-    }.reduce(_ unionByName _)
-      // persist: the self-join scans this twice; without it both sides
-      // recompute every hyperplane signature (nPlanes × dim flops/row)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.reduce(_ unionByName _))
     val l = tabbed.as("l")
     val r = tabbed.as("r")
     // cosine computed inside the join row so the cross-table dedup
@@ -276,12 +275,11 @@ object SimOps {
     // MultimodalOps.imageDupPairs.
     val base = df.select(col("id"), col("vec"),
       struct(blocking.getOrElse(lit(0)).as("k")).as("blk"))
-    val tabbed = (0 until tables).map { t =>
+    // persist: self-join scans twice (see lshCosineTopK)
+    val tabbed = graft.util.Release.persist((0 until tables).map { t =>
       base.withColumn("tbl", lit(t))
         .withColumn("sig", hyperplaneSig(col("vec"), nPlanes, salt = t))
-    }.reduce(_ unionByName _)
-      // persist: self-join scans twice (see lshCosineTopK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.reduce(_ unionByName _))
     val l = tabbed.as("l")
     val r = tabbed.as("r")
     // cosine + threshold filter before the dedup: the distinct shuffles

@@ -166,8 +166,8 @@ object DsirOps {
       // featurize raw ONCE (persisted): the frame feeds both the model
       // fit and the scoring join — featurization (explode + hash) is the
       // dominant cost and would otherwise run twice
-      val rawB = ngramBuckets(raw, id, text, dim, hexChars)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val rawB = graft.util.Release.persist(
+        ngramBuckets(raw, id, text, dim, hexChars))
       val tgtB = ngramBuckets(target, id, text, dim, hexChars)
       val model = fitLogRatioFromBuckets(rawB, tgtB, dim, alpha)
       val docScores = rawB.join(broadcast(model), Seq("bucket"))

@@ -246,9 +246,8 @@ object LmOps {
           (a, b) => struct(a.as("w1h"), b.as("w2h")))).as("z"))
         .select(col("z.w1h").as("w1h"), col("z.w2h").as("w2h"))
     val tb = bigramPairs(train, trainText)
-    val cb = tb.groupBy(col("w1h"), col("w2h"))
-      .agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cb = graft.util.Release.persist(tb.groupBy(col("w1h"), col("w2h"))
+      .agg(count(lit(1)).as("c12")))
     val c1t = cb.groupBy(col("w1h"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))
     val ncont = cb.groupBy(col("w2h"))
@@ -320,10 +319,11 @@ object LmOps {
     // cut aggregation AND the bucket assignment) and LM scoring is the
     // expensive part — without this the whole count-model pipeline
     // runs twice. Tiny rows (doc_id, ppl); spills if a corpus doesn't
-    // fit. Blocks are reclaimed by Release callers / session hygiene.
-    val scored = ngramLmScore(train, trainText, df, id, text, n, alpha)
-      .select(col("doc_id"), col("ppl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // fit. The caller's innermost Release scope releases it (a plain
+    // persist outside any scope).
+    val scored = graft.util.Release.persist(
+      ngramLmScore(train, trainText, df, id, text, n, alpha)
+        .select(col("doc_id"), col("ppl")))
     val withG = df.select(id.as("doc_id"), group.as("grp"))
       .join(scored, Seq("doc_id"))
     def cut(p: Double): Column =

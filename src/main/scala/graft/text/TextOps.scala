@@ -988,13 +988,12 @@ object TextOps {
     val rows = numHashes / bands
     // signing is the dominant per-row cost: spread a single-split scan
     // before it (no-op when the input already parallelizes)
-    val sigs = graft.util.Spread.byKey(
+    val sigs = graft.util.Release.persist(graft.util.Spread.byKey(
         df.select(id.as("i"),
           struct(blocking.getOrElse(lit(0)).as("k")).as("blk"),
           text.as("__txt")), col("i"))
       .select(col("i"), col("blk"),
-        minHashSignature(col("__txt"), k, numHashes).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        minHashSignature(col("__txt"), k, numHashes).as("sig")))
     val bandT = sigs.select(col("i"), col("blk"),
         explode(lshBands(col("sig"), bands, rows)).as("band"))
       .select(col("i"), col("blk"),
@@ -1117,9 +1116,8 @@ object TextOps {
                                  bands: Int = 16,
                                  blocking: Option[Column] = None)
       : DataFrame = graft.util.Release.scoped(newDf.sparkSession) {
-    val nb = minHashBandTable(newDf, id, text, k, numHashes, bands,
-        blocking)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nb = graft.util.Release.persist(minHashBandTable(newDf, id, text,
+      k, numHashes, bands, blocking))
     incrementalMinHashDupPairsFromBands(nb, corpusBands, threshold)
   }
 
@@ -1212,10 +1210,10 @@ object TextOps {
                       maxDist: Int,
                       blocking: Option[Column] = None): DataFrame =
       graft.util.Release.scoped(df.sparkSession) {
-    val banded = simHashBandTable(df, id, text, blocking)
-      // persist: the self-join scans this twice; without it both sides
-      // re-tokenize + re-simHash every document
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // persist: the self-join scans this twice; without it both sides
+    // re-tokenize + re-simHash every document
+    val banded = graft.util.Release.persist(
+      simHashBandTable(df, id, text, blocking))
     simHashDupPairsFromBands(banded, maxDist)
   }  // Release.scoped: pair result materialized, simhash cache freed
 
@@ -1297,8 +1295,8 @@ object TextOps {
                                  maxDist: Int,
                                  blocking: Option[Column] = None)
       : DataFrame = graft.util.Release.scoped(newDf.sparkSession) {
-    val nb = simHashBandTable(newDf, id, text, blocking)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nb = graft.util.Release.persist(
+      simHashBandTable(newDf, id, text, blocking))
     incrementalSimHashDupPairsFromBands(nb, corpusBands, maxDist)
   }
 

@@ -169,6 +169,9 @@ object GlobalCumsum {
     }
     val parted = withS.repartitionByRange(p, ords: _*)
       .withColumn(PID, spark_partition_id())
+      // persist-ok: backs the lazily returned frame, so no scope here
+      // can release it; the caller's scope drops its blocks (the entry
+      // stays). Replacing it is ROADMAP direction 4's exec.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // per-partition inclusive cumsum — P-way parallel, zero exchanges:
     // a narrow in-partition sort then one sequential InternalRow scan

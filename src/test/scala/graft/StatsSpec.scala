@@ -282,4 +282,35 @@ class StatsSpec extends AnyFunSuite {
     assert(rc.isNullAt(rc.fieldIndex("cohen_d")))
     assert(approx(rc.getAs[Double]("cliffs_delta"), 0.0))
   }
+
+  test("grouped kruskalWallis is bit-identical across repeats, join " +
+      "strategies and AQE") {
+    import spark.implicits._
+    // 3 groups x 15 levels, tie-heavy values: enough levels that the
+    // order Σ rf²/nf is summed in changes its last bits
+    val df = (0 until 3000).map { i =>
+      (i % 3, s"L${(i * 7) % 15}", ((i * 37) % 101) / 4.0 + (i % 15) * 0.5)
+    }.toDF("g", "lvl", "x")
+    def hs(): Seq[Long] = StatOps.kruskalWallis(df, col("x"), col("lvl"),
+        Seq("g")).select("g", "h").collect()
+      .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1)
+      .map(t => java.lang.Double.doubleToRawLongBits(t._2)).toSeq
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.enabled")
+    val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val runs = try {
+      val default = Seq.fill(3)(hs())
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val noBroadcast = Seq.fill(3)(hs())
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      default ++ noBroadcast ++ Seq.fill(3)(hs())
+    } finally prev.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    assert(runs.head.size == 3)
+    assert(runs.distinct.size == 1,
+      "h differs: " + runs.distinct.map(_.map(java.lang.Double
+        .longBitsToDouble)).mkString(" / "))
+  }
 }
