@@ -136,18 +136,6 @@ object ScaleSweep {
         "semantic_dup_full" -> (() =>
           graft.sim.SimOps.semanticDupPairs(emb, col("id"), col("vec"),
             0.9, nCells = semCells, subBlocks = 2).count()),
-        // the jaccard SCALE path: SSJoin prefix-filter over the same
-        // (source-blocked, J ≥ 0.5) semantics as q_jaccard_dup_pairs'
-        // triangle path. The triangle path's candidate volume is
-        // quadratic in block size (inherent to exact all-pairs within
-        // fixed-cardinality blocks — salt-mode rungs grow block SIZE,
-        // not block count), while the prefix path is linear in true
-        // pair volume: measured 9.8× time / exactly 10× pairs at the
-        // r12 10× step.
-        "jaccard_prefix_full" -> (() =>
-          graft.text.TextOps.jaccardDupPairsPrefix(
-            spark.read.parquet(s"$dir/documents.parquet"),
-            col("doc_id"), col("text"), col("source"), 0.5).count()),
         // the hybrid's LARGE-BLOCK leg, forced (routeThreshold=10):
         // hashed-token SSJoin prefix filter + codegen sorted-merge
         // verify. Its cross-rung slope must stay ~linear (true pair

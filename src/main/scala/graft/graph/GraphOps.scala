@@ -101,20 +101,11 @@ object GraphOps {
     // persisted frame evaluates the kernel exactly once; the collect
     // (small case) and the loop's first checksum (large case) both read
     // the cached blocks.
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-    def dbg[A](label: String)(f: => A): A = {
-      if (!ccDebug) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-    }
     // persist-ok: both branches below unpersist it
     val cached = canonEdges.persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = dbg("count")(cached.count())
+    val edgeCount = cached.count()
     if (localFinishThreshold > 0L && edgeCount <= localFinishThreshold) {
-      val sampled = dbg("collect")(cached.collect())
+      val sampled = cached.collect()
       cached.unpersist(blocking = false)
       // unpack to primitive arrays immediately: every downstream loop
       // (union-find, id dedup) then runs boxing-free — the boxed
@@ -126,9 +117,9 @@ object GraphOps {
         val r = sampled(i); us(i) = r.getLong(0); vs(i) = r.getLong(1)
         i += 1
       }
-      dbg("unionfind+scoped")(graft.util.Release.scoped(spark) {
+      graft.util.Release.scoped(spark) {
         unionFindLabels(spark, us, vs)
-      })
+      }
     }
     else graft.util.Release.scoped(spark) {
     var e = cached
@@ -139,13 +130,11 @@ object GraphOps {
         coalesce(sum(xxhash64(col("u"), col("v"))), lit(0L)).as("h")).head()
       (r.getLong(0), r.getLong(1))
     }
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     var prevSum = checksum(e)
     var converged = false
     var it = 0
     while (!converged && it < maxIter &&
         prevSum._1 > localFinishThreshold) {
-      val t0 = System.nanoTime()
       // localCheckpoint cuts lineage per round (the plan would
       // otherwise grow geometrically — each round references the
       // previous plan several times)
@@ -157,8 +146,6 @@ object GraphOps {
       converged = nextSum == prevSum
       prevSum = nextSum
       it += 1
-      if (debug) println(f"[cc] round $it: $nextSum " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     val labels =
       if (converged) {

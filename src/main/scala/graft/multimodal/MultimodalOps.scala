@@ -583,7 +583,7 @@ object MultimodalOps {
     // (guide §2.5 input skew).
     graft.util.Spread.byKey(df, id)
       .select(id.as("i"),
-        struct(blocking.getOrElse(lit(0)).as("k")).as("blk"),
+        graft.text.BandJoin.blockKey(blocking),
         dHash64(payload).as("ph"))
       .filter(col("ph").isNotNull)
       .select(col("i"), col("blk"), col("ph"),
@@ -607,37 +607,36 @@ object MultimodalOps {
           col("h").bitwiseXOR(lit(m))): _*)).as("h"))
     }
 
-  /** Full self-sweep over a pre-built [[imageBandTable]] — the
-    * re-hash-nothing variant of [[imageDupPairs]]. Probe radius
-    * floor(maxDist/2) capped at 1: maxDist ≤ 1 → plain band equi-join
-    * (still exact); ≥ 2 → 33 keys per band on the probe side
+  /** [[imageDupPairs]] over a pre-built [[imageBandTable]]. Probe
+    * radius floor(maxDist/2) capped at 1: maxDist ≤ 1 → plain band
+    * equi-join (still exact); ≥ 2 → 33 keys per band on the probe side
     * (pigeonhole: ham ≤ 3 over 2 bands leaves one band with ham ≤ 1,
     * and the probe ball covers it — exact recall for maxDist ≤ 3). */
   def imageDupPairsFromBands(bands: DataFrame, maxDist: Int): DataFrame =
-    probeExpand(bands, maxDist).as("l").join(bands.as("r"),
-        col("l.b") === col("r.b") && col("l.h") === col("r.h") &&
-          col("l.blk") === col("r.blk") && col("l.i") < col("r.i"))
-      .select(col("l.i").as("id1"), col("r.i").as("id2"),
-        bit_count(col("l.ph").bitwiseXOR(col("r.ph"))).as("hamming"))
+    imageSweep(bands, None, maxDist)
+
+  /** The one image sweep: [[graft.text.BandJoin]] candidates with the
+    * 1-bit probe expansion on the fresh side only (the ball is
+    * symmetric: a corpus key within 1 bit of a fresh key is hit by the
+    * fresh side's probes, so corpus state stays 2 narrow rows per
+    * image), Hamming-verified on the dHash riding the band rows before
+    * the pair dedup. */
+  private def imageSweep(fresh: DataFrame, corpus: Option[DataFrame],
+                         maxDist: Int): DataFrame =
+    graft.text.BandJoin.candidates(probeExpand(fresh, maxDist), fresh,
+        corpus, bit_count(col("l.ph").bitwiseXOR(col("r.ph"))).as("hamming"))
       .filter(col("hamming") <= maxDist)
       .distinct()
 
   /** Incremental image dedup: near-duplicate pairs (Hamming ≤
     * `maxDist` over dHash64) of a NEW image batch against an existing
     * corpus band table (from [[imageBandTable]]) plus within the
-    * batch itself — the daily-crawl loop for multimodal, twin of
-    * [[graft.text.TextOps.incrementalSimHashDupPairs]] (r15 verdict
+    * batch itself — the daily-crawl loop for multimodal (r15 verdict
     * ask #3). The hash is deterministic, so `corpus pairs ∪ this`
     * equals a full-batch [[imageDupPairs]] over `corpus ∪ new`
     * exactly (ImageHashSpec and the q_incremental_image oracle pin
     * it). Image ids must be distinct across corpus and batch; pairs
-    * normalize to id1 < id2.
-    *
-    * Scale shape: the corpus side is touched ONLY by a hash join on
-    * (band, key, block) — the 1-bit probe expansion runs on the NEW
-    * side alone (the ball is symmetric: a corpus key within 1 bit of
-    * a new key is hit by the new side's probes), so corpus state
-    * stays 2 narrow rows per image and nothing re-decodes. */
+    * normalize to id1 < id2. Nothing in the corpus re-decodes. */
   def incrementalImageDupPairs(newDf: DataFrame, id: Column,
                                payload: Column, corpusBands: DataFrame,
                                maxDist: Int,
@@ -648,25 +647,12 @@ object MultimodalOps {
     incrementalImageDupPairsFromBands(nb, corpusBands, maxDist)
   }
 
-  /** Incremental pair sweep over pre-built image band tables — the
-    * re-hash-nothing variant of [[incrementalImageDupPairs]] for
-    * callers holding both tables. */
+  /** [[incrementalImageDupPairs]] over pre-built band tables, for
+    * callers holding both. */
   def incrementalImageDupPairsFromBands(newBands: DataFrame,
                                         corpusBands: DataFrame,
-                                        maxDist: Int): DataFrame = {
-    val np = probeExpand(newBands, maxDist)
-    def cand(l: DataFrame, r: DataFrame, cond: Column) =
-      l.as("l").join(r.as("r"),
-          col("l.b") === col("r.b") && col("l.h") === col("r.h") &&
-            col("l.blk") === col("r.blk") && cond)
-        .select(least(col("l.i"), col("r.i")).as("id1"),
-          greatest(col("l.i"), col("r.i")).as("id2"),
-          bit_count(col("l.ph").bitwiseXOR(col("r.ph"))).as("hamming"))
-    cand(np, corpusBands, col("l.i") =!= col("r.i"))
-      .union(cand(np, newBands, col("l.i") < col("r.i")))
-      .filter(col("hamming") <= maxDist)
-      .distinct()
-  }
+                                        maxDist: Int): DataFrame =
+    imageSweep(newBands, Some(corpusBands), maxDist)
 
   /** REAL resize: decode, nearest-neighbor resample to `tw`×`th`
     * (src pixel = (x·sw/tw, y·sh/th), integer division — deterministic

@@ -765,19 +765,14 @@ object LinRegOps {
     // before. The final β still satisfies the same (maxIter, tol)
     // contract against the FULL data — the warm start only moves the
     // starting point.
-    val irlsDebug = sys.env.contains("GRAFT_IRLS_DEBUG")
     if (maxIter > 1) {
-      val t0 = System.nanoTime()
       val sampleRows = localCap / (d + 2)
       if (sampleRows > 0 && mRows > 0) {
         val frac = sampleRows.toDouble / mRows // < 1 above the cap
         val sample = data.sample(withReplacement = false, frac, 42L)
           .collect()
         if (sample.nonEmpty) {
-          val (wb, wi) = localIterate(sample, init)
-          betas = wb
-          if (irlsDebug) println(f"[irls] warm-start: ${sample.length} " +
-            f"rows, $wi iters, ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          betas = localIterate(sample, init)._1
         }
       }
     }
@@ -800,7 +795,6 @@ object LinRegOps {
     // in-flight tasks never see a mid-iteration mutation)
     val activeD = Array.fill(k)(true)
     while (iters < maxIter && delta > tol && stall < 2) {
-      val tIt = System.nanoTime()
       val bc = sc.broadcast(betas)
       val bcA = sc.broadcast(activeD.clone())
       // zero value is null, lazily allocated per partition: the real
@@ -892,8 +886,6 @@ object LinRegOps {
       val atFloor = delta < 1e-8 * (1.0 + betaScale)
       if (atFloor && delta >= bestDelta * 0.9) stall += 1 else stall = 0
       bestDelta = math.min(bestDelta, delta)
-      if (irlsDebug) println(f"[irls] iter $iters: delta=$delta%.3e " +
-        f"stall=$stall ${(System.nanoTime() - tIt) / 1e9}%.2f s")
     }
     (betas, iters)
   }

@@ -381,9 +381,7 @@ object CurationQueries extends QueryPack {
     "q_vocab_stats" -> ((s, dir) => {
       // vocabulary shape per source: type count, type-token ratio,
       // hapax fraction — the Zipf-tail signals corpus datasheets report
-      val toks = graft.util.Spread.byKey(
-          t(s, dir, "documents").select(col("source"), col("text"),
-            col("doc_id")), col("doc_id"))
+      val toks = t(s, dir, "documents")
         .select(col("source"),
           explode(filter(split(lower(trim(col("text"))), "\\s+"),
             w => w =!= "")).as("t"))

@@ -269,25 +269,19 @@ object SimOps {
       graft.util.Release.scoped(df.sparkSession) {
     // `blocking` (r15 — dedup-family parity): optional partition
     // column (language, modality, shard); pairs never cross blocks
-    // and bucket occupancy divides across blocks. NULL blocks match
-    // each other (struct-wrapped null-safe key), matching
-    // TextOps.simHashDupPairs/minHashDupPairs and
-    // MultimodalOps.imageDupPairs.
-    val base = df.select(col("id"), col("vec"),
-      struct(blocking.getOrElse(lit(0)).as("k")).as("blk"))
+    // and bucket occupancy divides across blocks. Each (table,
+    // signature) bucket is a (b, h) band of the shared
+    // [[graft.text.BandJoin]] sweep.
+    val base = df.select(col("id").as("i"), col("vec"),
+      graft.text.BandJoin.blockKey(blocking))
     // persist: self-join scans twice (see lshCosineTopK)
     val tabbed = graft.util.Release.persist((0 until tables).map { t =>
-      base.withColumn("tbl", lit(t))
-        .withColumn("sig", hyperplaneSig(col("vec"), nPlanes, salt = t))
+      base.withColumn("b", lit(t))
+        .withColumn("h", hyperplaneSig(col("vec"), nPlanes, salt = t))
     }.reduce(_ unionByName _))
-    val l = tabbed.as("l")
-    val r = tabbed.as("r")
     // cosine + threshold filter before the dedup: the distinct shuffles
     // only surviving narrow rows, never the embedding vectors
-    l.join(r,
-        col("l.tbl") === col("r.tbl") && col("l.sig") === col("r.sig") &&
-          col("l.blk") === col("r.blk") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id1"), col("r.id").as("id2"),
+    graft.text.BandJoin.candidates(tabbed, tabbed, None,
         cosine(col("l.vec"), col("r.vec")).as("cos"))
       .filter(col("cos") >= threshold)
       .distinct()

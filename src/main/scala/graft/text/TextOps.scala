@@ -345,8 +345,8 @@ object TextOps {
     * Tokens are pre-hashed (xxhash64) and sorted in codegen'd Column
     * space so the pair kernel is a primitive sorted-long merge, with a
     * size-ratio prefilter (J ≥ t ⟹ min·/max ≥ t) skipping hopeless
-    * pairs in O(1). For unbounded blocks where even a sub-group doesn't
-    * fit, use [[jaccardDupPairsPrefix]], which never materializes one. */
+    * pairs in O(1). Blocks above `routeThreshold` take the SSJoin
+    * prefix leg instead, which never materializes a block. */
   /** `shingleK = 1` (default) compares word SETS; `shingleK > 1`
     * compares k-word shingle sets — the similarity MinHash estimates —
     * with [[minHashSignature]]'s whole-text edge case for docs of ≤ k
@@ -448,10 +448,10 @@ object TextOps {
                        ga: Int, gb: Int, t: Double) => {
       val n = docs.length
       // fail loud instead of silently OOMing or going quadratic: past
-      // this, raise subBlocks or use jaccardDupPairsPrefix
+      // this, raise subBlocks or lower routeThreshold
       require(n <= 200000,
         s"jaccardDupPairs: bucket of $n docs exceeds the collect cap; " +
-          "raise subBlocks or use jaccardDupPairsPrefix")
+          "raise subBlocks or lower routeThreshold")
       val ids = new Array[Long](n)
       val grp = new Array[Int](n)
       val tok = new Array[Array[Long]](n)
@@ -824,53 +824,6 @@ object TextOps {
         col("jaccard"))
   }
 
-  /** Prefix-filtered exact Jaccard pairs (Chaudhuri et al. SSJoin /
-    * Xiao et al. PPJoin candidate condition): order each doc's tokens
-    * by ascending global document frequency; two sets with J ≥ t MUST
-    * share a token within their first n − ⌈t·n⌉ + 1 tokens, so only
-    * prefix tokens enter the pair join — no quadratic blow-up on
-    * frequent tokens, no block materialization. Candidates are then
-    * verified with the true intersection. The unbounded-block path. */
-  def jaccardDupPairsPrefix(df: DataFrame, id: Column, text: Column,
-                            block: Column, threshold: Double): DataFrame = {
-    val base = df.select(block.as("b"), id.as("i"),
-      array_distinct(split(lower(trim(text)), "\\s+")).as("ws"))
-      .withColumn("nw", size(col("ws")))
-    val words = base.select(col("b"), col("i"), col("nw"),
-      explode(col("ws")).as("w"))
-    // global df per (block, token) → rarity order
-    val dfreq = words.groupBy(col("b"), col("w"))
-      .agg(count(lit(1)).as("df"))
-    val ranked = words.join(dfreq, Seq("b", "w"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("b"), col("i"))
-          .orderBy(col("df"), col("w"))))
-      .withColumn("plen",
-        col("nw") - ceil(col("nw") * threshold).cast("int") + 1)
-      .filter(col("rn") <= col("plen"))
-      .select(col("b"), col("i"), col("w"))
-    // candidate pairs from prefix tokens only
-    val cand = ranked.as("l")
-      .join(ranked.as("r"),
-        col("l.b") === col("r.b") && col("l.w") === col("r.w") &&
-          col("l.i") < col("r.i"))
-      .select(col("l.b").as("b"), col("l.i").as("id1"),
-        col("r.i").as("id2"))
-      .distinct()
-    // verify candidates with the exact intersection
-    val s1 = base.select(col("b"), col("i").as("id1"),
-      col("ws").as("ws1"), col("nw").as("n1"))
-    val s2 = base.select(col("b"), col("i").as("id2"),
-      col("ws").as("ws2"), col("nw").as("n2"))
-    cand.join(s1, Seq("b", "id1")).join(s2, Seq("b", "id2"))
-      .withColumn("common", size(array_intersect(col("ws1"), col("ws2"))))
-      .withColumn("jaccard", col("common") /
-        (col("n1") + col("n2") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("b").as("block"), col("id1"), col("id2"), col("jaccard"))
-  }
-
   // ---- MinHash + LSH ----------------------------------------------------
 
   /** Deterministic 64-bit string hash (splitmix-style avalanche of
@@ -985,38 +938,10 @@ object TextOps {
     // rung that ~10 GB cache's materialization alone took 112 s on
     // 8 GiB executors vs 43 s of pure signing, and the pair legs
     // re-read the wide rows.)
-    val rows = numHashes / bands
-    // signing is the dominant per-row cost: spread a single-split scan
-    // before it (no-op when the input already parallelizes)
-    val sigs = graft.util.Release.persist(graft.util.Spread.byKey(
-        df.select(id.as("i"),
-          struct(blocking.getOrElse(lit(0)).as("k")).as("blk"),
-          text.as("__txt")), col("i"))
-      .select(col("i"), col("blk"),
-        minHashSignature(col("__txt"), k, numHashes).as("sig")))
-    val bandT = sigs.select(col("i"), col("blk"),
-        explode(lshBands(col("sig"), bands, rows)).as("band"))
-      .select(col("i"), col("blk"),
-        col("band._1").as("b"), col("band._2").as("h"))
-    // candidate dedup BEFORE the signature comparison (same rationale
-    // as minHashDupPairsFromBands: a near-dup pair collides in up to
-    // `bands` buckets; compare once, shuffle two longs)
-    val cand = bandT.as("l")
-      .join(bandT.as("r"),
-        col("l.b") === col("r.b") && col("l.h") === col("r.h") &&
-          col("l.blk") === col("r.blk") && col("l.i") < col("r.i"))
-      .select(col("l.i").as("id1"), col("r.i").as("id2"))
-      .distinct()
-    // inner joins are safe here (unlike FromBands' sliced-table
-    // contract): every candidate id comes from `sigs` by construction
-    cand
-      .join(sigs.select(col("i").as("id1"), col("sig").as("__s1")),
-        Seq("id1"))
-      .join(sigs.select(col("i").as("id2"), col("sig").as("__s2")),
-        Seq("id2"))
-      .select(col("id1"), col("id2"),
-        sigAgreement(col("__s1"), col("__s2")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    val sigs = graft.util.Release.persist(
+      minHashSigs(df, id, text, k, numHashes, blocking))
+    minHashSweep(minHashBands(sigs, Nil, bands, numHashes / bands), None,
+      sigs, threshold)
   }  // Release.scoped: pair result materialized, signature cache freed
 
   /** Pair-finding over an existing band table (from
@@ -1025,47 +950,8 @@ object TextOps {
     * of the same persisted table. Semantically identical to
     * [[minHashDupPairs]] on the documents the table was built from. */
   def minHashDupPairsFromBands(buckets: DataFrame,
-                               threshold: Double): DataFrame = {
-    // Candidate pairs are DEDUPED before any signature comparison: a
-    // near-dup pair collides in up to `bands` buckets, and duplicate-
-    // heavy corpora make colliding occurrences explode quadratically
-    // per bucket — comparing signatures per occurrence (the previous
-    // shape) re-ran the 128-slot comparison up to 16× per pair AND
-    // carried two 1 KB arrays through the join. Now the band join
-    // emits only (id1, id2), the distinct shuffles two longs, and
-    // signatures are fetched once per surviving pair from the band-0
-    // slice of the same table (every doc has a band 0 — a narrow
-    // cached filter, no extra signing, no shuffle to build).
-    val cand = buckets.select(col("i"), col("blk"), col("b"), col("h"))
-      .as("l")
-      .join(buckets.select(col("i"), col("blk"), col("b"), col("h"))
-          .as("r"),
-        col("l.b") === col("r.b") && col("l.h") === col("r.h") &&
-          col("l.blk") === col("r.blk") && col("l.i") < col("r.i"))
-      .select(col("l.i").as("id1"), col("r.i").as("id2"))
-      .distinct()
-    val sigs = buckets.filter(col("b") === 0)
-      .select(col("i"), col("sig"))
-    // LEFT joins + raise_error guard: if a caller passes a band table
-    // sliced by band WITHOUT band 0 (a storage layout minHashBandTable
-    // explicitly suggests partitioning by), an inner join would
-    // silently return zero pairs. A candidate whose signature is
-    // missing instead fails loudly at execution time.
-    val missing = raise_error(lit(
-      "minHashDupPairsFromBands: candidate id has no band-0 signature " +
-        "row — the band table slice is missing band 0. Pass a slice " +
-        "that includes b = 0 (signatures are fetched from it)."))
-    cand
-      .join(sigs.select(col("i").as("id1"), col("sig").as("__s1")),
-        Seq("id1"), "left")
-      .join(sigs.select(col("i").as("id2"), col("sig").as("__s2")),
-        Seq("id2"), "left")
-      .select(col("id1"), col("id2"),
-        when(col("__s1").isNull || col("__s2").isNull, missing)
-          .otherwise(sigAgreement(col("__s1"), col("__s2")))
-          .as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
+                               threshold: Double): DataFrame =
+    minHashSweep(buckets, None, band0Sigs(buckets), threshold)
 
   /** The persistable LSH state of a corpus: one row per (document,
     * band) with the banded bucket hash AND the full signature —
@@ -1081,18 +967,69 @@ object TextOps {
   def minHashBandTable(df: DataFrame, id: Column, text: Column,
                        k: Int = 3, numHashes: Int = 128,
                        bands: Int = 16,
-                       blocking: Option[Column] = None): DataFrame = {
-    val rows = numHashes / bands
-    graft.util.Spread.byKey(
-        df.select(id.as("i"),
-          struct(blocking.getOrElse(lit(0)).as("k")).as("blk"),
-          text.as("__txt")), col("i"))
-      .select(col("i"), col("blk"),
-        minHashSignature(col("__txt"), k, numHashes).as("sig"))
-      .select(col("i"), col("blk"), col("sig"),
-        explode(lshBands(col("sig"), bands, rows)).as("band"))
-      .select(col("i"), col("blk"), col("sig"),
-        col("band._1").as("b"), col("band._2").as("h"))
+                       blocking: Option[Column] = None): DataFrame =
+    minHashBands(minHashSigs(df, id, text, k, numHashes, blocking),
+      Seq("sig"), bands, numHashes / bands)
+
+  /** (i, blk, sig): one signature row per document. */
+  private def minHashSigs(df: DataFrame, id: Column, text: Column, k: Int,
+                          numHashes: Int, blocking: Option[Column])
+      : DataFrame =
+    df.select(id.as("i"), BandJoin.blockKey(blocking),
+      minHashSignature(text, k, numHashes).as("sig"))
+
+  /** Signature rows → one row per band: (i, blk, keep*, b, h). */
+  private def minHashBands(sigs: DataFrame, keep: Seq[String], bands: Int,
+                           rows: Int): DataFrame = {
+    val kept = (Seq("i", "blk") ++ keep).map(col)
+    sigs.select(kept :+ explode(lshBands(col("sig"), bands, rows))
+        .as("band"): _*)
+      .select(kept ++ Seq(col("band._1").as("b"), col("band._2").as("h")): _*)
+  }
+
+  /** The signature of each document in band tables: its band-0 row. */
+  private def band0Sigs(bands: DataFrame): DataFrame =
+    bands.filter(col("b") === 0).select(col("i"), col("sig"))
+
+  /** The one MinHash sweep: [[BandJoin]] candidates over (i, blk, b, h)
+    * of `fresh` (and `corpus`), then signatures `sigs` (i, sig) fetched
+    * once per surviving pair.
+    *
+    * Candidate pairs are DEDUPED before any signature comparison: a
+    * near-dup pair collides in up to `bands` buckets, and duplicate-
+    * heavy corpora make colliding occurrences explode quadratically
+    * per bucket — comparing per occurrence re-ran the 128-slot
+    * comparison up to 16× per pair AND carried two 1 KB arrays through
+    * the join. The band join emits only (id1, id2), the distinct
+    * shuffles two longs.
+    *
+    * LEFT joins + raise_error guard: if a caller passes a band table
+    * sliced by band WITHOUT band 0 (a storage layout
+    * [[minHashBandTable]] explicitly suggests partitioning by), an
+    * inner join would silently drop every pair of the slice's
+    * documents. A candidate whose signature is missing instead fails
+    * loudly at execution time. */
+  private def minHashSweep(fresh: DataFrame, corpus: Option[DataFrame],
+                           sigs: DataFrame, threshold: Double)
+      : DataFrame = {
+    def narrow(df: DataFrame) =
+      df.select(col("i"), col("blk"), col("b"), col("h"))
+    val nf = narrow(fresh)
+    val cand = BandJoin.candidates(nf, nf, corpus.map(narrow)).distinct()
+    val missing = raise_error(lit(
+      "minhash sweep: candidate id has no band-0 signature row — the " +
+        "band table slice is missing band 0. Pass a slice that " +
+        "includes b = 0 (signatures are fetched from it)."))
+    cand
+      .join(sigs.select(col("i").as("id1"), col("sig").as("__s1")),
+        Seq("id1"), "left")
+      .join(sigs.select(col("i").as("id2"), col("sig").as("__s2")),
+        Seq("id2"), "left")
+      .select(col("id1"), col("id2"),
+        when(col("__s1").isNull || col("__s2").isNull, missing)
+          .otherwise(sigAgreement(col("__s1"), col("__s2")))
+          .as("est_jaccard"))
+      .filter(col("est_jaccard") >= threshold)
   }
 
   /** Incremental MinHash-LSH dedup: near-duplicate pairs of a NEW
@@ -1121,39 +1058,15 @@ object TextOps {
     incrementalMinHashDupPairsFromBands(nb, corpusBands, threshold)
   }
 
-  /** Incremental pair sweep over pre-built band tables — the re-sign-
-    * nothing variant of [[incrementalMinHashDupPairs]] for callers
-    * holding both tables (e.g. one persisted corpus table sliced into
+  /** [[incrementalMinHashDupPairs]] over pre-built band tables, for
+    * callers holding both (e.g. one persisted corpus table sliced into
     * snapshots). */
   def incrementalMinHashDupPairsFromBands(newBands: DataFrame,
                                           corpusBands: DataFrame,
                                           threshold: Double)
-      : DataFrame = {
-    // same dedupe-candidates-first shape as minHashDupPairsFromBands
-    def narrow(df: DataFrame) =
-      df.select(col("i"), col("blk"), col("b"), col("h"))
-    def cand(l: DataFrame, r: DataFrame, cond: Column) =
-      narrow(l).as("l").join(narrow(r).as("r"),
-          col("l.b") === col("r.b") && col("l.h") === col("r.h") &&
-            col("l.blk") === col("r.blk") && cond)
-        .select(least(col("l.i"), col("r.i")).as("id1"),
-          greatest(col("l.i"), col("r.i")).as("id2"))
-    val cands = cand(corpusBands, newBands, col("l.i") =!= col("r.i"))
-      .union(cand(newBands, newBands, col("l.i") < col("r.i")))
-      .distinct()
-    val sigs = corpusBands.filter(col("b") === 0)
-      .select(col("i"), col("sig"))
-      .union(newBands.filter(col("b") === 0)
-        .select(col("i"), col("sig")))
-    cands
-      .join(sigs.select(col("i").as("id1"), col("sig").as("__s1")),
-        Seq("id1"))
-      .join(sigs.select(col("i").as("id2"), col("sig").as("__s2")),
-        Seq("id2"))
-      .select(col("id1"), col("id2"),
-        sigAgreement(col("__s1"), col("__s2")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
+      : DataFrame =
+    minHashSweep(newBands, Some(corpusBands),
+      band0Sigs(newBands).union(band0Sigs(corpusBands)), threshold)
 
   /** 64-bit SimHash over word hashes (unit weights). Near-dups have
     * small Hamming distance between simhashes. Runs as a native
@@ -1217,24 +1130,23 @@ object TextOps {
     simHashDupPairsFromBands(banded, maxDist)
   }  // Release.scoped: pair result materialized, simhash cache freed
 
-  /** Full self-sweep over a pre-built [[simHashBandTable]] — the
-    * re-fingerprint-nothing variant of [[simHashDupPairs]] (e.g. for
-    * a persisted corpus snapshot, or for slicing one signed table
-    * into old/new/full sweeps). */
+  /** [[simHashDupPairs]] over a pre-built [[simHashBandTable]] (e.g.
+    * a persisted corpus snapshot, or one signed table sliced into
+    * old/new/full sweeps). */
   def simHashDupPairsFromBands(bands: DataFrame, maxDist: Int)
-      : DataFrame = {
-    val l = bands.as("l")
-    val r = bands.as("r")
-    // hamming filter before the pair-dedup: the distinct then shuffles
-    // only surviving (id1, id2, hamming) rows instead of every
-    // band-collision candidate
-    l.join(r, col("l.b") === col("r.b") && col("l.h") === col("r.h") &&
-        col("l.blk") === col("r.blk") && col("l.i") < col("r.i"))
-      .select(col("l.i").as("id1"), col("r.i").as("id2"),
+      : DataFrame =
+    simHashSweep(bands, None, maxDist)
+
+  /** The one SimHash sweep: [[BandJoin]] candidates, Hamming-verified
+    * on the fingerprints riding the band rows. The filter runs before
+    * the pair dedup, so the distinct shuffles only surviving (id1, id2,
+    * hamming) rows instead of every band-collision candidate. */
+  private def simHashSweep(fresh: DataFrame, corpus: Option[DataFrame],
+                           maxDist: Int): DataFrame =
+    BandJoin.candidates(fresh, fresh, corpus,
         bandHamming128("l", "r").as("hamming"))
       .filter(col("hamming") <= maxDist)
       .distinct()
-  }
 
   /** 128-bit Hamming distance between two aliased
     * [[simHashBandTable]] sides. */
@@ -1255,8 +1167,7 @@ object TextOps {
   def simHashBandTable(df: DataFrame, id: Column, text: Column,
                        blocking: Option[Column] = None): DataFrame = {
     val withSh = graft.util.Spread.byKey(
-        df.select(id.as("i"), text.as("__t"),
-          struct(blocking.getOrElse(lit(0)).as("k")).as("blk")),
+        df.select(id.as("i"), text.as("__t"), BandJoin.blockKey(blocking)),
         col("i"))
       .select(col("i"), simHash128(col("__t")).as("sh"), col("blk"))
     val w0 = element_at(col("sh"), 1)
@@ -1277,8 +1188,8 @@ object TextOps {
   /** Incremental SimHash dedup: near-duplicate pairs (Hamming ≤
     * `maxDist` over the 128-bit fingerprint) of a NEW batch against
     * an existing corpus band table (from [[simHashBandTable]]) plus
-    * within the batch itself — the daily-snapshot crawl-dedup loop,
-    * twin of [[incrementalMinHashDupPairs]]. The hash family is
+    * within the batch itself — the daily-snapshot crawl-dedup loop.
+    * The hash family is
     * deterministic, so `corpus pairs ∪ this` equals a full-batch
     * [[simHashDupPairs]] over `corpus ∪ new` exactly (TextSimSpec and
     * the q_incremental_simhash oracle pin it). Document ids must be
@@ -1300,24 +1211,12 @@ object TextOps {
     incrementalSimHashDupPairsFromBands(nb, corpusBands, maxDist)
   }
 
-  /** Incremental pair sweep over pre-built SimHash band tables — the
-    * re-fingerprint-nothing variant of
-    * [[incrementalSimHashDupPairs]] for callers holding both tables. */
+  /** [[incrementalSimHashDupPairs]] over pre-built band tables, for
+    * callers holding both. */
   def incrementalSimHashDupPairsFromBands(newBands: DataFrame,
                                           corpusBands: DataFrame,
-                                          maxDist: Int): DataFrame = {
-    def cand(l: DataFrame, r: DataFrame, cond: Column) =
-      l.as("l").join(r.as("r"),
-          col("l.b") === col("r.b") && col("l.h") === col("r.h") &&
-            col("l.blk") === col("r.blk") && cond)
-        .select(least(col("l.i"), col("r.i")).as("id1"),
-          greatest(col("l.i"), col("r.i")).as("id2"),
-          bandHamming128("l", "r").as("hamming"))
-    cand(corpusBands, newBands, col("l.i") =!= col("r.i"))
-      .union(cand(newBands, newBands, col("l.i") < col("r.i")))
-      .filter(col("hamming") <= maxDist)
-      .distinct()
-  }
+                                          maxDist: Int): DataFrame =
+    simHashSweep(newBands, Some(corpusBands), maxDist)
 
   /** Per-document TF-IDF scores for every term: tf = term count /
     * document token count; idf = ln((1+N)/(1+df)) + 1 (the smoothed

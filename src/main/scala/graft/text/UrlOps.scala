@@ -63,10 +63,7 @@ object UrlOps {
     * survivorship), plus the duplicate count. One hash aggregation —
     * scales as a normal groupBy on the canonical key. */
   def urlDedup(df: DataFrame, id: Column, url: Column): DataFrame =
-    // URL canonicalization is the per-row cost: spread a single-split
-    // input before it (no-op when the scan already parallelizes)
-    graft.util.Spread.byKey(df.select(id.as("id"), url.as("__u")),
-        col("id"))
+    df.select(id.as("id"), url.as("__u"))
       .select(col("id"), normalizeUrl(col("__u")).as("canonical_url"))
       .filter(col("canonical_url").isNotNull)
       .groupBy(col("canonical_url"))

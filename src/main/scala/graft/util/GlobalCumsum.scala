@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   *   1. `repartitionByRange(P, order)` — parallel range shuffle; equal
   *      keys land in one partition, partition p's keys all precede
   *      partition p+1's. P derives from the plan's LEAF bytes (one
-  *      partition per `graft.spreadChunkBytes`, capped at the session
+  *      partition per 256 KiB, capped at the session
   *      parallelism — the Spread recipe) so tiny rank tables skip the
   *      sampling pass and the 32-way fan-out, while unknown-size
   *      inputs conservatively get full parallelism.
@@ -152,8 +152,7 @@ object GlobalCumsum {
       // rank table at p=2 ran ~1.5× slower than the former 32-way
       // window — 256 KB chunks restore the parallelism where the
       // source is big enough to need it).
-      val chunk = math.max(1L,
-        java.lang.Long.getLong("graft.cumsumChunkBytes", 256L << 10))
+      val chunk = 256L << 10
       val bytes = df.queryExecution.analyzed.collectLeaves()
         .map(_.stats.sizeInBytes).sum
       val byBytes = (bytes + chunk - 1) / chunk

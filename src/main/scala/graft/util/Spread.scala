@@ -29,8 +29,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Spread {
 
+  /** Default leaf bytes per spread partition. */
+  private val ChunkBytes: Long = 4L << 20
+
   /** `df` repartitioned on `key` to a SIZE-PROPORTIONAL partition
-    * count (one per `graft.spreadChunkBytes` of leaf bytes, capped at
+    * count (one per [[ChunkBytes]] of leaf bytes, capped at
     * the session default parallelism) when its leaf statistics say the
     * source is too small for the scan to parallelize yet big enough
     * (≥ 4 chunks) that the kernel stage benefits; `df` unchanged
@@ -43,8 +46,8 @@ object Spread {
   /** [[byKey]] with an explicit per-call chunk size — for kernels
     * whose per-byte cost is far above the default calibration (e.g.
     * regex link extraction over small HTML sources), where even a
-    * sub-chunk source deserves the spread. `chunkBytes <= 0` uses the
-    * `graft.spreadChunkBytes` default. */
+    * sub-chunk source deserves the spread. `chunkBytes <= 0` uses
+    * [[ChunkBytes]]. */
   def byKeyChunked(df: DataFrame, chunkBytes: Long, key: Column,
                    more: Column*): DataFrame = {
     // streaming frames: micro-batch parallelism is the source's
@@ -78,16 +81,13 @@ object Spread {
     if (leaves.isEmpty || bytes > cap) return df
     // Size-proportional target (guide §2: derive partitioning from
     // input size, never a core-count constant): one partition per
-    // `graft.spreadChunkBytes` of source. Bench-sized inputs (≤ a few
+    // [[ChunkBytes]] of source. Bench-sized inputs (≤ a few
     // chunks) stay unsplit — measured: for warm kernels over ~1 MB
     // sources the added exchange plus the 32-task downstream stages
     // cost MORE than the single-task kernel, while sweep-scale inputs
     // (tens of MB per unsplittable file) gain the full kernel
     // parallelism they otherwise never get.
-    val chunk =
-      if (chunkBytes > 0L) chunkBytes
-      else math.max(1L,
-        java.lang.Long.getLong("graft.spreadChunkBytes", 4L << 20))
+    val chunk = if (chunkBytes > 0L) chunkBytes else ChunkBytes
     val parts = ((bytes + chunk - 1) / chunk).toInt
     if (parts < 4) df
     else df.repartition(math.min(want, parts), (key +: more): _*)

@@ -816,5 +816,30 @@ class TextSimSpec extends AnyFunSuite {
     assert(found == 1L)
     assert(incNewDf.columns.toSeq ==
       Seq("id1", "id2", "est_jaccard")) // stable output contract
+    // a corpus band slice without band 0 (a band-partitioned store
+    // read with a band filter) must fail loudly: its signatures are
+    // fetched from band 0, and the corpus pairs must not vanish
+    val probeText = "one probe text shared by all three documents"
+    val probeCorpus = TextOps.minHashBandTable(
+      Seq((1L, probeText)).toDF("doc_id", "text"),
+      col("doc_id"), col("text"))
+    val probeNew = TextOps.minHashBandTable(
+      Seq((101L, probeText), (102L, probeText)).toDF("doc_id", "text"),
+      col("doc_id"), col("text"))
+    def probe(corpus: org.apache.spark.sql.DataFrame) =
+      TextOps.incrementalMinHashDupPairsFromBands(probeNew, corpus, 0.6)
+        .select("id1", "id2").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(probe(probeCorpus) == Set((1L, 101L), (1L, 102L), (101L, 102L)))
+    def failsOnBand0(run: => Any): Unit = {
+      val ex = intercept[Exception](run)
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+      assert(msgs.exists(_.contains("missing band 0")),
+        s"expected the band-0 message, got: ${ex.getMessage}")
+    }
+    failsOnBand0(probe(probeCorpus.filter(col("b") =!= 0)))
+    failsOnBand0(TextOps.minHashDupPairsFromBands(
+      probeCorpus.union(probeNew).filter(col("b") =!= 0), 0.6).collect())
   }
 }
