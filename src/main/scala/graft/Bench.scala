@@ -2,6 +2,7 @@ package graft
 import scala.collection.mutable
 import scala.util.Try
 import scala.util.control.NonFatal
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -163,32 +164,34 @@ object Bench {
     def snapshot: Seq[Job] = synchronized { jobs.values.toSeq }
   }
 
+  /** Janino compiles in this JVM so far: each is a miss of Spark's
+    * codegen class cache ([[GraftSession.CodegenCacheEntries]]). */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** `profile`: runs each query once (after the JVM warm-up, with
     * hygiene before each) and prints one summary line per query plus
     * one line per Spark job (start offset, duration, stages, tasks,
     * description). `gap` = wall − in-job time = driver-side planning,
     * codegen and collect work; `build` = DataFrame construction.
-    * `codegen~=` is approximate: Janino compile count × the mean of
+    * `compiles` is the exact count of Janino compiles the query caused;
+    * `codegen~=` is approximate: that count × the mean of
     * CodegenMetrics' sampled (decaying) reservoir, not a true sum. */
   def profile(spark: SparkSession, sfDir: String,
               names: Seq[String]): Boolean = {
     val queries = lookup(names)
     warmJvm(spark)
-    def codegenMs(): Long = {
-      val h = org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME
-      h.getCount * math.round(h.getSnapshot.getMean)
-    }
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
     try queries.map { case (n, fn) =>
       hygiene(spark)
       log.clear()
-      val cg0 = codegenMs()
+      val c0 = compiles()
       val t0Ms = System.currentTimeMillis()
       val (build, df) = timed(fn(spark, sfDir))
       val (run, rows) = timed(materialize(df.get))
-      val cgMs = codegenMs() - cg0
+      val nCompiles = compiles() - c0
+      val cgMs = nCompiles * math.round(
+        CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getMean)
       rows.failed.foreach(e => println(s"[profile] $n " +
         (if (df.isFailure) "CONSTRUCT " else "") + s"FAILED: $e"))
       Thread.sleep(300) // the listener bus is async; let it drain
@@ -200,7 +203,7 @@ object Bench {
         s"rows=${rows.getOrElse(-1L)} " +
         f"jobs=${js.size} injob=$inJob%.3f s " +
         f"gap=${wall - inJob}%.3f s build=$build%.3f s " +
-        f"codegen~=${cgMs / 1e3}%.3f s")
+        f"compiles=$nCompiles codegen~=${cgMs / 1e3}%.3f s")
       js.foreach { j =>
         val dur = if (j.end > 0) (j.end - j.start) / 1e3 else -1.0
         println(f"[profile]   job ${j.id}%3d " +
@@ -219,7 +222,10 @@ object Bench {
     * count as `left_behind` and are freed like a disciplined caller
     * would. Heap is sampled post-GC per query; the JSON line reports
     * the peak, the final residual, and every query that left blocks or
-    * failed. Run at the executor budget: `SPARK_DRIVER_MEM=8g
+    * failed. `compiles` counts each query's Janino compiles (codegen
+    * cache misses) and the JSON line their total: a query that still
+    * compiles on a warm re-run generated code the cache had not seen.
+    * Run at the executor budget: `SPARK_DRIVER_MEM=8g
     * SPARK_GRAFT_CPUS=8`. */
   def soak(spark: SparkSession, sfDir: String): Boolean = {
     val sc = spark.sparkContext
@@ -231,10 +237,13 @@ object Bench {
     var errors = List.empty[String]
     var leavers = List.empty[(String, Int)]
     val t0 = System.nanoTime()
+    val compiles0 = compiles()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val pre = sc.getPersistentRDDs.keySet
+      val c0 = compiles()
       timed(materialize(fn(spark, sfDir)))._2.failed.foreach(e =>
         errors ::= s"$name:${e.getClass.getSimpleName}")
+      val nCompiles = compiles() - c0
       val post = sc.getPersistentRDDs
       val left = (post.keySet -- pre).toSeq
       if (left.nonEmpty) leavers ::= (name, left.size)
@@ -246,7 +255,8 @@ object Bench {
         s"$name: ${residual.size} blocks survived caller unpersist")
       val h = heapMb()
       if (h > peakHeap) peakHeap = h
-      println(f"[soak] $name%-28s heap=${h}%5d MB left_behind=${left.size}")
+      println(f"[soak] $name%-28s heap=${h}%5d MB " +
+        s"left_behind=${left.size} compiles=$nCompiles")
     }
     val total = (System.nanoTime() - t0) / 1e9
     val finalResident = sc.getPersistentRDDs.size
@@ -259,6 +269,7 @@ object Bench {
       s""""n_queries":${SparkEntry.queries.size},""" +
       f""""total_sec":$total%.1f,"peak_heap_mb":$peakHeap,""" +
       s""""final_heap_mb":${heapMb()},""" +
+      s""""compiles":${compiles() - compiles0},""" +
       s""""final_resident_rdds":$finalResident,""" +
       s""""errors":[$er],"left_behind":{$lv}}""")
     errors.isEmpty

@@ -908,10 +908,14 @@ object TextOps {
   }
 
   /** Estimated Jaccard of two minhash signatures: the fraction of
-    * agreeing permutation slots (the unbiased MinHash estimator). */
+    * agreeing permutation slots (the unbiased MinHash estimator).
+    * Marked nondeterministic only to keep the optimizer from inlining
+    * it: a deterministic alias is substituted into the `>= threshold`
+    * filter pushed below its Project, and the 128-slot zip then ran
+    * twice per candidate pair (Filter and Project). */
   private val sigAgreement = udf { (a: Seq[Long], b: Seq[Long]) =>
     a.zip(b).count { case (x, y) => x == y }.toDouble / a.length
-  }
+  }.asNondeterministic()
 
   /** MinHash-LSH near-duplicate candidate pairs: sign → band → bucket
     * self-join → estimated jaccard from signature agreement ≥ threshold.

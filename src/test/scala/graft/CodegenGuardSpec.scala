@@ -12,7 +12,9 @@ import graft.ops.{MetricOps, StatOps}
   * compile. A subtree Janino rejects ("Code grows beyond 64 KB") falls
   * back to interpreted execution without failing the query, so only a
   * compile of each subtree shows it: codegenStringSeq reports
-  * maxMethodCodeSize = -1 for a class that did not compile. */
+  * maxMethodCodeSize = -1 for a class that did not compile. And a warm
+  * re-run of a session's plans must compile nothing: Spark's codegen
+  * class cache holds [[GraftSession.CodegenCacheEntries]] entries. */
 class CodegenGuardSpec extends AnyFunSuite {
   lazy val spark = GraftSession.builder("4").getOrCreate()
 
@@ -50,5 +52,27 @@ class CodegenGuardSpec extends AnyFunSuite {
       assertCompiles(s"multiRocAuc($groups, weighted=$weighted)",
         MetricOps.multiRocAuc(events, col("user_id") % 3, col("probs"), 3,
           groups, weighted))
+  }
+
+  test("a warm re-run of plans needing more than Spark's default 100 " +
+      "codegen cache entries compiles nothing") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    // graftbench's analytics queries: 124 compiled classes when this
+    // spec runs alone (fewer after specs that compile some of the same
+    // classes), so at 100 entries the second round recompiles most
+    val dir = "/root/testdata/sf0.001"
+    val names = Seq("q_roc_auc", "q_multi_roc_auc", "q_spearman",
+      "q_normal_test", "q_ridge", "q_rolling_lin_reg", "q_kendall_tau",
+      "q_topk_group")
+    def round(): Long = {
+      val c0 = Bench.compiles()
+      for (n <- names) graft.util.Release.scopedValue(spark)(
+        SparkEntry.queries(n)(spark, dir).write.format("noop")
+          .mode("overwrite").save())
+      Bench.compiles() - c0
+    }
+    round()
+    assert(round() == 0)
   }
 }

@@ -437,6 +437,17 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(4000))
   }
 
+  test("minhash sweep evaluates the signature agreement once per " +
+    "candidate pair: the threshold filter reads the projected value") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val bands = graft.text.TextOps.minHashBandTable(docs, col("doc_id"),
+      col("text"))
+    val plan = graft.text.TextOps.minHashDupPairsFromBands(bands, 0.5)
+      .queryExecution.executedPlan.toString
+    val agreements = raw"UDF\(__s1#\d+, __s2#\d+\)".r.findAllIn(plan).size
+    assert(agreements == 1, plan)
+  }
+
   test("urlDedup is one hash aggregation over a narrow projection " +
     "of the scan") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
