@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions
 
 import org.apache.commons.math3.distribution.TDistribution
 
+import graft.linear.Solvers
+
 /** Input row for the Gram aggregate: feature vector (bias already
   * appended by the caller if wanted), target, weight. */
 case class LRIn(x: Seq[Double], y: Double, w: Double)
@@ -26,9 +28,11 @@ case class LinRegResult(coeffs: Seq[Double], stdErr: Seq[Double],
   * any scale. merge = elementwise add (associative & commutative — the
   * property the reference never had to prove single-node).
   *
-  * finish() solves (X'WX + λI)β = X'Wy by Gaussian elimination with
-  * partial pivoting and derives the report statistics from the same
-  * Gram matrix: var(β̂) = σ²(X'WX)⁻¹, σ² = SSR/(n−d).
+  * finish() inverts X'WX + λI with [[graft.linear.Solvers.gaussJordan]]
+  * (the one Gram elimination kernel; see its object doc for the
+  * floors), takes β = (X'WX + λI)⁻¹X'Wy and derives the report
+  * statistics from the same Gram matrix: var(β̂) = σ²(X'WX)⁻¹,
+  * σ² = SSR/(n−d).
   */
 class LinRegAgg(d: Int, lambda: Double,
                 singularXTol: Double = 1e-12)
@@ -72,10 +76,9 @@ class LinRegAgg(d: Int, lambda: Double,
     val n = b(szXtX + d + 3)
     if (n < d) return LinRegResult(Nil, Nil, Nil, Nil,
       Double.NaN, Double.NaN, n.toLong)
-    // A = XtX + λI (copy), aug = [A | I] for inverse
+    // aug = [XtX + λI | I]: the elimination leaves A⁻¹ on the right
     val a = Array.ofDim[Double](d, 2 * d)
     var i = 0
-    var maxDiag = 0.0
     // Σ ln(diag) for the reference's scale-invariant rank gate; a
     // non-positive diagonal is a zero-variance column → always gated
     // (lr_solvers.rs:347 faer_solve_lr_gated)
@@ -85,7 +88,6 @@ class LinRegAgg(d: Int, lambda: Double,
       while (j < d) { a(i)(j) = b(i * d + j); j += 1 }
       a(i)(i) += lambda
       a(i)(d + i) = 1.0
-      maxDiag = math.max(maxDiag, math.abs(a(i)(i)))
       if (singularXTol > 0.0) {
         if (a(i)(i) <= 0.0) return LinRegResult(Nil, Nil, Nil, Nil,
           Double.NaN, Double.NaN, n.toLong)
@@ -93,52 +95,21 @@ class LinRegAgg(d: Int, lambda: Double,
       }
       i += 1
     }
-    // Gauss-Jordan with partial pivoting → A⁻¹ in the right half.
-    // |det(A)| = Π |pivots| accumulates in log space alongside — the
-    // elimination IS our factorization, so the determinant is free,
-    // exactly as the reference reads it off the QR R / SVD S /
-    // Cholesky L diagonals (lr_solvers.rs:358).
-    var lnDet = 0.0
-    var col = 0
-    while (col < d) {
-      var piv = col
-      var r = col + 1
-      while (r < d) {
-        if (math.abs(a(r)(col)) > math.abs(a(piv)(col))) piv = r
-        r += 1
-      }
-      // Singular-design gate (reference singular_x_tol, default
-      // 1e-12, lr_solvers.rs): a pivot vanishing RELATIVE to the
-      // Gram's scale means rank deficiency (e.g. collinear features);
-      // float noise makes it tiny-but-nonzero, and dividing through
-      // would return huge garbage coefficients. Degenerate result
-      // instead, like the exact-zero case. Set singularXTol = 0 to
-      // disable (min-norm-ish behavior of plain elimination).
-      if (math.abs(a(piv)(col)) <= singularXTol * maxDiag)
-        return LinRegResult(Nil, Nil, Nil, Nil, Double.NaN, Double.NaN,
-          n.toLong)
-      if (piv != col) { val t = a(piv); a(piv) = a(col); a(col) = t }
-      val pv = a(col)(col)
-      lnDet += math.log(math.abs(pv))
-      var j = 0
-      while (j < 2 * d) { a(col)(j) /= pv; j += 1 }
-      r = 0
-      while (r < d) {
-        if (r != col && a(r)(col) != 0.0) {
-          val f = a(r)(col)
-          var j2 = 0
-          while (j2 < 2 * d) { a(r)(j2) -= f * a(col)(j2); j2 += 1 }
-        }
-        r += 1
-      }
-      col += 1
-    }
+    // Singular-design gate (reference singular_x_tol, default 1e-12,
+    // lr_solvers.rs): a pivot at or under singularXTol·max|Aᵢᵢ| means
+    // rank deficiency, and the result is degenerate, like the
+    // exact-zero case (singularXTol = 0 gates only that one). The
+    // elimination IS our factorization, so |det(A)| = Π |pivots| comes
+    // back free, exactly as the reference reads it off the QR R / SVD
+    // S / Cholesky L diagonals (lr_solvers.rs:358).
+    val lnDet = Solvers.gaussJordan(a, Solvers.pivotFloor(a, singularXTol))
     // Relative-determinant gate (expr_linear.py:166 singular_x_tol):
     // ln|det(X'X+λI)| − Σ ln(diag) ≤ ln(tol) ⇒ rank-deficient design →
     // degenerate result, not explosive coefficients. Scale-invariant
     // (Hadamard: rel_det ≤ 1 for PSD) and overflow-safe in log space.
     // tol = 0 disables, matching the reference.
-    if (singularXTol > 0.0 && lnDet - lnDen <= math.log(singularXTol))
+    if (lnDet.isNaN ||
+      singularXTol > 0.0 && lnDet - lnDen <= math.log(singularXTol))
       return LinRegResult(Nil, Nil, Nil, Nil, Double.NaN, Double.NaN,
         n.toLong)
     val inv = Array.tabulate(d, d)((i2, j2) => a(i2)(d + j2))

@@ -10,33 +10,98 @@ package graft.linear
   * design that makes every linear operator in this package scale: data
   * passes happen exactly once, in Spark; iteration happens on d×d
   * matrices.
+  *
+  * Every dense solve of those d×d systems runs one kernel,
+  * [[gaussJordan]]: Gauss–Jordan elimination with partial pivoting on
+  * an augmented matrix, which returns ln|det| and stops at the first
+  * pivot at or under a caller-chosen floor. The pivot rule and the
+  * singularity gate are decided here, once; the callers and their
+  * floors are
+  *  - `LinRegAgg.finish`: [A+λI | I], floor singularXTol·max|Aᵢᵢ|
+  *    ([[pivotFloor]]), and the returned ln|det| feeds its
+  *    relative-determinant gate;
+  *  - `LinRegOps.rollingSolve` (rolling/recursive fits and their
+  *    streaming twin `StreamOps.streamingRollingLR`): [A+λI | X'y],
+  *    floor 1e-12·max|Aᵢᵢ|;
+  *  - `LinRegOps.linRegMultiTarget` ([A | X'Y]) and `hcReport`
+  *    ([A | X'y | I], β and A⁻¹ from one elimination): floor 1e-300;
+  *  - [[solve]] (so [[ridge]], [[nnls]], `Pipeline.linearImputeMulti`,
+  *    `linear.Models` and the IRLS solves in `LinRegOps`): ungated,
+  *    floor [[NoGate]].
+  * Out of it by design: `LinRegAggF32` (single-precision arithmetic is
+  * its contract) and `SeqOps`' banded LU without pivoting.
+  * `SolverLintSpec` keeps pivot searches out of every other source.
   */
 object Solvers {
 
-  /** Gaussian elimination with partial pivoting: solve A x = b
-    * (A destroyed). */
+  /** Floor for [[gaussJordan]] that no pivot is at or under: eliminate
+    * whatever the matrix holds (a zero pivot divides into Inf/NaN). */
+  val NoGate: Double = Double.NegativeInfinity
+
+  /** Gauss–Jordan elimination with partial pivoting, in place. `a`
+    * holds d = `a.length` rows of an augmented matrix [A | R] whose
+    * left d×d block A is reduced to the identity, so each column right
+    * of d ends up as A⁻¹R: R = b gives x, R = I gives A⁻¹, and several
+    * right-hand sides are solved at once with the bits each would get
+    * alone (every column sees the same row operations). Column c
+    * pivots on the first row r ≥ c with the largest |a(r)(c)|.
+    *
+    * Returns ln|det A| = Σ ln|pivot|, or NaN as soon as a pivot has
+    * |p| ≤ `singular` (`a` is then left part-eliminated). A NaN pivot
+    * (a non-finite Gram) is never gated and makes the sum NaN. */
+  def gaussJordan(a: Array[Array[Double]], singular: Double): Double = {
+    val d = a.length
+    var lnDet = 0.0
+    var c = 0
+    while (c < d) {
+      var piv = c
+      var r = c + 1
+      while (r < d) {
+        if (math.abs(a(r)(c)) > math.abs(a(piv)(c))) piv = r
+        r += 1
+      }
+      if (math.abs(a(piv)(c)) <= singular) return Double.NaN
+      if (piv != c) { val t = a(piv); a(piv) = a(c); a(c) = t }
+      val row = a(c)
+      val pv = row(c)
+      lnDet += math.log(math.abs(pv))
+      val w = row.length
+      var j = c
+      while (j < w) { row(j) /= pv; j += 1 }
+      r = 0
+      while (r < d) {
+        val f = a(r)(c)
+        if (r != c && f != 0.0) {
+          val ar = a(r)
+          j = c
+          while (j < w) { ar(j) -= f * row(j); j += 1 }
+        }
+        r += 1
+      }
+      c += 1
+    }
+    lnDet
+  }
+
+  /** The relative singularity floor `tol`·max|Aᵢᵢ| over the left d×d
+    * block of `a` (reference singular_x_tol, lr_solvers.rs): a pivot
+    * vanishing relative to the Gram's scale means rank deficiency,
+    * and float noise would otherwise divide into huge coefficients. */
+  def pivotFloor(a: Array[Array[Double]], tol: Double): Double = {
+    var maxDiag = 0.0
+    var i = 0
+    while (i < a.length) {
+      maxDiag = math.max(maxDiag, math.abs(a(i)(i))); i += 1
+    }
+    tol * maxDiag
+  }
+
+  /** Solve A x = b, ungated ([[gaussJordan]] on a copy of [A | b]). */
   def solve(aIn: Array[Array[Double]], bIn: Array[Double]): Array[Double] = {
     val d = bIn.length
-    val a = aIn.map(_.clone())
-    val b = bIn.clone()
-    for (c <- 0 until d) {
-      var p = c
-      for (r <- c + 1 until d) if (math.abs(a(r)(c)) > math.abs(a(p)(c))) p = r
-      val t = a(c); a(c) = a(p); a(p) = t
-      val tb = b(c); b(c) = b(p); b(p) = tb
-      for (r <- c + 1 until d) {
-        val f = a(r)(c) / a(c)(c)
-        for (c2 <- c until d) a(r)(c2) -= f * a(c)(c2)
-        b(r) -= f * b(c)
-      }
-    }
-    val x = new Array[Double](d)
-    for (c <- d - 1 to 0 by -1) {
-      var s = b(c)
-      for (c2 <- c + 1 until d) s -= a(c)(c2) * x(c2)
-      x(c) = s / a(c)(c)
-    }
-    x
+    val a = Array.tabulate(d)(i => aIn(i) :+ bIn(i))
+    gaussJordan(a, NoGate)
+    Array.tabulate(d)(i => a(i)(d))
   }
 
   /** OLS/ridge: (X'X + λI)β = X'y. */

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.linear.Solvers
+
 /** Regression ops that stay in pure Column algebra (SURVEY §2.9).
   * Multi-feature exact OLS lives in [[graft.agg.LinRegAgg]]; here are the
   * closed-form single-feature paths and their rolling/expanding variants,
@@ -254,16 +256,26 @@ object LinRegOps {
         }
         var i = 0
         while (i < dTot) { a(i)(i) += lambda; i += 1 }
-        // relative pivot gate (reference singular_x_tol): a nearly-
-        // collinear window yields finite-but-huge garbage without it —
-        // the NaN/Inf check below only catches EXACT singularity
-        val beta = solveGated(a, dTot)
-        if (beta == null || beta.exists(b => b.isNaN || b.isInfinite))
-          null
-        else beta.toSeq
+        rollingSolve(a)
       }
     }
     df.withColumn(out, solver(packed))
+  }
+
+  /** One window's coefficients from its [X'X + λI | X'y]: null when a
+    * pivot is at or under 1e-12·max|Aᵢᵢ| (reference singular_x_tol; a
+    * nearly collinear window otherwise yields finite-but-huge garbage)
+    * or when the solution is not finite. Shared by [[rollingLinReg]],
+    * [[recursiveLinReg]] and their streaming twin
+    * `StreamOps.streamingRollingLR`, so batch and stream gate the same
+    * windows. */
+  private[graft] def rollingSolve(a: Array[Array[Double]]): Seq[Double] = {
+    val d = a.length
+    if (Solvers.gaussJordan(a, Solvers.pivotFloor(a, 1e-12)).isNaN) null
+    else {
+      val beta = Array.tabulate(d)(i => a(i)(d))
+      if (beta.exists(b => b.isNaN || b.isInfinite)) null else beta.toSeq
+    }
   }
 
   /** Per-row prediction + residual from a per-group OLS/ridge fit
@@ -351,34 +363,7 @@ object LinRegOps {
         for (t <- 0 until m; j2 <- 0 until dTot)
           a(j2)(dTot + t) = p(nGram + t * dTot + j2)
         // one Gauss-Jordan over [A | Y'X] solves every target at once
-        var c = 0
-        var singular = false
-        while (c < dTot && !singular) {
-          var piv = c
-          var r = c + 1
-          while (r < dTot) {
-            if (math.abs(a(r)(c)) > math.abs(a(piv)(c))) piv = r
-            r += 1
-          }
-          if (math.abs(a(piv)(c)) < 1e-300) singular = true
-          else {
-            if (piv != c) { val t0 = a(piv); a(piv) = a(c); a(c) = t0 }
-            val pv = a(c)(c)
-            var j3 = c
-            while (j3 < dTot + m) { a(c)(j3) /= pv; j3 += 1 }
-            r = 0
-            while (r < dTot) {
-              if (r != c && a(r)(c) != 0.0) {
-                val f = a(r)(c)
-                var j4 = c
-                while (j4 < dTot + m) { a(r)(j4) -= f * a(c)(j4); j4 += 1 }
-              }
-              r += 1
-            }
-          }
-          c += 1
-        }
-        if (singular) null
+        if (Solvers.gaussJordan(a, 1e-300).isNaN) null
         else Seq.tabulate(m)(t => Seq.tabulate(dTot)(i => a(i)(dTot + t)))
       }
     }
@@ -444,22 +429,25 @@ object LinRegOps {
     case class Fit(key: Seq[Any], n: Long, beta: Array[Double],
                    ainv: Array[Array[Double]])
     val fits = pass1.flatMap { r =>
-      val a = Array.ofDim[Double](dTot, dTot)
+      // one elimination of [A | X'y | I] gives β and A⁻¹ together
+      val aug = Array.ofDim[Double](dTot, 2 * dTot + 1)
       for (j <- 0 until dTot; k <- j until dTot) {
         val v = r.getDouble(r.fieldIndex(s"_g${j}_$k"))
-        a(j)(k) = v; a(k)(j) = v
+        aug(j)(k) = v; aug(k)(j) = v
       }
-      val xy = Array.tabulate(dTot)(j => r.getDouble(r.fieldIndex(s"_xy$j")))
+      for (j <- 0 until dTot) {
+        aug(j)(dTot) = r.getDouble(r.fieldIndex(s"_xy$j"))
+        aug(j)(dTot + 1 + j) = 1.0
+      }
       val n = r.getLong(r.fieldIndex("_n"))
-      val aug = Array.tabulate(dTot)(j =>
-        Array.tabulate(dTot + 1)(k => if (k < dTot) a(j)(k) else xy(j)))
-      val beta = solveInPlace(aug, dTot)
-      val inv = invert(a, dTot)
+      val singular = Solvers.gaussJordan(aug, 1e-300).isNaN
+      val beta = Array.tabulate(dTot)(j => aug(j)(dTot))
       // n > dTot: classical sigma^2 divides by n − d, and HC2/HC3
       // leverages hit 1 exactly when a group is saturated
-      if (n <= dTot || beta.exists(b => b.isNaN || b.isInfinite) ||
-        inv == null) None
-      else Some(Fit(groupNames.indices.map(r.get), n, beta, inv))
+      if (n <= dTot || singular ||
+        beta.exists(b => b.isNaN || b.isInfinite)) None
+      else Some(Fit(groupNames.indices.map(r.get), n, beta,
+        Array.tabulate(dTot, dTot)((j, k) => aug(j)(dTot + 1 + k))))
     }
     if (fits.isEmpty)
       throw new IllegalStateException("hcReport: every group singular")
@@ -538,39 +526,6 @@ object LinRegOps {
             org.apache.spark.sql.types.DoubleType))))
     spark.createDataFrame(
       spark.sparkContext.parallelize(outRows.toSeq, 1), schema)
-  }
-
-  /** Gauss–Jordan inverse; null when singular. */
-  private def invert(a0: Array[Array[Double]], d: Int)
-      : Array[Array[Double]] = {
-    val a = Array.tabulate(d)(j =>
-      Array.tabulate(2 * d)(k =>
-        if (k < d) a0(j)(k) else if (k - d == j) 1.0 else 0.0))
-    var c = 0
-    while (c < d) {
-      var piv = c
-      var r = c + 1
-      while (r < d) {
-        if (math.abs(a(r)(c)) > math.abs(a(piv)(c))) piv = r
-        r += 1
-      }
-      if (math.abs(a(piv)(c)) < 1e-300) return null
-      if (piv != c) { val t = a(piv); a(piv) = a(c); a(c) = t }
-      val pv = a(c)(c)
-      var j = c
-      while (j < 2 * d) { a(c)(j) /= pv; j += 1 }
-      r = 0
-      while (r < d) {
-        if (r != c && a(r)(c) != 0.0) {
-          val f = a(r)(c)
-          var j2 = c
-          while (j2 < 2 * d) { a(r)(j2) -= f * a(c)(j2); j2 += 1 }
-        }
-        r += 1
-      }
-      c += 1
-    }
-    Array.tabulate(d)(j => Array.tabulate(d)(k => a(j)(k + d)))
   }
 
   /** Shared IRLS inner loop over a cached primitive-array RDD — the
@@ -955,91 +910,12 @@ object LinRegOps {
     // for back-compat.
     val solve = (xtx: Array[Array[Double]], xty: Array[Double], _: Int) =>
       if (l1 > 0.0)
-        graft.linear.Solvers.elasticNet(xtx, xty, l1 = mCount * l1,
+        Solvers.elasticNet(xtx, xty, l1 = mCount * l1,
           l2 = 0.0, penalize = _ < d - 1)
-      else {
-        val a = Array.tabulate(d, d + 1)((i, j) =>
-          if (j < d) xtx(i)(j) + (if (i == j) lambda else 0.0) else xty(i))
-        solveInPlace(a, d)
-      }
+      else Solvers.ridge(xtx, xty, lambda)
     try irlsEngine(data, 1, d, Array(beta), wz, solve, maxIter, tol,
       knownRows = mRows)._1(0)
     finally { data.unpersist(); cached.unpersist() }
-  }
-
-  /** Gaussian elimination on [A|b] (d×(d+1)), returns x. Shared by
-    * the batch solvers and the streaming rolling twin so the pivot
-    * behavior can never diverge between them; singular systems come
-    * back as NaN/Inf entries for the caller to gate. */
-  private[graft] def solveAugmented(a: Array[Array[Double]], d: Int)
-      : Array[Double] = solveInPlace(a, d)
-
-  /** [[solveInPlace]] with the reference's relative pivot gate
-    * (singular_x_tol = 1e-12, lr_solvers.rs): a pivot vanishing
-    * relative to the Gram diagonal's scale means rank deficiency —
-    * return null instead of dividing float noise into garbage
-    * coefficients. Same contract as LinRegAgg's gate, so batch and
-    * windowed solves can never diverge on degenerate windows. */
-  private[graft] def solveGated(a: Array[Array[Double]], d: Int,
-                                tol: Double = 1e-12): Array[Double] = {
-    var maxDiag = 0.0
-    var i = 0
-    while (i < d) {
-      maxDiag = math.max(maxDiag, math.abs(a(i)(i))); i += 1
-    }
-    var col = 0
-    while (col < d) {
-      var piv = col
-      var r = col + 1
-      while (r < d) {
-        if (math.abs(a(r)(col)) > math.abs(a(piv)(col))) piv = r
-        r += 1
-      }
-      if (math.abs(a(piv)(col)) <= tol * maxDiag) return null
-      if (piv != col) { val t = a(piv); a(piv) = a(col); a(col) = t }
-      val pv = a(col)(col)
-      var j = col
-      while (j <= d) { a(col)(j) /= pv; j += 1 }
-      r = 0
-      while (r < d) {
-        if (r != col && a(r)(col) != 0.0) {
-          val f = a(r)(col)
-          var j2 = col
-          while (j2 <= d) { a(r)(j2) -= f * a(col)(j2); j2 += 1 }
-        }
-        r += 1
-      }
-      col += 1
-    }
-    Array.tabulate(d)(i2 => a(i2)(d))
-  }
-
-  private def solveInPlace(a: Array[Array[Double]], d: Int)
-      : Array[Double] = {
-    var col = 0
-    while (col < d) {
-      var piv = col
-      var r = col + 1
-      while (r < d) {
-        if (math.abs(a(r)(col)) > math.abs(a(piv)(col))) piv = r
-        r += 1
-      }
-      if (piv != col) { val t = a(piv); a(piv) = a(col); a(col) = t }
-      val pv = a(col)(col)
-      var j = col
-      while (j <= d) { a(col)(j) /= pv; j += 1 }
-      r = 0
-      while (r < d) {
-        if (r != col && a(r)(col) != 0.0) {
-          val f = a(r)(col)
-          var j2 = col
-          while (j2 <= d) { a(r)(j2) -= f * a(col)(j2); j2 += 1 }
-        }
-        r += 1
-      }
-      col += 1
-    }
-    Array.tabulate(d)(i => a(i)(d))
   }
 
   /** Per-GROUP binary logistic regression — the reference's headline
@@ -1193,15 +1069,10 @@ object LinRegOps {
           (xtx: Array[Array[Double]], xty: Array[Double], g: Int) => {
             val m = mArr(g)
             if (l1 > 0.0)
-              graft.linear.Solvers.elasticNet(xtx, xty,
+              Solvers.elasticNet(xtx, xty,
                 l1 = m * l1, l2 = m * l2, penalize = _ < d - 1)
-            else {
-              val a = Array.tabulate(d, d + 1)((i, j) =>
-                if (j < d) xtx(i)(j) + (if (i == j && i < d - 1) m * l2
-                  else 0.0)
-                else xty(i))
-              solveInPlace(a, d)
-            }
+            else Solvers.solve(Array.tabulate(d, d)((i, j) => xtx(i)(j) +
+              (if (i == j && i < d - 1) m * l2 else 0.0)), xty)
           }
         try {
           val (fit, it) = irlsEngine(data, k, d,
@@ -1266,15 +1137,10 @@ object LinRegOps {
           val m = mOf(key)
           val nb =
             if (l1 > 0.0)
-              graft.linear.Solvers.elasticNet(xtx, xty,
+              Solvers.elasticNet(xtx, xty,
                 l1 = m * l1, l2 = m * l2, penalize = _ < d - 1)
-            else {
-              val a = Array.tabulate(d, d + 1)((i, j) =>
-                if (j < d) xtx(i)(j) + (if (i == j && i < d - 1) m * l2
-                  else 0.0)
-                else xty(i))
-              solveInPlace(a, d)
-            }
+            else Solvers.solve(Array.tabulate(d, d)((i, j) => xtx(i)(j) +
+              (if (i == j && i < d - 1) m * l2 else 0.0)), xty)
           val old = betas(key)
           var dm = 0.0
           var i = 0

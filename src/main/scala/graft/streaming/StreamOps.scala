@@ -272,9 +272,6 @@ object StreamOps {
     val nb = TextOps.minHashBandTable(
       newDocs.select(id.cast("long").as("__id"), text.as("__t")),
       col("__id"), col("__t"), k, numHashes, bands)
-    val simUdf = udf { (a: Seq[Long], b: Seq[Long]) =>
-      a.zip(b).count { case (x, y) => x == y }.toDouble / a.length
-    }
     val blockedCorpus = raise_error(lit(
       "streamingIncrementalMinHashDupPairs: the corpus band table " +
         "carries a non-default blocking key, whose cross-block " +
@@ -295,7 +292,7 @@ object StreamOps {
         // raising on default-key rows) instead of the crafted message
         when(!(col("c.blk.k").cast("string") <=> lit("0")),
             blockedCorpus)
-          .otherwise(simUdf(col("n.sig"), col("c.sig")))
+          .otherwise(TextOps.sigAgreement(col("n.sig"), col("c.sig")))
           .as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
     val session = newDocs.sparkSession
@@ -450,8 +447,10 @@ object StreamOps {
     * rolling fit needs, since old rows must be retired exactly) and
     * emits the coefficients of the CURRENT window each micro-batch
     * (null until the window fills, bias last like the batch twin).
-    * Rows are (key, order, features, y), applied in `order` within a
-    * batch; use outputMode(Update). */
+    * Each window is solved by the batch twin's own
+    * [[graft.ops.LinRegOps.rollingSolve]], so a collinear window comes
+    * back null on both. Rows are (key, order, features, y), applied in
+    * `order` within a batch; use outputMode(Update). */
   def streamingRollingLR(rows: Dataset[(String, Long, Seq[Double], Double)],
                          d: Int, window: Int, lambda: Double = 0.0,
                          addBias: Boolean = true)
@@ -503,9 +502,7 @@ object StreamOps {
               }
               var i = 0
               while (i < dTot) { a(i)(i) += lambda; i += 1 }
-              val b = graft.ops.LinRegOps.solveAugmented(a, dTot)
-              if (b.exists(v => v.isNaN || v.isInfinite)) null
-              else b.toSeq
+              graft.ops.LinRegOps.rollingSolve(a)
             }
           RollingLROut(key, n.toLong, beta)
       }

@@ -912,8 +912,9 @@ object TextOps {
     * Marked nondeterministic only to keep the optimizer from inlining
     * it: a deterministic alias is substituted into the `>= threshold`
     * filter pushed below its Project, and the 128-slot zip then ran
-    * twice per candidate pair (Filter and Project). */
-  private val sigAgreement = udf { (a: Seq[Long], b: Seq[Long]) =>
+    * twice per candidate pair (Filter and Project). Shared with
+    * `StreamOps.streamingIncrementalMinHashDupPairs`. */
+  private[graft] val sigAgreement = udf { (a: Seq[Long], b: Seq[Long]) =>
     a.zip(b).count { case (x, y) => x == y }.toDouble / a.length
   }.asNondeterministic()
 

@@ -446,6 +446,18 @@ class PlanSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     val agreements = raw"UDF\(__s1#\d+, __s2#\d+\)".r.findAllIn(plan).size
     assert(agreements == 1, plan)
+    // the streaming twin's corpus leg, planned over a batch Dataset
+    val (corpus, fresh) = (docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 === 1))
+    val corpusBands = graft.text.TextOps.minHashBandTable(corpus,
+      col("doc_id"), col("text"))
+    val streamPlan = graft.streaming.StreamOps
+      .streamingIncrementalMinHashDupPairs(fresh, col("doc_id"),
+        col("text"), corpusBands, 0.5)
+      .queryExecution.executedPlan.toString
+    val streamAgreements =
+      raw"UDF\(sig#\d+, sig#\d+\)".r.findAllIn(streamPlan).size
+    assert(streamAgreements == 1, streamPlan)
   }
 
   test("urlDedup is one hash aggregation over a narrow projection " +

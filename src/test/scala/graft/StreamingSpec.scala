@@ -479,34 +479,50 @@ class StreamingSpec extends AnyFunSuite {
       val x1 = u(i, 1); val x2 = u(i, 2)
       ("k", i.toLong, Seq(x1, x2), 0.7 * x1 - 0.2 * x2 + u(i, 3) / 100.0)
     }
+    // x2 = 2·x1 + 1e-13·noise: every window is collinear, which the
+    // batch fit's relative pivot gate (1e-12·max|Aᵢᵢ|) turns into null
+    // coefficients. (At 1e-9 noise the bias column keeps the pivots
+    // near 1e-9, above that floor, and neither path gates.)
+    def collinearRow(i: Int): (String, Long, Seq[Double], Double) = {
+      val x1 = u(i, 1); val x2 = 2.0 * x1 + 1e-13 * (u(i, 2) - 0.5)
+      ("k", i.toLong, Seq(x1, x2), 0.7 * x1 - 0.2 * x2 + u(i, 3) / 100.0)
+    }
     val window = 9
-    val mem = MemoryStream[(String, Long, Seq[Double], Double)]
-    val out = StreamOps.streamingRollingLR(mem.toDS(), d = 2,
-      window = window)
-    val q = out.writeStream.format("memory").queryName("graft_rlr")
-      .outputMode("update").start()
-    try {
-      mem.addData((0 until 4).map(row): _*)
-      q.processAllAvailable()
-      // window not yet full → null coeffs
-      val early = spark.sql("SELECT beta FROM graft_rlr LIMIT 1").head
-      assert(early.isNullAt(0))
-      mem.addData((4 until 25).map(row): _*)
-      q.processAllAvailable()
-      val got = spark.sql(
-        "SELECT beta FROM graft_rlr WHERE beta IS NOT NULL").collect()
-        .last.getSeq[Double](0)
-      // batch twin over the same 25 rows, last full window
-      val df = (0 until 25).map { i =>
-        val r = row(i); (r._2, r._3(0), r._3(1), r._4)
-      }.toDF("o", "x1", "x2", "y").withColumn("g", lit("k"))
-      val want = graft.ops.LinRegOps.rollingLinReg(df,
-          Seq(col("x1"), col("x2")), col("y"), col("o"), Seq("g"), window)
-        .orderBy(col("o").desc).limit(1)
-        .select("coeffs").head.getSeq[Double](0)
-      got.zip(want).foreach { case (a, b) =>
-        assert(math.abs(a - b) < 1e-9, s"$got vs $want") }
-    } finally q.stop()
+    for ((name, mk) <- Seq("graft_rlr" -> row _,
+        "graft_rlr_collinear" -> collinearRow _)) {
+      val mem = MemoryStream[(String, Long, Seq[Double], Double)]
+      val out = StreamOps.streamingRollingLR(mem.toDS(), d = 2,
+        window = window)
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode("update").start()
+      try {
+        mem.addData((0 until 4).map(mk): _*)
+        q.processAllAvailable()
+        // window not yet full → null coeffs
+        val early = spark.sql(s"SELECT beta FROM $name LIMIT 1").head
+        assert(early.isNullAt(0))
+        mem.addData((4 until 25).map(mk): _*)
+        q.processAllAvailable()
+        // the last emission: the stream's fit of the last full window
+        val last = spark.sql(s"SELECT beta FROM $name").collect().last
+        val got = Option(last.getSeq[Double](0))
+        // batch twin over the same 25 rows, last full window
+        val df = (0 until 25).map { i =>
+          val r = mk(i); (r._2, r._3(0), r._3(1), r._4)
+        }.toDF("o", "x1", "x2", "y").withColumn("g", lit("k"))
+        val want = Option(graft.ops.LinRegOps.rollingLinReg(df,
+            Seq(col("x1"), col("x2")), col("y"), col("o"), Seq("g"), window)
+          .orderBy(col("o").desc).limit(1)
+          .select("coeffs").head.getSeq[Double](0))
+        assert(got.isDefined == want.isDefined, s"$name: $got vs $want")
+        if (name == "graft_rlr") assert(got.isDefined, name)
+        else assert(want.isEmpty, s"$name: the batch fit is not gated")
+        got.zip(want).foreach { case (g, w) =>
+          g.zip(w).foreach { case (a, b) =>
+            assert(math.abs(a - b) < 1e-9, s"$name: $g vs $w") }
+        }
+      } finally q.stop()
+    }
   }
 
   test("streamingRunningStats maintains Welford state across batches") {
