@@ -45,24 +45,33 @@ class LinRegAgg(d: Int, lambda: Double,
   def zero: Array[Double] = new Array[Double](bufLen)
 
   def reduce(b: Array[Double], in: LRIn): Array[Double] = {
-    if (in.x != null && in.x.length == d && !in.y.isNaN) {
-      // the encoder materializes Seq[Double] as List (O(i) apply) —
-      // copy to a primitive array once so the d² loop stays O(d²)
-      val x = in.x.toArray
-      val w = in.w
-      var i = 0
-      while (i < d) {
-        val wxi = w * x(i)
-        var j = 0
-        while (j < d) { b(i * d + j) += wxi * x(j); j += 1 }
-        b(szXtX + i) += wxi * in.y
-        i += 1
-      }
-      b(szXtX + d) += w
-      b(szXtX + d + 1) += w * in.y
-      b(szXtX + d + 2) += w * in.y * in.y
-      b(szXtX + d + 3) += 1.0
+    if (in.x == null || in.x.length != d ||
+        !java.lang.Double.isFinite(in.y)) return b
+    // the encoder materializes Seq[Double] as List (O(i) apply) — copy
+    // to a primitive array once so the d² loop stays O(d²); a NaN/±Inf
+    // feature skips the row like a non-finite target does, instead of
+    // poisoning the group's whole Gram
+    val x = new Array[Double](d)
+    val xs = in.x.iterator
+    var i = 0
+    while (i < d) {
+      x(i) = xs.next()
+      if (!java.lang.Double.isFinite(x(i))) return b
+      i += 1
     }
+    val w = in.w
+    i = 0
+    while (i < d) {
+      val wxi = w * x(i)
+      var j = 0
+      while (j < d) { b(i * d + j) += wxi * x(j); j += 1 }
+      b(szXtX + i) += wxi * in.y
+      i += 1
+    }
+    b(szXtX + d) += w
+    b(szXtX + d + 1) += w * in.y
+    b(szXtX + d + 2) += w * in.y * in.y
+    b(szXtX + d + 3) += 1.0
     b
   }
 

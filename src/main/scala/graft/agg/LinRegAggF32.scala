@@ -56,23 +56,31 @@ class LinRegAggF32(d: Int, lambda: Float,
   }
 
   def reduce(b: Array[Float], in: LRInF): Array[Float] = {
-    if (in.x != null && in.x.length == d && !in.y.isNaN) {
-      // encoder materializes Seq[Float] as List (O(i) apply) — copy once
-      val x = in.x.toArray
-      val w = in.w
-      var i = 0
-      while (i < d) {
-        val wxi = w * x(i)
-        var j = 0
-        while (j < d) { kadd(b, i * d + j, wxi * x(j)); j += 1 }
-        kadd(b, szXtX + i, wxi * in.y)
-        i += 1
-      }
-      kadd(b, szXtX + d, w)
-      kadd(b, szXtX + d + 1, w * in.y)
-      kadd(b, szXtX + d + 2, w * in.y * in.y)
-      kadd(b, szXtX + d + 3, 1.0f)
+    if (in.x == null || in.x.length != d ||
+        !java.lang.Float.isFinite(in.y)) return b
+    // encoder materializes Seq[Float] as List (O(i) apply) — copy once;
+    // a NaN/±Inf feature skips the row like a non-finite target does
+    val x = new Array[Float](d)
+    val xs = in.x.iterator
+    var i = 0
+    while (i < d) {
+      x(i) = xs.next()
+      if (!java.lang.Float.isFinite(x(i))) return b
+      i += 1
     }
+    val w = in.w
+    i = 0
+    while (i < d) {
+      val wxi = w * x(i)
+      var j = 0
+      while (j < d) { kadd(b, i * d + j, wxi * x(j)); j += 1 }
+      kadd(b, szXtX + i, wxi * in.y)
+      i += 1
+    }
+    kadd(b, szXtX + d, w)
+    kadd(b, szXtX + d + 1, w * in.y)
+    kadd(b, szXtX + d + 2, w * in.y * in.y)
+    kadd(b, szXtX + d + 3, 1.0f)
     b
   }
 

@@ -1,9 +1,7 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Product quantization (PQ) for embedding search at rest — the
   * compression half of IVF-PQ (Jégou et al., "Product Quantization
@@ -43,13 +41,15 @@ object PqOps {
   }
 
   /** Train PQ codebooks over a deterministic corpus sample (first
-    * `sampleCap` ids — at real scale pass a hash-sampled frame).
-    * Plain per-subspace Lloyd k-means, deterministic init. */
+    * `sampleCap` ids — at real scale pass a hash-sampled frame; rows
+    * with a null vector are skipped). Plain per-subspace Lloyd k-means,
+    * deterministic init. */
   def trainPq(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
               sampleCap: Int = 20000, iters: Int = 10): PqCodebooks = {
     val sample = corpus
       .select(col("id").cast("long").as("id"),
         col("vec").cast("array<double>").as("v"))
+      .filter(col("v").isNotNull)
       .orderBy(col("id")).limit(sampleCap)
       .collect().map(_.getSeq[Double](1).toArray)
     require(sample.nonEmpty, "trainPq: empty sample")
@@ -162,141 +162,50 @@ object PqOps {
                    cb: PqCodebooks, k: Int, refine: Int = 4,
                    rerank: Option[DataFrame] = None,
                    queryCap: Long = 1000000L): DataFrame = {
-    val spark = codes.sparkSession
-    val nQ = queries
-      .limit(math.min(queryCap + 1, Int.MaxValue - 8L).toInt).count()
-    require(nQ <= queryCap,
-      s"pqCosineTopK: queries frame exceeds queryCap=$queryCap rows; " +
-        "it is collected to the driver and broadcast. Pre-filter the " +
-        "queries or raise queryCap (with driver heap to match).")
+    val op = "pqCosineTopK"
     val books = cb.books
     val m = cb.m; val dsub = cb.dsub; val ksub = cb.ksub
-    val qArr = queries.select(col("id").cast("long"),
-        col("vec").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    // per-query LUTs: dotLUT[s*ksub+c] = <q_s, C_s[c]>; plus |q|²
-    val nrmLUT = {
+    val qs = VectorTopK.collectQueries(queries, queryCap, op, cb.dim)
+    // nrmLUT[s*ksub+c] = |C_s[c]|²; per query dotLUT[s*ksub+c] =
+    // <q_s, C_s[c]>, plus |q|²
+    def lut(f: (Int, Array[Double]) => Double): Array[Double] = {
       val t = new Array[Double](m * ksub)
-      var s = 0
-      while (s < m) {
-        var c = 0
-        while (c < books(s).length) {
-          var n2 = 0.0; var i = 0
-          while (i < dsub) {
-            n2 += books(s)(c)(i) * books(s)(c)(i); i += 1
-          }
-          t(s * ksub + c) = n2; c += 1
-        }
-        s += 1
-      }
+      for (s <- 0 until m; c <- books(s).indices)
+        t(s * ksub + c) = f(s, books(s)(c))
       t
     }
-    val dotLUTs = qArr.map { case (_, qv) =>
-      val t = new Array[Double](m * ksub)
-      var s = 0
-      while (s < m) {
-        var c = 0
-        while (c < books(s).length) {
-          var dot = 0.0; var i = 0
-          while (i < dsub) { dot += qv(s * dsub + i) * books(s)(c)(i); i += 1 }
-          t(s * ksub + c) = dot; c += 1
-        }
-        s += 1
-      }
-      t
-    }
-    val qNorm2 = qArr.map { case (_, v) =>
-      var n2 = 0.0; var i = 0
-      while (i < v.length) { n2 += v(i) * v(i); i += 1 }
-      n2
-    }
-    val bc = spark.sparkContext
-      .broadcast((qArr.map(_._1), dotLUTs, qNorm2, nrmLUT))
+    val nrmLUT = lut((_, b) => VectorTopK.norm2(b))
+    val dotLUTs = qs.map { case (_, qv) =>
+      lut((s, b) => VectorTopK.dot(qv, b, s * dsub)) }
+    val qNorm2 = qs.map(q => VectorTopK.norm2(q._2))
     val keep = k * math.max(1, refine)
-    val localTop = codes
-      .select(col("id").cast("long").as("cid"), col("code"))
-      .rdd.mapPartitions { it =>
-        val (qids, luts, qn2, nlut) = bc.value
-        val best = Array.fill(qids.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-            Ordering.by[(Double, Long), (Double, Long)] {
-              case (c, id) => (-c, id)
-            }))
-        it.foreach { r =>
-          val cid = r.getLong(0)
-          val code = r.getSeq[Int](1).toArray // List at deser: O(1) after
-          // reconstructed norm² — shared across queries for this row
-          var rn2 = 0.0
-          var s = 0
-          while (s < m) { rn2 += nlut(s * ksub + code(s)); s += 1 }
-          var qi = 0
-          while (qi < qids.length) {
-            if (qids(qi) != cid) {
-              val lut = luts(qi)
-              var dot = 0.0
-              var t = 0
-              while (t < m) { dot += lut(t * ksub + code(t)); t += 1 }
-              val est =
-                if (rn2 == 0.0 || qn2(qi) == 0.0) 0.0
-                else dot / math.sqrt(qn2(qi) * rn2)
-              val h = best(qi)
-              if (h.size < keep) h.enqueue((est, cid))
-              else {
-                val (wc, wid) = h.head
-                if (est > wc || (est == wc && cid < wid)) {
-                  h.dequeue(); h.enqueue((est, cid))
-                }
-              }
-            }
-            qi += 1
-          }
+    val adc = VectorTopK.scan(VectorTopK.live(codes, col("code")),
+        qs.map(_._1), (dotLUTs, qNorm2, nrmLUT), keep, "cos_adc") {
+      case (luts, qn2, nlut) => (r, heaps) =>
+        val code = r.getSeq[Int](1).toArray // List at deser: O(1) after
+        VectorTopK.requireLen(op, "code", r.getLong(0), code.length, m)
+        // reconstructed norm² — shared across queries for this row
+        var rn2 = 0.0
+        var s = 0
+        while (s < m) { rn2 += nlut(s * ksub + code(s)); s += 1 }
+        var qi = 0
+        while (qi < luts.length) {
+          val lut = luts(qi)
+          var dot = 0.0
+          var t = 0
+          while (t < m) { dot += lut(t * ksub + code(t)); t += 1 }
+          heaps.report(qi,
+            if (rn2 == 0.0 || qn2(qi) == 0.0) 0.0
+            else dot / math.sqrt(qn2(qi) * rn2))
+          qi += 1
         }
-        best.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (est, cid) => Row(qids(qi), cid, est) }
-        }
-      }
-    val schema = StructType(Seq(StructField("qid", LongType),
-      StructField("cid", LongType), StructField("cos_adc", DoubleType)))
-    val shortlist = spark.createDataFrame(localTop, schema)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("cos_adc").desc, col("cid"))))
-      .filter(col("rk") <= keep)
-      .drop("rk")
+    }
+    val shortlist = VectorTopK.topKPerQuery(adc, "cos_adc", keep)
     rerank match {
-      case None =>
-        shortlist
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("qid"))
-              .orderBy(col("cos_adc").desc, col("cid"))))
-          .filter(col("rk") <= k)
-      case Some(vecs) =>
-        // two-stage: exact cosine on the tiny shortlist only. The
-        // shortlist (|queries|·k·refine rows) broadcasts; the vector
-        // table is joined once — no second full scan of scores.
-        val qb = spark.sparkContext.broadcast(
-          qArr.map { case (id, v) => (id, v) }.toMap)
-        val exactCos = udf { (qid: Long, cv: Seq[Double]) =>
-          val qv = qb.value(qid)
-          val ca = cv.toArray // List at udf call sites: O(1) after
-          var dot = 0.0; var qn = 0.0; var cn = 0.0
-          var i = 0
-          while (i < qv.length) {
-            dot += qv(i) * ca(i); qn += qv(i) * qv(i)
-            cn += ca(i) * ca(i); i += 1
-          }
-          if (qn == 0.0 || cn == 0.0) 0.0 else dot / math.sqrt(qn * cn)
-        }
-        val v = vecs.select(col("id").cast("long").as("cid"),
-          col("vec").cast("array<double>").as("cvec"))
-        broadcast(shortlist).join(v, Seq("cid"))
-          .select(col("qid"), col("cid"),
-            exactCos(col("qid"), col("cvec")).as("cos"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("qid"))
-              .orderBy(col("cos").desc, col("cid"))))
-          .filter(col("rk") <= k)
+      case None => shortlist.filter(col("rk") <= k)
+      // two-stage: exact cosine on the tiny shortlist only
+      case Some(vecs) => VectorTopK.topKPerQuery(
+        VectorTopK.exactRerank(shortlist, queries, vecs), "cos", k)
     }
   }
 }

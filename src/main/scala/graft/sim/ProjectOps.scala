@@ -68,8 +68,8 @@ object ProjectOps {
 
   /** Two-stage ANN through JL compression: coarse cosine top-
     * (candFactor·k) in the `jlDim`-compressed space, then EXACT cosine
-    * re-rank of the shortlist in the original space — the same
-    * shortlist-then-refine shape as [[PqOps.pqCosineTopK]], with JL's
+    * re-rank of the shortlist in the original space — the
+    * shortlist-then-refine of [[PqOps.pqCosineTopK]], with JL's
     * distance-preservation guarantee standing in for codebook quality.
     * Reported cos values are true cosines of a candidate subset
     * (subset ≤ exact is a hard invariant).
@@ -95,25 +95,13 @@ object ProjectOps {
       : DataFrame = {
     require(k >= 1 && candFactor >= 1,
       s"jlCosineTopK: k and candFactor must be >= 1")
-    import org.apache.spark.sql.expressions.Window
     val pq = queries.select(col("id"),
       jlProject(col("vec"), jlDim, inDim, salt).as("vec"))
     val pc = corpus.select(col("id"),
       jlProject(col("vec"), jlDim, inDim, salt).as("vec"))
     val coarse = SimOps.cosineTopK(pq, pc, k * candFactor,
         queryCap = queryCap)
-      .select(col("qid"), col("cid"))
-    val rer = coarse
-      .join(queries.select(col("id").as("qid"),
-        col("vec").cast("array<double>").as("__qv")), Seq("qid"))
-      .join(corpus.select(col("id").as("cid"),
-        col("vec").cast("array<double>").as("__cv")), Seq("cid"))
-      .select(col("qid"), col("cid"),
-        SimOps.cosine(col("__qv"), col("__cv")).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid"))
-    rer.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos"), col("rk"))
+    VectorTopK.topKPerQuery(
+      VectorTopK.exactRerank(coarse, queries, corpus), "cos", k)
   }
 }

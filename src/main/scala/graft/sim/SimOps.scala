@@ -1,14 +1,13 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (Array[Float]).
   *
   * Three paths, same API shape:
-  *  - [[cosineTopK]]: exact brute force — broadcast one side if small,
-  *    else a full shuffle join. The correctness baseline.
+  *  - [[cosineTopK]]: exact brute force — the queries broadcast, the
+  *    corpus streams once ([[VectorTopK]]). The correctness baseline.
   *  - [[lshCosineTopK]]: random-hyperplane LSH bucketing — candidates
   *    only meet inside a bucket, so cost scales as Σ bucket² rather than
   *    n².
@@ -44,137 +43,55 @@ object SimOps {
   def cosineTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                  broadcastCorpus: Boolean = true,
                  queryCap: Long = 100000L): DataFrame = {
-    val nQ = queries
-      .limit(math.min(queryCap + 1, Int.MaxValue - 8L).toInt).count()
-    require(nQ <= queryCap,
-      s"cosineTopK: queries frame exceeds queryCap=$queryCap rows; " +
-        "it is collected to the driver and broadcast. Pre-filter the " +
-        "queries or raise queryCap (with driver heap to match).")
-    // Broadcast the QUERY matrix and scan the corpus once with fused
-    // primitive-array loops: each partition keeps a local top-k per
-    // query, so the shuffle is |queries|·k·partitions candidate rows
-    // instead of |queries|·|corpus| joined rows. Ties break toward the
-    // smaller corpus id, and the arithmetic (sequential dot, then
-    // dot/sqrt(na·nb)) matches the Column-algebra form bit-for-bit.
-    val spark = queries.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val qArr = queries.select(col("id").cast("long"),
-        col("vec").cast("array<double>"))
-      .filter(col("id").isNotNull && col("vec").isNotNull)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val qNorm = qArr.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      s
-    }
-    val bcQ = spark.sparkContext.broadcast((qArr, qNorm))
-    // null rows are never neighbors (the KNN-family convention)
-    val cPre = corpus.select(col("id").cast("long").as("cid"),
-      col("vec").cast("array<double>").as("cv"))
-      .filter(col("cid").isNotNull && col("cv").isNotNull)
-    val localTop = cPre.rdd.mapPartitions { it =>
-      val (qs, qn) = bcQ.value
-      val nq = qs.length
-      // per-query bounded best list (k is small)
-      val best = Array.fill(nq)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-          Ordering.by[(Double, Long), (Double, Long)] {
-            case (c, id) => (-c, id) // max = worst: lowest cos, largest id
-          }))
-      it.foreach { r =>
-        val cid = r.getLong(0)
-        val cv = r.getSeq[Double](1).toArray
-        var nc = 0.0
-        var i = 0
-        while (i < cv.length) { nc += cv(i) * cv(i); i += 1 }
-        var qi = 0
-        while (qi < nq) {
-          val (qid, qv) = qs(qi)
-          if (qid != cid) {
-            var dot = 0.0
-            var j = 0
-            while (j < qv.length) { dot += qv(j) * cv(j); j += 1 }
-            val cos = dot / math.sqrt(qn(qi) * nc)
-            val h = best(qi)
-            if (h.size < k) h.enqueue((cos, cid))
-            else {
-              val (wc, wid) = h.head
-              if (cos > wc || (cos == wc && cid < wid)) {
-                h.dequeue(); h.enqueue((cos, cid))
-              }
-            }
-          }
-          qi += 1
-        }
-      }
-      best.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.iterator.map { case (cos, cid) => Row(qs(qi)._1, cid, cos) }
+    // The shuffle is |queries|·k·partitions candidate rows instead of
+    // |queries|·|corpus| joined rows. The arithmetic (sequential dot,
+    // then dot/sqrt(na·nb)) matches the Column-algebra form bit-for-bit.
+    val qs = VectorTopK.collectQueries(queries, queryCap, "cosineTopK")
+    val state = (qs.map(_._2), qs.map(q => VectorTopK.norm2(q._2)))
+    val top = VectorTopK.scan(VectorTopK.vectors(corpus), qs.map(_._1),
+        state, k, "cos") { case (qv, qn) => (r, heaps) =>
+      val cv = VectorTopK.corpusVec(r, qv(0).length, "cosineTopK")
+      val nc = VectorTopK.norm2(cv)
+      var qi = 0
+      while (qi < qv.length) {
+        heaps.report(qi, VectorTopK.dot(qv(qi), cv) / math.sqrt(qn(qi) * nc))
+        qi += 1
       }
     }
-    val schema = StructType(Seq(StructField("qid", LongType),
-      StructField("cid", LongType), StructField("cos", DoubleType)))
-    val candidates = spark.createDataFrame(localTop, schema)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid"))
-    candidates.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos"), col("rk"))
+    VectorTopK.topKPerQuery(top, "cos", k)
   }
 
   /** Exact cosine THRESHOLD join: every (query, corpus) pair with
     * cos ≥ threshold — the brute-force exact baseline for
     * [[cosineDupPairs]] (and a similarity join in its own right for
-    * corpora small enough to scan). Same shape as [[cosineTopK]]:
-    * queries collected + broadcast (capped, fail-loud), ONE
-    * zero-shuffle pass over the corpus with fused primitive-array
-    * dots; the output is only the surviving pairs. Self-matches
-    * excluded. */
+    * corpora small enough to scan). Queries are collected and
+    * broadcast (capped, fail-loud), then ONE zero-shuffle pass over
+    * the corpus with fused primitive-array dots; the output is only
+    * the surviving pairs. Self-matches excluded. */
   def cosineThresholdJoin(queries: DataFrame, corpus: DataFrame,
                           threshold: Double,
                           queryCap: Long = 100000L): DataFrame = {
-    val nQ = queries
-      .limit(math.min(queryCap + 1, Int.MaxValue - 8L).toInt).count()
-    require(nQ <= queryCap,
-      s"cosineThresholdJoin: queries frame exceeds queryCap=$queryCap " +
-        "rows; it is collected to the driver and broadcast. Pre-filter " +
-        "the queries or raise queryCap (with driver heap to match).")
     val spark = queries.sparkSession
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val qArr = queries.select(col("id").cast("long"),
-        col("vec").cast("array<double>"))
-      .filter(col("id").isNotNull && col("vec").isNotNull)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val qNorm = qArr.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      s
+    val bcQ = {
+      val qs = VectorTopK.collectQueries(queries, queryCap,
+        "cosineThresholdJoin")
+      spark.sparkContext.broadcast((qs, qs.map(q => VectorTopK.norm2(q._2))))
     }
-    val bcQ = spark.sparkContext.broadcast((qArr, qNorm))
-    // null rows are never neighbors (the KNN-family convention)
-    val cPre = corpus.select(col("id").cast("long").as("cid"),
-      col("vec").cast("array<double>").as("cv"))
-      .filter(col("cid").isNotNull && col("cv").isNotNull)
-    val hits = cPre.rdd.mapPartitions { it =>
+    val hits = VectorTopK.vectors(corpus).rdd.mapPartitions { it =>
       val (qs, qn) = bcQ.value
-      val nq = qs.length
-      it.flatMap { r =>
+      if (qs.isEmpty) Iterator.empty
+      else it.flatMap { r =>
         val cid = r.getLong(0)
-        val cv = r.getSeq[Double](1).toArray
-        var nc = 0.0
-        var i = 0
-        while (i < cv.length) { nc += cv(i) * cv(i); i += 1 }
-        (0 until nq).iterator.flatMap { qi =>
+        val cv = VectorTopK.corpusVec(r, qs(0)._2.length,
+          "cosineThresholdJoin")
+        val nc = VectorTopK.norm2(cv)
+        qs.indices.iterator.flatMap { qi =>
           val (qid, qv) = qs(qi)
           if (qid == cid) Iterator.empty
           else {
-            var dot = 0.0
-            var j = 0
-            while (j < qv.length) { dot += qv(j) * cv(j); j += 1 }
-            val cos = dot / math.sqrt(qn(qi) * nc)
+            val cos = VectorTopK.dot(qv, cv) / math.sqrt(qn(qi) * nc)
             if (cos >= threshold) Iterator.single(Row(qid, cid, cos))
             else Iterator.empty
           }
@@ -254,11 +171,7 @@ object SimOps {
       .select(col("l.id").as("qid"), col("r.id").as("cid"),
         cosine(col("l.vec"), col("r.vec")).as("cos"))
       .distinct()
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid"))
-    cand.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos"), col("rk"))
+    VectorTopK.topKPerQuery(cand, "cos", k)
   }  // Release.scoped: top-k result materialized, signature cache freed
 
   /** Embedding near-duplicate pairs: cosine ≥ threshold via LSH buckets
@@ -486,32 +399,25 @@ object SimOps {
     centroids
   }
 
-  /** Nearest-`n` cell ids for a vector against broadcast unit centroids
-    * (cosine order = dot order after normalizing the query side's norm
-    * out — dot with unit centroids ranks identically). */
+  /** The `n` cells nearest `v` against unit centroids, nearest first,
+    * ties toward the lower cell id (cosine order = dot order after
+    * normalizing the query side's norm out — dot with unit centroids
+    * ranks identically). */
+  private def nearestCells(cents: Array[Array[Double]], v: Array[Double],
+                           n: Int): Array[Int] =
+    cents.map(c => VectorTopK.dot(c, v)).zipWithIndex
+      .sortBy { case (d, i) => (-d, i) }.take(n).map(_._2)
+
+  /** [[nearestCells]] as a UDF over broadcast centroids. */
   private def nearestCellsUdf(
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]],
       n: Int) =
     udf { (v: Seq[Double]) =>
-      if (v == null) null
-      else {
-        // List-typed udf param: primitive copy once, O(1) indexing after
-        // (the previous v(i) loop was O(dim²) list traversal per
-        // centroid and serialized the whole assignment stage — the
-        // dominant cost of the sf10 SemDeDup sweep rung)
-        val a = v.toArray
-        val cents = bc.value
-        val dots = new Array[Double](cents.length)
-        var c = 0
-        while (c < cents.length) {
-          var dot = 0.0; var i = 0
-          while (i < a.length) { dot += a(i) * cents(c)(i); i += 1 }
-          dots(c) = dot
-          c += 1
-        }
-        dots.zipWithIndex.sortBy { case (d, i) => (-d, i) }
-          .take(n).map(_._2)
-      }
+      // List-typed udf param: primitive copy once, O(1) indexing after
+      // (the previous v(i) loop was O(dim²) list traversal per
+      // centroid and serialized the whole assignment stage — the
+      // dominant cost of the sf10 SemDeDup sweep rung)
+      if (v == null) null else nearestCells(bc.value, v.toArray, n)
     }
 
   /** IVF approximate top-k by cosine. Index build: spherical k-means
@@ -534,10 +440,14 @@ object SimOps {
                     nCells: Int = 16, nProbe: Int = 4,
                     sampleCap: Int = 20000, kmeansIter: Int = 8,
                     queryCap: Long = 1000000L)
-      : DataFrame =
-    ivfSearch(collectQueriesCapped(queries, queryCap), corpus, k,
-      buildIvfIndex(corpus, nCells, sampleCap, kmeansIter).centroids,
-      nProbe)
+      : DataFrame = {
+    val idx = buildIvfIndex(corpus, nCells, sampleCap, kmeansIter)
+    val qs = VectorTopK.collectQueries(queries, queryCap, "ivfCosineTopK",
+      idx.dim)
+    ivfSearch(qs, corpus, k, idx.centroids,
+      qs.map(q => nearestCells(idx.centroids, q._2, nProbe)),
+      "ivfCosineTopK")
+  }
 
   /** A trained IVF index: L2-normalized cell centroids. Train once on
     * a corpus sample ([[buildIvfIndex]]), persist ([[saveIvfIndex]]),
@@ -550,13 +460,15 @@ object SimOps {
   }
 
   /** Train an IVF index over a deterministic corpus sample (first
-    * `sampleCap` ids; at real scale pass a hash-sampled frame). */
+    * `sampleCap` ids; at real scale pass a hash-sampled frame). Rows
+    * with a null vector are skipped. */
   def buildIvfIndex(corpus: DataFrame, nCells: Int = 16,
                     sampleCap: Int = 20000, kmeansIter: Int = 8)
       : IvfIndex = {
     val sample = corpus
       .select(col("id").cast("long").as("id"),
         col("vec").cast("array<double>").as("v"))
+      .filter(col("v").isNotNull)
       .orderBy(col("id")).limit(sampleCap)
       .collect().map(_.getSeq[Double](1).toArray)
     IvfIndex(sphericalKMeans(sample, nCells, kmeansIter))
@@ -578,19 +490,21 @@ object SimOps {
 
   /** Nearest-centroid cell id for one vector (max dot product, ties
     * toward the lower cell id — matching the search kernel). */
-  private def nearestCell(cents: Array[Array[Double]])
-                         (v: Seq[Double]): Int = {
-    val a = v.toArray // List-typed at udf call sites: O(1) indexing after
+  private def nearestCell(cents: Array[Array[Double]],
+                          v: Array[Double]): Int = {
     var bestC = 0; var bestD = Double.NegativeInfinity
     var c = 0
     while (c < cents.length) {
-      var dot = 0.0; var j = 0
-      while (j < cents(c).length) { dot += a(j) * cents(c)(j); j += 1 }
+      val dot = VectorTopK.dot(v, cents(c))
       if (dot > bestD) { bestD = dot; bestC = c }
       c += 1
     }
     bestC
   }
+
+  /** [[nearestCell]] as a UDF (List-typed input: copied once). */
+  private def cellUdf(cents: Array[Array[Double]]) =
+    udf((v: Seq[Double]) => nearestCell(cents, v.toArray))
 
   /** Write the corpus Hive-partitioned by its IVF cell
     * (`path/cell=N/...`): the at-rest half of ANN at 100 TB. A later
@@ -600,8 +514,7 @@ object SimOps {
     * size. */
   def writeIvfPartitioned(corpus: DataFrame, idx: IvfIndex,
                           path: String): Unit = {
-    val cents = idx.centroids
-    val cellUdf = udf((v: Seq[Double]) => nearestCell(cents)(v))
+    val cellOf = cellUdf(idx.centroids)
     // Spread a single-split source BY CELL so the per-cell-directory
     // write parallelizes with each task holding whole cells — one file
     // per cell instead of (tasks × cells) small files (guide §6).
@@ -610,7 +523,7 @@ object SimOps {
     graft.util.Spread.byKey(
         corpus.select(col("id").cast("long").as("id"),
           col("vec").cast("array<double>").as("vec"))
-          .withColumn("cell", cellUdf(col("vec"))), col("cell"))
+          .withColumn("cell", cellOf(col("vec"))), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
   }
 
@@ -630,12 +543,11 @@ object SimOps {
     * that is what makes append ≡ rewrite exact). */
   def appendIvfPartitioned(newBatch: DataFrame, idx: IvfIndex,
                            path: String): Unit = {
-    val cents = idx.centroids
-    val cellUdf = udf((v: Seq[Double]) => nearestCell(cents)(v))
+    val cellOf = cellUdf(idx.centroids)
     graft.util.Spread.byKey(
         newBatch.select(col("id").cast("long").as("id"),
           col("vec").cast("array<double>").as("vec"))
-          .withColumn("cell", cellUdf(col("vec"))), col("cell"))
+          .withColumn("cell", cellOf(col("vec"))), col("cell"))
       .write.mode("append").partitionBy("cell").parquet(path)
   }
 
@@ -648,144 +560,48 @@ object SimOps {
   def ivfCosineTopKIndexed(queries: DataFrame, corpusPath: String,
                            idx: IvfIndex, k: Int, nProbe: Int = 4,
                            queryCap: Long = 1000000L): DataFrame = {
-    val spark = queries.sparkSession
     val cents = idx.centroids
-    // ONE capped collect serves both probe-cell pruning and the fused
-    // kernel — the loud queryCap require fires before any driver
-    // memory is committed (r12 verdict flaw #3: this path used to
-    // collect the query vectors twice, the first time ahead of the cap)
-    val qArr = collectQueriesCapped(queries, queryCap)
-    val probed = qArr.flatMap { case (_, v) =>
-        val dots = cents.map { c =>
-          var d = 0.0; var j = 0
-          while (j < v.length) { d += v(j) * c(j); j += 1 }
-          d
-        }
-        dots.zipWithIndex.sortBy { case (d, i) => (-d, i) }
-          .take(nProbe).map(_._2)
-      }.distinct.toSeq
-    val pruned = spark.read.parquet(corpusPath)
-      .filter(col("cell").isin(probed: _*))
-      .select(col("id"), col("vec"))
-    ivfSearch(qArr, pruned, k, cents, nProbe)
+    // ONE capped collect serves both probe-cell pruning and the scan
+    val qs = VectorTopK.collectQueries(queries, queryCap,
+      "ivfCosineTopKIndexed", idx.dim)
+    val probes = qs.map(q => nearestCells(cents, q._2, nProbe))
+    val pruned = queries.sparkSession.read.parquet(corpusPath)
+      .filter(col("cell").isin(probes.flatten.distinct.toSeq: _*))
+    ivfSearch(qs, pruned, k, cents, probes, "ivfCosineTopKIndexed")
   }
 
-  /** The single driver-side query collect every IVF path funnels
-    * through: limit(cap+1) bounds the fetch BEFORE any rows land on
-    * the driver, then the require fires with the documented remedy —
-    * an over-cap frame can never OOM mid-collect (docs/CAPS.md). */
-  private def collectQueriesCapped(queries: DataFrame, queryCap: Long)
-      : Array[(Long, Array[Double])] = {
-    val rows = queries.select(col("id").cast("long"),
-        col("vec").cast("array<double>"))
-      .limit(math.min(queryCap + 1, Int.MaxValue - 8L).toInt)
-      .collect()
-    require(rows.length <= queryCap,
-      s"ivfCosineTopK: queries frame exceeds queryCap=$queryCap rows; " +
-        "it is collected to the driver and broadcast. Pre-filter the " +
-        "queries or raise queryCap (with driver heap to match).")
-    rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-  }
-
-  private def ivfSearch(qArr: Array[(Long, Array[Double])],
-                        corpus: DataFrame, k: Int,
-                        cents: Array[Array[Double]], nProbe: Int)
+  /** The IVF scan: each corpus row takes its nearest cell (dot with the
+    * unit centroids) and is scored against only the queries whose
+    * `probes` (per query, its nProbe nearest cells) include that cell.
+    * The earlier join-then-Column-cosine formulation materialized
+    * every (query, cell-member) vector pair and paid interpreted
+    * higher-order-function arithmetic per pair — ~5-10× slower. */
+  private def ivfSearch(qs: VectorTopK.Queries, corpus: DataFrame, k: Int,
+                        cents: Array[Array[Double]],
+                        probes: Array[Array[Int]], op: String)
       : DataFrame = {
-    // Fused kernel, mirroring cosineTopK's shape: queries (≪ corpus)
-    // are collected, probe-cell-indexed, and broadcast; the corpus then
-    // streams through ONE mapPartitions that assigns each row's cell
-    // (dot with the 16 unit centroids) and scores it against only the
-    // queries probing that cell, keeping per-query local top-k heaps.
-    // Shuffle = |queries|·k·partitions candidate rows. The earlier
-    // join-then-Column-cosine formulation materialized every
-    // (query, cell-member) vector pair and paid interpreted
-    // higher-order-function arithmetic per pair — ~5-10× slower.
-    val spark = corpus.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    def cellDots(v: Array[Double]): Array[Double] = {
-      val dots = new Array[Double](cents.length)
-      var c = 0
-      while (c < cents.length) {
-        var dot = 0.0; var i = 0
-        while (i < v.length) { dot += v(i) * cents(c)(i); i += 1 }
-        dots(c) = dot; c += 1
-      }
-      dots
-    }
-    val qNorm = qArr.map { case (_, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      s
-    }
-    // cell → indices of the queries probing it (nProbe nearest cells,
-    // ties toward the lower cell id — same order the UDF variant used)
+    // cell → indices of the queries probing it
     val byCell: Array[Array[Int]] = {
       val buf = Array.fill(cents.length)(Array.newBuilder[Int])
-      qArr.zipWithIndex.foreach { case ((_, qv), qi) =>
-        cellDots(qv).zipWithIndex.sortBy { case (d, i) => (-d, i) }
-          .take(nProbe).foreach { case (_, c) => buf(c) += qi }
+      probes.zipWithIndex.foreach { case (cells, qi) =>
+        cells.foreach(c => buf(c) += qi)
       }
       buf.map(_.result())
     }
-    val bc = spark.sparkContext.broadcast((cents, qArr, qNorm, byCell))
-    val cPre = corpus.select(col("id").cast("long").as("cid"),
-      col("vec").cast("array<double>").as("cv"))
-    val localTop = cPre.rdd.mapPartitions { it =>
-      val (cs, qs, qn, probes) = bc.value
-      val best = Array.fill(qs.length)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-          Ordering.by[(Double, Long), (Double, Long)] {
-            case (c, id) => (-c, id) // max = worst: lowest cos, largest id
-          }))
-      it.foreach { r =>
-        val cid = r.getLong(0)
-        val cv = r.getSeq[Double](1).toArray
-        var nc = 0.0
-        var i = 0
-        while (i < cv.length) { nc += cv(i) * cv(i); i += 1 }
-        // nearest cell for this corpus row
-        var bestC = 0; var bestD = Double.NegativeInfinity
-        var c = 0
-        while (c < cs.length) {
-          var dot = 0.0; var j = 0
-          while (j < cv.length) { dot += cv(j) * cs(c)(j); j += 1 }
-          if (dot > bestD) { bestD = dot; bestC = c }
-          c += 1
-        }
-        val members = probes(bestC)
-        var m = 0
-        while (m < members.length) {
-          val qi = members(m)
-          val (qid, qv) = qs(qi)
-          if (qid != cid) {
-            var dot = 0.0
-            var j = 0
-            while (j < qv.length) { dot += qv(j) * cv(j); j += 1 }
-            val cos = dot / math.sqrt(qn(qi) * nc)
-            val h = best(qi)
-            if (h.size < k) h.enqueue((cos, cid))
-            else {
-              val (wc, wid) = h.head
-              if (cos > wc || (cos == wc && cid < wid)) {
-                h.dequeue(); h.enqueue((cos, cid))
-              }
-            }
-          }
-          m += 1
-        }
-      }
-      best.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.iterator.map { case (cos, cid) => Row(qs(qi)._1, cid, cos) }
+    val state = (cents, qs.map(_._2), qs.map(q => VectorTopK.norm2(q._2)),
+      byCell)
+    val top = VectorTopK.scan(VectorTopK.vectors(corpus), qs.map(_._1),
+        state, k, "cos") { case (cs, qv, qn, members) => (r, heaps) =>
+      val cv = VectorTopK.corpusVec(r, qv(0).length, op)
+      val nc = VectorTopK.norm2(cv)
+      val probing = members(nearestCell(cs, cv))
+      var m = 0
+      while (m < probing.length) {
+        val qi = probing(m)
+        heaps.report(qi, VectorTopK.dot(qv(qi), cv) / math.sqrt(qn(qi) * nc))
+        m += 1
       }
     }
-    val schema = StructType(Seq(StructField("qid", LongType),
-      StructField("cid", LongType), StructField("cos", DoubleType)))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid"))
-    spark.createDataFrame(localTop, schema)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("cid"), col("cos"), col("rk"))
+    VectorTopK.topKPerQuery(top, "cos", k)
   }
 }

@@ -68,12 +68,19 @@ class GuardSpec extends AnyFunSuite {
       "at pre-filtering") {
     import spark.implicits._
     val q = (1 to 4).map(i => (i.toLong, Seq(1.0f, 0.0f)))
-      .toDF("id", "emb")
-    val e = intercept[Exception] {
-      graft.sim.SimOps.cosineTopK(q, q, 1, queryCap = 2L)
+      .toDF("id", "vec")
+    // the exact threshold join shares the cap and its collect
+    val searches = Seq[(String, () => Any)](
+      "cosineTopK" -> (() => graft.sim.SimOps.cosineTopK(q, q, 1,
+        queryCap = 2L)),
+      "cosineThresholdJoin" -> (() => graft.sim.SimOps
+        .cosineThresholdJoin(q, q, 0.5, queryCap = 2L)))
+    for ((op, run) <- searches) {
+      val e = intercept[Exception](run())
+      assert(e.getMessage.contains(s"$op: ") &&
+        e.getMessage.contains("queryCap=2") &&
+        e.getMessage.contains("Pre-filter"), e.getMessage)
     }
-    assert(e.getMessage.contains("queryCap=2") &&
-      e.getMessage.contains("Pre-filter"))
   }
 
   test("maxKnnRef: knnAvg refuses an oversized target frame BEFORE " +
@@ -100,8 +107,18 @@ class GuardSpec extends AnyFunSuite {
     val e1 = intercept[Exception] {
       graft.sim.SimOps.ivfCosineTopK(frame, frame, 1, queryCap = 2L)
     }
-    assert(e1.getMessage.contains("queryCap=2") &&
+    assert(e1.getMessage.contains("ivfCosineTopK: ") &&
+      e1.getMessage.contains("queryCap=2") &&
       e1.getMessage.contains("Pre-filter"), e1.getMessage)
+    // PQ search (the same 1M default) shares the capped collect
+    val cb = graft.sim.PqOps.trainPq(frame, m = 1, ksub = 2)
+    val e3 = intercept[Exception] {
+      graft.sim.PqOps.pqCosineTopK(frame, graft.sim.PqOps.pqEncode(frame,
+        cb), cb, 1, queryCap = 2L)
+    }
+    assert(e3.getMessage.contains("pqCosineTopK: ") &&
+      e3.getMessage.contains("queryCap=2") &&
+      e3.getMessage.contains("Pre-filter"), e3.getMessage)
     // the persisted-index path funnels through the SAME capped collect
     // (it used to collect query vectors for probe cells FIRST, ahead
     // of the cap — r12 verdict #4)
@@ -113,7 +130,8 @@ class GuardSpec extends AnyFunSuite {
       graft.sim.SimOps.ivfCosineTopKIndexed(frame, s"$root/corpus",
         idx, 1, queryCap = 2L)
     }
-    assert(e2.getMessage.contains("queryCap=2"), e2.getMessage)
+    assert(e2.getMessage.contains("ivfCosineTopKIndexed: ") &&
+      e2.getMessage.contains("queryCap=2"), e2.getMessage)
   }
 
   test("compileLm maxEntries: broadcast LM refuses oversized gram " +

@@ -57,6 +57,31 @@ class LinRegSpec extends AnyFunSuite {
     assert(approx(res(1), -0.15906982171278403, 1e-10))
   }
 
+  test("Gram aggregates skip a row with a NaN/±Inf feature or target " +
+      "(f64 and f32 kernels)") {
+    import spark.implicits._
+    val group = data.select(array(col("x1").cast("double"),
+      col("x2").cast("double"), lit(1.0)).as("x"), col("y"))
+    val poison = Seq(
+      (Seq(Double.NaN, 1.0, 1.0), 3.0),
+      (Seq(2.0, Double.PositiveInfinity, 1.0), 1.0),
+      (Seq(2.0, 1.0, 1.0), Double.NegativeInfinity)).toDF("x", "y")
+    val fits = Seq[(org.apache.spark.sql.Column,
+        org.apache.spark.sql.Column) => org.apache.spark.sql.Column](
+      LinRegAgg.linReg(_, _, 3),
+      graft.agg.LinRegAggF32.linRegF32(_, _, 3))
+    for (fit <- fits) {
+      // one partition, group rows first: the same summation order
+      def bits(df: org.apache.spark.sql.DataFrame) = df.coalesce(1)
+        .agg(fit(col("x"), col("y")).as("r")).select("r.coeffs")
+        .collect()(0).getSeq[Double](0)
+        .map(java.lang.Double.doubleToRawLongBits)
+      val want = bits(group)
+      assert(want.length == 3)
+      assert(bits(group.unionByName(poison)) == want)
+    }
+  }
+
   test("logistic IRLS matches numpy IRLS") {
     val beta = LinRegOps.logisticFit(data,
       Seq(col("x1"), col("x2")), col("yl"))

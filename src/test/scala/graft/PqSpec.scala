@@ -19,23 +19,32 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("PQ with one centroid per point is exact (re-ranked and ADC)") {
-    val df = corpus(20, 8)
-    val cb = PqOps.trainPq(df, m = 2, ksub = 20, iters = 4)
-    val codes = PqOps.pqEncode(df, cb)
-    val q = df.filter(col("id") < 5)
-    val exact = SimOps.cosineTopK(q, df, 3)
-      .select(col("qid"), col("rk"), col("cid").as("eid"),
-        col("cos").as("ecos"))
-    val pq = PqOps.pqCosineTopK(q, codes, cb, 3, refine = 2,
-        rerank = Some(df))
-      .select(col("qid"), col("rk"), col("cid").as("aid"),
-        col("cos").as("acos"))
-    val j = exact.join(pq, Seq("qid", "rk")).collect()
-    assert(j.length === 15)
-    j.foreach { r =>
-      assert(r.getAs[Long]("eid") === r.getAs[Long]("aid"), r.toString)
-      assert(math.abs(r.getAs[Double]("ecos") -
-        r.getAs[Double]("acos")) < 1e-12, r.toString)
+    import spark.implicits._
+    val clean = corpus(20, 8)
+    // second input: a null-vec row (so a null code after encoding) in
+    // the corpus and a null-vec query — null rows are never neighbors
+    val withNulls = clean.unionByName(
+      Seq((98L, Option.empty[Seq[Double]])).toDF("id", "vec"))
+    for (df <- Seq(clean, withNulls)) {
+      val cb = PqOps.trainPq(df, m = 2, ksub = 20, iters = 4)
+      val codes = PqOps.pqEncode(df, cb)
+      val q = df.filter(col("id") < 5 || col("id") === 98L)
+      val exact = SimOps.cosineTopK(q, df, 3)
+        .select(col("qid"), col("rk"), col("cid").as("eid"),
+          col("cos").as("ecos"))
+      val pq = PqOps.pqCosineTopK(q, codes, cb, 3, refine = 2,
+          rerank = Some(df))
+        .select(col("qid"), col("rk"), col("cid").as("aid"),
+          col("cos").as("acos"))
+      val j = exact.join(pq, Seq("qid", "rk")).collect()
+      assert(j.length === 15)
+      j.foreach { r =>
+        assert(r.getAs[Long]("eid") === r.getAs[Long]("aid"), r.toString)
+        assert(math.abs(r.getAs[Double]("ecos") -
+          r.getAs[Double]("acos")) < 1e-12, r.toString)
+      }
+      assert(PqOps.pqCosineTopK(q, codes, cb, 3, refine = 2)
+        .filter(col("qid") === 98L || col("cid") === 98L).count() === 0L)
     }
   }
 

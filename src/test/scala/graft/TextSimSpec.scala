@@ -428,15 +428,26 @@ class TextSimSpec extends AnyFunSuite {
         transform(col("vec"), (x, i) =>
           x * (lit(1.0) + (i % 5 - lit(2)) * 0.005)).as("vec"))
     val all = emb.unionByName(planted)
+    // null rows are never neighbors: a null-vec query, a null-id query
+    // and a null-vec corpus row drop out and change nothing else
+    val nullVec = lit(null).cast("array<double>").as("vec")
+    val nullQueries = all.limit(1).select(lit(20000L).as("id"), nullVec)
+      .unionByName(all.limit(1).select(lit(null).cast("long").as("id"),
+        col("vec")))
+    val nullCorpus = all.limit(1).select(lit(20001L).as("id"), nullVec)
     // a near-duplicate pair lands in the same cell unless it straddles a
     // centroid boundary; nProbe=4 of 8 cells must recover ≥90%
-    val approx = SimOps.ivfCosineTopK(
-        all.filter(col("id") >= 10000), all, 1, nCells = 8, nProbe = 4)
-      .select("qid", "cid").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def search(queries: org.apache.spark.sql.DataFrame,
+               corpus: org.apache.spark.sql.DataFrame) =
+      SimOps.ivfCosineTopK(queries, corpus, 1, nCells = 8, nProbe = 4)
+        .select("qid", "cid", "cos").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val approx = search(all.filter(col("id") >= 10000), all)
     val hits = (0L until 50L).count(i =>
-      approx.get(i + 10000).contains(i))
+      approx.get(i + 10000).map(_._1).contains(i))
     assert(hits >= 45, s"IVF planted-dup recall ${hits / 50.0}")
+    assert(search(all.filter(col("id") >= 10000).unionByName(nullQueries),
+      all.unionByName(nullCorpus)) == approx)
     // centroids are unit vectors and distinct
     val sample = all.select(col("vec")).limit(500)
       .collect().map(_.getSeq[Double](0).toArray)
@@ -549,6 +560,33 @@ class TextSimSpec extends AnyFunSuite {
       SimOps.cosineThresholdJoin(vecs, vecs, 0.5, queryCap = 10)
     }
     assert(e.getMessage.contains("queryCap"))
+  }
+
+  test("vector searches fail loudly on a vector of the wrong length") {
+    import spark.implicits._
+    val vecs = (0 until 12).map(i =>
+      (i.toLong, Seq(1.0 + i, 2.0, 0.5 * i))).toDF("id", "vec")
+    val longRow = Seq((99L, Seq(1.0, 2.0, 3.0, 4.0))).toDF("id", "vec")
+    val q = vecs.filter(col("id") < 3)
+    def fails(op: String)(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      assert(e.getMessage.contains(s"$op: ") &&
+        e.getMessage.contains("has length 4, expected 3"), e.getMessage)
+    }
+    // a corpus row one element longer than the queries
+    val corpus = vecs.unionByName(longRow)
+    fails("cosineTopK")(SimOps.cosineTopK(q, corpus, 2).collect())
+    fails("cosineThresholdJoin")(
+      SimOps.cosineThresholdJoin(q, corpus, 0.5).collect())
+    fails("ivfCosineTopK")(
+      SimOps.ivfCosineTopK(q, corpus, 2, nCells = 2).collect())
+    // a query longer than the index's or the codebooks' dimension
+    fails("ivfCosineTopK")(SimOps.ivfCosineTopK(q.unionByName(longRow),
+      vecs, 2, nCells = 2).collect())
+    val cb = graft.sim.PqOps.trainPq(vecs, m = 1, ksub = 4)
+    fails("pqCosineTopK")(graft.sim.PqOps.pqCosineTopK(
+      q.unionByName(longRow), graft.sim.PqOps.pqEncode(vecs, cb), cb, 2)
+      .collect())
   }
 
   test("header sniffing parses real container layouts") {
