@@ -104,23 +104,12 @@ object GraphOps {
     // persist-ok: both branches below unpersist it
     val cached = canonEdges.persist(StorageLevel.MEMORY_AND_DISK)
     val edgeCount = cached.count()
-    if (localFinishThreshold > 0L && edgeCount <= localFinishThreshold) {
-      val sampled = cached.collect()
-      cached.unpersist(blocking = false)
-      // unpack to primitive arrays immediately: every downstream loop
-      // (union-find, id dedup) then runs boxing-free — the boxed
-      // Row/tuple version cost multiple cold-JIT seconds at 445k edges
-      val n = sampled.length
-      val us = new Array[Long](n); val vs = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        val r = sampled(i); us(i) = r.getLong(0); vs(i) = r.getLong(1)
-        i += 1
-      }
+    if (localFinishThreshold > 0L && edgeCount <= localFinishThreshold)
       graft.util.Release.scoped(spark) {
-        unionFindLabels(spark, us, vs)
+        val labels = collectLabels(cached)
+        cached.unpersist(blocking = false)
+        labels
       }
-    }
     else graft.util.Release.scoped(spark) {
     var e = cached
     // fixpoint detection on an order-independent checksum of the edge
@@ -155,15 +144,7 @@ object GraphOps {
             .distinct())
       } else if (prevSum._1 <= localFinishThreshold) {
         // local finish: collect the shrunken edge set, union-find
-        val rows = e.select(col("u"), col("v")).collect()
-        val m = rows.length
-        val us = new Array[Long](m); val vs = new Array[Long](m)
-        var i = 0
-        while (i < m) {
-          val r = rows(i); us(i) = r.getLong(0); vs(i) = r.getLong(1)
-          i += 1
-        }
-        unionFindLabels(spark, us, vs)
+        collectLabels(e)
       } else throw new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxIter rounds")
     labels
@@ -174,104 +155,80 @@ object GraphOps {
     }
   }
 
-  /** Open-addressing long→long map (linear probing, power-of-two
-    * capacity, occupancy bitmap so any long — including 0 — is a valid
-    * key). Boxing-free: the java.util.HashMap version of the union-find
-    * spent multiple cold-JIT seconds allocating Long boxes at 445k
-    * edges; this runs the same workload in tens of milliseconds. */
-  private final class LongLongMap(expected: Int) {
-    private var cap = Integer.highestOneBit(
-      math.max(16, expected * 2 - 1)) << 1
-    private var mask = cap - 1
-    private var keys = new Array[Long](cap)
-    private var vals = new Array[Long](cap)
-    private var occ = new Array[Boolean](cap)
-    private var n = 0
-    private def slot(k: Long): Int = {
-      var i = ((k * 0x9E3779B97F4A7C15L) >>> 40).toInt & mask
-      while (occ(i) && keys(i) != k) i = (i + 1) & mask
-      i
-    }
-    def getOrDefault(k: Long, d: Long): Long = {
-      val i = slot(k); if (occ(i)) vals(i) else d
-    }
-    def put(k: Long, v: Long): Unit = {
-      val i = slot(k)
-      if (!occ(i)) {
-        occ(i) = true; keys(i) = k; n += 1
-        if (n * 2 > cap) grow()
+  /** Union-find over long ids (path compression, union by min) with
+    * its parent pointers in one boxing-free [[graft.util.LongLongMap]].
+    * Every endpoint gets an entry the first time it is seen (a root
+    * maps to itself), so `size` counts distinct ids and the table
+    * holds every id [[foreachRoot]] reports. Unions go by min, so a
+    * root is its component's minimum id. Path compression only
+    * rewrites keys that already exist, so the [[foreachRoot]] sweep
+    * never resizes the table it walks. */
+  private final class UnionFind(expected: Int) {
+    private val parent = new graft.util.LongLongMap(expected)
+
+    /** Distinct ids seen. */
+    def size: Int = parent.size
+
+    /** The root of `x` (an unseen `x` is its own), compressing the path
+      * from `x` onto it. */
+    private def find(x: Long): Long = {
+      var r = x
+      var p = parent.get(r, r)
+      while (p != r) { r = p; p = parent.get(r, r) }
+      var c = x
+      while (c != r) {
+        val nx = parent.get(c, c)
+        if (nx != r) parent.put(c, r)
+        c = nx
       }
-      vals(slot(k)) = v
+      r
     }
-    private def grow(): Unit = {
-      val ok = keys; val ov = vals; val oo = occ; val oc = cap
-      cap <<= 1; mask = cap - 1
-      keys = new Array[Long](cap); vals = new Array[Long](cap)
-      occ = new Array[Boolean](cap); n = 0
-      var i = 0
-      while (i < oc) {
-        if (oo(i)) put(ok(i), ov(i))
-        i += 1
-      }
+
+    /** [[find]], keying a root to itself so an unseen id gets its
+      * entry (a seen root is rewritten in place). */
+    private def root(x: Long): Long = {
+      val r = find(x)
+      if (r == x) parent.put(x, x)
+      r
     }
-    def size: Int = n
-    def foreachEntry(f: (Long, Long) => Unit): Unit = {
-      var i = 0
-      while (i < cap) { if (occ(i)) f(keys(i), vals(i)); i += 1 }
+
+    def union(u: Long, v: Long): Unit = {
+      val ru = root(u); val rv = root(v)
+      if (ru != rv) parent.put(math.max(ru, rv), math.min(ru, rv))
     }
+
+    /** f(id, root of id) for every id seen, in table order. */
+    def foreachRoot(f: (Long, Long) => Unit): Unit =
+      parent.foreachEntry((k, _) => f(k, find(k)))
   }
 
-  /** Driver-side union-find (path compression, union-by-min) over a
-    * collected edge list → (id, component) frame. All-primitive hot
-    * path: parent pointers live in a [[LongLongMap]], node ids dedupe
-    * through the same map (every node gets an entry — roots map to
-    * themselves), and rows materialize only for the final (small)
+  /** Collect the (u, v) edge frame `e` to the driver and label it with
+    * [[unionFindLabels]]. The rows unpack to primitive arrays at once,
+    * so the union-find and the id dedup run boxing-free — the boxed
+    * Row/tuple version cost multiple cold-JIT seconds at 445k edges. */
+  private def collectLabels(e: DataFrame): DataFrame = {
+    val rows = e.select(col("u"), col("v")).collect()
+    val n = rows.length
+    val us = new Array[Long](n); val vs = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      val r = rows(i); us(i) = r.getLong(0); vs(i) = r.getLong(1)
+      i += 1
+    }
+    unionFindLabels(e.sparkSession, us, vs)
+  }
+
+  /** Driver-side union-find over an edge list → (id, component) frame,
+    * one row per endpoint. Rows materialize only for the final (small)
     * label frame. */
   private def unionFindLabels(spark: org.apache.spark.sql.SparkSession,
                               us: Array[Long], vs: Array[Long])
       : DataFrame = {
-    val parent = new LongLongMap(math.min(us.length, 1 << 22))
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r)
-        r = parent.getOrDefault(r, r)
-      var c = x
-      while (parent.getOrDefault(c, c) != c) {
-        val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-      }
-      r
-    }
-    val m = us.length
+    val uf = new UnionFind(math.min(us.length, 1 << 22))
     var i = 0
-    while (i < m) {
-      val ra = find(us(i)); val rb = find(vs(i))
-      if (ra != rb)
-        parent.put(math.max(ra, rb), math.min(ra, rb))
-      else {
-        // ensure the root itself is present so the id sweep sees it
-        parent.put(ra, ra)
-      }
-      i += 1
-    }
-    // second sweep: every node id keyed in `parent` with its final root
-    // (roots put above; non-roots were keyed by path compression or the
-    // initial put). A node can appear only as an endpoint whose parent
-    // was never written (singleton after earlier unions compressed away)
-    // — re-walk the edges once to guarantee full coverage.
-    i = 0
-    while (i < m) {
-      parent.put(us(i), find(us(i))); parent.put(vs(i), find(vs(i)))
-      i += 1
-    }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](
-      parent.size)
-    // the second sweep left every key mapping DIRECTLY to its final
-    // root, so the entry value is the component — calling find(k) here
-    // would path-compress (put) mid-iteration, an iterator-invalidation
-    // hazard if the map ever resizes
-    parent.foreachEntry { (k, root) =>
-      rows.add(org.apache.spark.sql.Row(k, root))
-    }
+    while (i < us.length) { uf.union(us(i), vs(i)); i += 1 }
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](uf.size)
+    uf.foreachRoot((k, root) => rows.add(org.apache.spark.sql.Row(k, root)))
     spark.createDataFrame(rows,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id",
@@ -294,20 +251,8 @@ object GraphOps {
     // at the sf10 rung (84 vs 168 s) and the CC barrier jitter drops
     // with the pair volume. General (non-clique) edge lists should
     // call connectedComponents directly.
-    val forest = localSpanningForest(pairs, id1, id2)
-    val cc = connectedComponents(forest, col("u"), col("v"), maxIter)
-    // csize via a window on the labels frame: one shuffle on component,
-    // no aggregate-then-join round trip. Materialize the (small)
-    // cluster table, then drop the label blocks connectedComponents
-    // left resident — dupClusters is self-cleaning.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("component"))
-    val out = graft.util.Release.scoped(pairs.sparkSession) {
-      cc.select(col("id"), col("component"),
-        count(lit(1)).over(w).as("csize"))
-    }
-    graft.util.Release.free(cc)
-    out
+    dupClustersFromEdges(localSpanningForest(pairs, id1, id2),
+      col("u"), col("v"), maxIter)
   }
 
   /** Survivorship: drop every clustered document except its cluster's
@@ -354,6 +299,10 @@ object GraphOps {
   def dupClustersFromEdges(edges: DataFrame, src: Column, dst: Column,
                            maxIter: Int = 25): DataFrame = {
     val cc = connectedComponents(edges, src, dst, maxIter)
+    // csize via a window on the labels frame: one shuffle on component,
+    // no aggregate-then-join round trip. Materialize the (small)
+    // cluster table, then drop the label blocks connectedComponents
+    // left resident — the call is self-cleaning.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("component"))
     val out = graft.util.Release.scoped(edges.sparkSession) {
@@ -431,24 +380,9 @@ object GraphOps {
     val idCap = java.lang.Long.getLong("graft.maxForestIds", 8000000L)
     pairs.select(id1.cast("long"), id2.cast("long")).as[(Long, Long)]
       .mapPartitions { it =>
-        val parent = new LongLongMap(1 << 10)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r)
-            r = parent.getOrDefault(r, r)
-          var c = x
-          while (c != r) {
-            val nx = parent.getOrDefault(c, c)
-            if (nx != r) parent.put(c, r)
-            c = nx
-          }
-          r
-        }
-        // nodes ever seen: roots that never lose a union are absent
-        // from `parent`, so track them in their own map (key → key)
-        val seen = new LongLongMap(1 << 10)
-        // Per-task distinct-id budget (~35 bytes/id across the two
-        // maps, driver-resolved `idCap` above): a sparse
+        val uf = new UnionFind(1 << 10)
+        // Per-task distinct-id budget (17 B per table slot, 2–4 slots
+        // per id; driver-resolved `idCap` above): a sparse
         // many-distinct-id partition would otherwise OOM the executor
         // silently. Loud fail with the remedy instead (docs/CAPS.md,
         // -Dgraft.maxForestIds).
@@ -460,25 +394,18 @@ object GraphOps {
           // uncontracted path, so the two stay output-identical on
           // arbitrary caller-supplied pair frames
           if (u != v) {
-            seen.put(u, u); seen.put(v, v)
-            if (seen.size > idCap)
+            uf.union(u, v)
+            if (uf.size > idCap)
               throw new IllegalStateException(
                 s"localSpanningForest: more than $idCap distinct ids " +
                   "in one task's pair partition — the per-task " +
                   "union-find would exhaust executor memory. " +
                   "Repartition the pair frame into more partitions or " +
                   "raise -Dgraft.maxForestIds (docs/CAPS.md).")
-            val ru = find(u); val rv = find(v)
-            if (ru != rv) {
-              if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv)
-            }
           }
         }
         val out = Array.newBuilder[(Long, Long)]
-        seen.foreachEntry { (k, _) =>
-          val r = find(k)
-          if (r != k) out += ((r, k))
-        }
+        uf.foreachRoot { (k, r) => if (r != k) out += ((r, k)) }
         out.result().iterator
       }
       .toDF("u", "v")

@@ -41,7 +41,6 @@ object SimOps {
     * at d=768 each 100k queries cost ~600 MB). The corpus side is
     * unbounded. */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                 broadcastCorpus: Boolean = true,
                  queryCap: Long = 100000L): DataFrame = {
     // The shuffle is |queries|·k·partitions candidate rows instead of
     // |queries|·|corpus| joined rows. The arithmetic (sequential dot,

@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   * smaller corpus id. A heap holding k entries replaces its worst entry
   * when a row scores higher, or equal with a smaller `cid`, so the
   * partition-local heaps never drop a row the final window keeps.
-  * Rows with a null id or payload are never neighbors, and a query is
-  * never its own neighbor (equal ids). */
+  * Rows with a null id or payload, vectors holding a null element and
+  * rows that score NaN (a zero-norm vector's cosine) are never
+  * neighbors, and a query is never its own neighbor (equal ids). */
 private[sim] object VectorTopK {
 
   type Queries = Array[(Long, Array[Double])]
@@ -46,9 +47,12 @@ private[sim] object VectorTopK {
     df.select(col("id").cast("long").as("id"), payload.as("v"))
       .filter(col("id").isNotNull && col("v").isNotNull)
 
-  /** [[live]] over the `vec` column as array<double>. */
+  /** [[live]] over the `vec` column as array<double>, also dropping
+    * rows whose vector holds a null element ([[SimOps.cosine]] is null
+    * for them). */
   def vectors(df: DataFrame): DataFrame =
     live(df, col("vec").cast("array<double>"))
+      .filter(!exists(col("v"), _.isNull))
 
   /** The vector of corpus row `r` (from [[vectors]]), which must have
     * the queries' length `dim`. */
@@ -87,9 +91,10 @@ private[sim] object VectorTopK {
         }))
     private[VectorTopK] var cid = 0L
 
-    /** Score of query `qi` against the current corpus row. */
+    /** Score of query `qi` against the current corpus row. A NaN score
+      * (a zero-norm vector's 0/0 cosine) is never kept. */
     def report(qi: Int, score: Double): Unit =
-      if (qids(qi) != cid) {
+      if (qids(qi) != cid && !score.isNaN) {
         val h = best(qi)
         if (h.size < k) h.enqueue((score, cid))
         else {

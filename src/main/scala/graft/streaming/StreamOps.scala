@@ -319,14 +319,7 @@ object StreamOps {
             while (i.nonEmpty) {
               val oid = i.head
               if (oid != docId) {
-                val os = s.head
-                var eq = 0
-                var j = 0
-                while (j < sig.length) {
-                  if (sig(j) == os(j)) eq += 1
-                  j += 1
-                }
-                val est = eq.toDouble / sig.length
+                val est = TextOps.agreement(sig, s.head)
                 if (est >= threshold) {
                   val (a, b) =
                     if (docId < oid) (docId, oid) else (oid, docId)

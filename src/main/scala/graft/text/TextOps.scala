@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.LongLongMap
+
 /** Text analysis for large-scale training-data pipelines: language ID,
   * quality scoring, token counting, document fingerprinting. All the
   * scoring ops are pure `Column` algebra (codegen'd, no UDF) so they run
@@ -513,11 +515,11 @@ object TextOps {
       } else {
         // ---- bucket-local prefix-filter index (all primitive) ----
         // 1. bucket-wide token document frequency (the rarity order)
-        val dfm = new TokenDfMap(1 << 10)
+        val dfm = new LongLongMap(1 << 10)
         i = 0
         while (i < n) {
           val a = tok(i); var k = 0
-          while (k < a.length) { dfm.increment(a(k)); k += 1 }
+          while (k < a.length) { dfm.add(a(k), 1); k += 1 }
           i += 1
         }
         // 2. per-doc prefix = the plen tokens smallest under (df, hash)
@@ -537,12 +539,13 @@ object TextOps {
           i += 1
         }
         // 3. probe/insert an inverted index over prefix tokens.
-        // Postings are a token→head map over parallel (doc, next)
-        // arrays — a linked bucket list, no per-token allocation.
+        // Postings are a token→head map (absent → -1) over parallel
+        // (doc, next) arrays — a linked bucket list, no per-token
+        // allocation.
         var postDoc = new Array[Int](1024)
         var postNext = new Array[Int](1024)
         var postN = 0
-        val heads = new LongHeadMap(1 << 10)
+        val heads = new LongLongMap(1 << 10)
         val stamp = new Array[Int](n)
         java.util.Arrays.fill(stamp, -1)
         def insert(doc: Int): Unit = {
@@ -553,7 +556,7 @@ object TextOps {
               postNext = java.util.Arrays.copyOf(postNext, postN << 1)
             }
             postDoc(postN) = doc
-            postNext(postN) = heads.getAndSet(pf(k), postN)
+            postNext(postN) = heads.getAndPut(pf(k), postN, -1).toInt
             postN += 1
             k += 1
           }
@@ -561,7 +564,7 @@ object TextOps {
         def probe(doc: Int): Unit = {
           val pf = prefix(doc); var k = 0
           while (k < pf.length) {
-            var e = heads.get(pf(k))
+            var e = heads.get(pf(k), -1).toInt
             while (e >= 0) {
               val j = postDoc(e)
               if (stamp(j) != doc) { stamp(j) = doc; compare(doc, j) }
@@ -586,98 +589,12 @@ object TextOps {
       out.result()
     })
 
-  /** Open-addressing long→int counter (token → bucket-local df).
-    * Same boxing-free design as [[graft.graph.GraphOps]]' map. */
-  private final class TokenDfMap(expected: Int) {
-    private var cap = Integer.highestOneBit(
-      math.max(16, expected * 2 - 1)) << 1
-    private var mask = cap - 1
-    private var keys = new Array[Long](cap)
-    private var cnts = new Array[Int](cap)
-    private var occ = new Array[Boolean](cap)
-    private var n = 0
-    private def slot(k: Long): Int = {
-      var i = ((k * 0x9E3779B97F4A7C15L) >>> 40).toInt & mask
-      while (occ(i) && keys(i) != k) i = (i + 1) & mask
-      i
-    }
-    def increment(k: Long): Unit = {
-      val i = slot(k)
-      if (!occ(i)) {
-        occ(i) = true; keys(i) = k; cnts(i) = 1; n += 1
-        if (n * 2 > cap) grow()
-      } else cnts(i) += 1
-    }
-    def get(k: Long): Int = {
-      val i = slot(k); if (occ(i)) cnts(i) else 0
-    }
-    private def grow(): Unit = {
-      val ok = keys; val oc = cnts; val oo = occ; val c0 = cap
-      cap <<= 1; mask = cap - 1
-      keys = new Array[Long](cap); cnts = new Array[Int](cap)
-      occ = new Array[Boolean](cap); n = 0
-      var i = 0
-      while (i < c0) {
-        if (oo(i)) {
-          val s = slot(ok(i))
-          if (!occ(s)) { occ(s) = true; keys(s) = ok(i); n += 1 }
-          cnts(s) = oc(i)
-        }
-        i += 1
-      }
-    }
-  }
-
-  /** Open-addressing long→int head map for the posting lists
-    * (absent → -1). */
-  private final class LongHeadMap(expected: Int) {
-    private var cap = Integer.highestOneBit(
-      math.max(16, expected * 2 - 1)) << 1
-    private var mask = cap - 1
-    private var keys = new Array[Long](cap)
-    private var vals = new Array[Int](cap)
-    private var occ = new Array[Boolean](cap)
-    private var n = 0
-    private def slot(k: Long): Int = {
-      var i = ((k * 0x9E3779B97F4A7C15L) >>> 40).toInt & mask
-      while (occ(i) && keys(i) != k) i = (i + 1) & mask
-      i
-    }
-    def get(k: Long): Int = {
-      val i = slot(k); if (occ(i)) vals(i) else -1
-    }
-    /** Returns the previous head (-1 if absent) and stores `v`. */
-    def getAndSet(k: Long, v: Int): Int = {
-      val i = slot(k)
-      val prev = if (occ(i)) vals(i) else -1
-      if (!occ(i)) {
-        occ(i) = true; keys(i) = k; vals(i) = v; n += 1
-        if (n * 2 > cap) grow()
-      } else vals(i) = v
-      prev
-    }
-    private def grow(): Unit = {
-      val ok = keys; val ov = vals; val oo = occ; val c0 = cap
-      cap <<= 1; mask = cap - 1
-      keys = new Array[Long](cap); vals = new Array[Int](cap)
-      occ = new Array[Boolean](cap); n = 0
-      var i = 0
-      while (i < c0) {
-        if (oo(i)) {
-          val s = slot(ok(i))
-          occ(s) = true; keys(s) = ok(i); vals(s) = ov(i); n += 1
-        }
-        i += 1
-      }
-    }
-  }
-
   /** In-place quicksort of token hashes by (bucket df asc, hash asc) —
     * the prefix rarity order, primitive throughout (a comparator sort
     * would box every element). Insertion sort below 16. */
-  private def sortByDf(a: Array[Long], dfm: TokenDfMap): Unit = {
+  private def sortByDf(a: Array[Long], dfm: LongLongMap): Unit = {
     def less(x: Long, y: Long): Boolean = {
-      val dx = dfm.get(x); val dy = dfm.get(y)
+      val dx = dfm.get(x, 0); val dy = dfm.get(y, 0)
       dx < dy || (dx == dy && x < y)
     }
     def sort(lo: Int, hi: Int): Unit = {
@@ -908,15 +825,27 @@ object TextOps {
   }
 
   /** Estimated Jaccard of two minhash signatures: the fraction of
-    * agreeing permutation slots (the unbiased MinHash estimator).
-    * Marked nondeterministic only to keep the optimizer from inlining
-    * it: a deterministic alias is substituted into the `>= threshold`
-    * filter pushed below its Project, and the 128-slot zip then ran
-    * twice per candidate pair (Filter and Project). Shared with
-    * `StreamOps.streamingIncrementalMinHashDupPairs`. */
-  private[graft] val sigAgreement = udf { (a: Seq[Long], b: Seq[Long]) =>
-    a.zip(b).count { case (x, y) => x == y }.toDouble / a.length
-  }.asNondeterministic()
+    * `a`'s permutation slots that agree with `b`'s (the unbiased
+    * MinHash estimator). Iterates, never indexes: the Seqs are Lists at
+    * udf call sites. Shared with
+    * `StreamOps.streamingIncrementalMinHashDupPairs`' in-state loop. */
+  private[graft] def agreement(a: Seq[Long], b: Seq[Long]): Double = {
+    val ia = a.iterator; val ib = b.iterator
+    var n = 0; var eq = 0
+    while (ia.hasNext) {
+      val x = ia.next(); n += 1
+      if (ib.hasNext && ib.next() == x) eq += 1
+    }
+    eq.toDouble / n
+  }
+
+  /** [[agreement]] as a udf. Marked nondeterministic only to keep the
+    * optimizer from inlining it: a deterministic alias is substituted
+    * into the `>= threshold` filter pushed below its Project, and the
+    * 128-slot loop then ran twice per candidate pair (Filter and
+    * Project). */
+  private[graft] val sigAgreement =
+    udf((a: Seq[Long], b: Seq[Long]) => agreement(a, b)).asNondeterministic()
 
   /** MinHash-LSH near-duplicate candidate pairs: sign → band → bucket
     * self-join → estimated jaccard from signature agreement ≥ threshold.

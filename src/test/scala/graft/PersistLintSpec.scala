@@ -16,18 +16,15 @@ class PersistLintSpec extends AnyFunSuite {
 
   private val persistRe = "(?<!Release)\\.persist\\(".r
 
-  private def isComment(line: String): Boolean = {
-    val t = line.trim
-    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-  }
-
   /** Line numbers (1-based) of unannotated persists in one source. */
   private def lint(src: String): Seq[Int] = {
     val lines = src.split('\n')
     lines.indices.filter { i =>
       val code = lines(i).split("//", 2)(0)
-      persistRe.findFirstIn(code).isDefined && !isComment(lines(i)) && {
-        val above = lines.take(i).reverseIterator.takeWhile(isComment)
+      persistRe.findFirstIn(code).isDefined &&
+        !SourceLint.isComment(lines(i)) && {
+        val above =
+          lines.take(i).reverseIterator.takeWhile(SourceLint.isComment)
         !(lines(i).contains("persist-ok:") ||
           above.exists(_.contains("persist-ok:")))
       }
@@ -38,18 +35,11 @@ class PersistLintSpec extends AnyFunSuite {
 
   test("every operator persist goes through Release.persist or says " +
       "who releases it") {
-    val root = new java.io.File("src/main/scala/graft")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val files = walk(root).filterNot(f =>
-      exempt.exists(f.getPath.replace('\\', '/').contains))
+    val files = SourceLint.sources().filterNot { case (p, _) =>
+      exempt.exists(p.contains) }
     assert(files.size > 50, "lint found too few sources — wrong working dir?")
-    val offenses = files.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      lint(src).map(l => s"${f.getPath}:$l")
-    }
+    val offenses = files.flatMap { case (p, src) =>
+      lint(src).map(l => s"$p:$l") }
     assert(offenses.isEmpty,
       "persist without Release.persist or a `// persist-ok: <who " +
         "releases it>` annotation:\n" + offenses.mkString("\n"))

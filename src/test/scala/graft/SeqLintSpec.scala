@@ -158,17 +158,8 @@ class SeqLintSpec extends AnyFunSuite {
   }
 
   test("src/main kernels array-copy every Seq-typed deserialized input") {
-    val root = new java.io.File("src/main/scala")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val files = walk(root)
-    assert(files.nonEmpty, "lint found no sources — wrong working dir?")
-    val offenses = files.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      lint(f.getPath, src)
-    }
+    val offenses = SourceLint.sources("src/main/scala").flatMap {
+      case (p, src) => lint(p, src) }
     assert(offenses.isEmpty,
       "Seq-typed kernel inputs indexed without .toArray at entry " +
         "(List deserialization => O(n²) loops; r12 sweep bug class):\n" +

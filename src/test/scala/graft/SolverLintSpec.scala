@@ -17,41 +17,22 @@ class SolverLintSpec extends AnyFunSuite {
   private val pivotScaleRe = raw"/=\s*(pv|piv|pivot)\b".r
 
   /** Line numbers (1-based) of pivot searches and pivot scalings. */
-  private def lint(src: String): Seq[Int] = {
-    val lines = src.split('\n')
-    lines.indices.filter { i =>
-      val t = lines(i).trim
-      val code = lines(i).split("//", 2)(0)
-      !(t.startsWith("*") || t.startsWith("/*")) &&
-        (pivotSearchRe.findFirstIn(code).isDefined ||
-          pivotScaleRe.findFirstIn(code).isDefined)
-    }.map(_ + 1)
-  }
+  private def lint(src: String): Seq[Int] =
+    SourceLint.lines(src, Seq(pivotSearchRe, pivotScaleRe))
 
   private val allowed = Seq("/linear/Solvers.scala", "/agg/LinRegAggF32.scala")
 
   test("partial-pivot elimination exists only in graft.linear.Solvers") {
-    val root = new java.io.File("src/main/scala/graft")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val all = walk(root)
-    assert(all.size > 50, "lint found too few sources — wrong working dir?")
-    val kernel = all.filter(f =>
-      f.getPath.replace('\\', '/').endsWith("/linear/Solvers.scala"))
-    assert(kernel.size == 1)
-    def read(f: java.io.File) =
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-    val offenses = all.filterNot(f =>
-        allowed.exists(f.getPath.replace('\\', '/').endsWith))
-      .flatMap(f => lint(read(f)).map(l => s"${f.getPath}:$l"))
+    val all = SourceLint.sources()
+    val offenses =
+      SourceLint.offenses(Seq(pivotSearchRe, pivotScaleRe), allowed, all)
     assert(offenses.isEmpty,
       "hand-written Gauss elimination; call " +
         "graft.linear.Solvers.gaussJordan (or solve) instead:\n" +
         offenses.mkString("\n"))
     // the kernel itself is what the patterns describe
-    assert(lint(read(kernel.head)).size == 2, "kernel no longer matched")
+    assert(lint(SourceLint.only("/linear/Solvers.scala", all)).size == 2,
+      "kernel no longer matched")
   }
 
   test("the lint catches a planted elimination loop and skips comments") {

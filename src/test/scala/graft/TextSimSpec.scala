@@ -589,6 +589,31 @@ class TextSimSpec extends AnyFunSuite {
       .collect())
   }
 
+  test("vector searches never return a null-element or zero-norm " +
+      "neighbor, as SimOps.cosine is null for them") {
+    import spark.implicits._
+    val q = Seq((0L, Seq[java.lang.Double](1.0, 0.0))).toDF("id", "vec")
+    // one partition: every row meets the same per-partition heap
+    val corpus = Seq(
+        (1L, Seq[java.lang.Double](1.0, null)),
+        (2L, Seq[java.lang.Double](0.6, 0.8)),
+        (3L, Seq[java.lang.Double](0.0, 0.0)))
+      .toDF("id", "vec").repartition(1)
+    def hits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.select(col("cid"), round(col("cos"), 9)).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val only = Seq((2L, 0.6))
+    assert(hits(SimOps.cosineTopK(q, corpus, 3)) == only)
+    assert(hits(SimOps.cosineThresholdJoin(q, corpus, -1.0)) == only)
+    assert(hits(SimOps.ivfCosineTopK(q, corpus, 3, nCells = 1,
+      nProbe = 1)) == only)
+    assert(hits(graft.sim.ProjectOps.jlCosineTopK(q, corpus, 3, inDim = 2,
+      jlDim = 2)) == only)
+    // the same rows as queries have no neighbors at all
+    assert(hits(SimOps.cosineTopK(corpus.filter(col("id") =!= 2L),
+      corpus.unionByName(q), 3)).isEmpty)
+  }
+
   test("header sniffing parses real container layouts") {
     import MultimodalOps.{parseMeta, MediaMeta}
     def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray

@@ -18,39 +18,20 @@ class VectorTopKLintSpec extends AnyFunSuite {
     raw"""Window\.partitionBy\(\s*col\(\s*"qid"\s*\)\s*\)""").map(_.r)
 
   /** Line numbers (1-based) of the patterns outside comments. */
-  private def lint(src: String): Seq[Int] = {
-    val lines = src.split('\n')
-    lines.indices.filter { i =>
-      val t = lines(i).trim
-      val code = lines(i).split("//", 2)(0)
-      !(t.startsWith("*") || t.startsWith("/*")) &&
-        patterns.exists(_.findFirstIn(code).isDefined)
-    }.map(_ + 1)
-  }
+  private def lint(src: String): Seq[Int] = SourceLint.lines(src, patterns)
 
   test("capped query collects, top-k heaps and qid rank windows exist " +
       "only in graft.sim.VectorTopK") {
-    val root = new java.io.File("src/main/scala/graft")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val all = walk(root)
-    assert(all.size > 50, "lint found too few sources — wrong working dir?")
-    def isKernel(f: java.io.File) =
-      f.getPath.replace('\\', '/').endsWith("/sim/VectorTopK.scala")
-    val kernel = all.filter(isKernel)
-    assert(kernel.size == 1)
-    def read(f: java.io.File) =
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-    val offenses = all.filterNot(isKernel)
-      .flatMap(f => lint(read(f)).map(l => s"${f.getPath}:$l"))
+    val all = SourceLint.sources()
+    val kernel = "/sim/VectorTopK.scala"
+    val offenses = SourceLint.offenses(patterns, Seq(kernel), all)
     assert(offenses.isEmpty,
       "hand-written vector top-k machinery; call graft.sim.VectorTopK " +
         "(collectQueries / scan / topKPerQuery) instead:\n" +
         offenses.mkString("\n"))
     // the kernel itself is what the patterns describe
-    assert(lint(read(kernel.head)).size == 3, "kernel no longer matched")
+    assert(lint(SourceLint.only(kernel, all)).size == 3,
+      "kernel no longer matched")
   }
 
   test("the lint catches planted copies and skips comments") {
