@@ -568,8 +568,6 @@ object LinRegOps {
     // collect ONCE and run the identical iteration locally. The Gram
     // sums differ from treeAggregate only in FP association order —
     // the same nondeterminism partitioning already introduces.
-    val localCap = java.lang.Long.getLong("graft.maxLocalIrls",
-      4000000L)
     // callers that already know the row count (from their own sizing
     // aggregate) pass it in — the count() here is otherwise a FULL
     // extra pass over the data before the first real iteration
@@ -710,7 +708,7 @@ object LinRegOps {
       return localIterate(data.collect(), init)
     var betas = init
     // Warm start (above-cap data): IRLS is Newton on the working
-    // likelihood, so starting from the MLE of a localCap-sized
+    // likelihood, so starting from the MLE of a maxLocalIrls-sized
     // subsample — within O(1/sqrt(m)) of the full-data optimum — cuts
     // the distributed iteration count from tens to a handful, each
     // saved iteration being a full broadcast+treeAggregate job. The
@@ -721,7 +719,7 @@ object LinRegOps {
     // contract against the FULL data — the warm start only moves the
     // starting point.
     if (maxIter > 1) {
-      val sampleRows = localCap / (d + 2)
+      val sampleRows = maxLocalIrls / (d + 2)
       if (sampleRows > 0 && mRows > 0) {
         val frac = sampleRows.toDouble / mRows // < 1 above the cap
         val sample = data.sample(withReplacement = false, frac, 42L)
@@ -850,8 +848,18 @@ object LinRegOps {
     * primitive RDD that the local path reads exactly once. */
   private[graft] def irlsGoesLocal(rows: Long, d: Int,
                                    maxIter: Int): Boolean =
-    maxIter > 1 && rows * (d + 2) <=
-      java.lang.Long.getLong("graft.maxLocalIrls", 4000000L)
+    maxIter > 1 && fitsLocalIrls(rows, d + 2)
+
+  /** True when `rows` rows of `width` doubles fit [[maxLocalIrls]]:
+    * the local-path test of the Cox, Huber and quantile fits. */
+  private[graft] def fitsLocalIrls(rows: Long, width: Int): Boolean =
+    rows * width <= maxLocalIrls
+
+  /** The `graft.maxLocalIrls` budget of projected doubles for the
+    * driver-local IRLS paths (docs/CAPS.md), read on every call so a
+    * property set at run time takes effect. */
+  private[graft] def maxLocalIrls: Long =
+    java.lang.Long.getLong("graft.maxLocalIrls", 4000000L)
 
   /** Dense per-group Gram accumulator budget for [[irlsEngine]]:
     * 2M doubles = 16 MB per in-flight task accumulator. Beyond this

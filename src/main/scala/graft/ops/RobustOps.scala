@@ -68,14 +68,13 @@ object RobustOps {
     // iteration on the driver — same contract, FP association order
     // differs from the distributed Column sums only as partitioning
     // already makes it.
-    val localCap = java.lang.Long.getLong("graft.maxLocalIrls", 4000000L)
     val baseAll = df.select(gc :+ y.cast("double").as(s"${P}y")
       :+ x.cast("double").as(s"${P}x"): _*)
     val mRows = baseAll
       // persist-ok: baseAll is unpersisted on both paths below
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .count()
-    if (mRows * 3 <= localCap) {
+    if (LinRegOps.fitsLocalIrls(mRows, 3)) {
       val out = localMReg(baseAll, groupNames, method, c, maxIter)
       baseAll.unpersist(blocking = false)
       return out
@@ -248,8 +247,7 @@ object RobustOps {
       // persist-ok: baseAll is unpersisted on both paths below
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mRows = baseAll.count()
-    val localCap = java.lang.Long.getLong("graft.maxLocalIrls", 4000000L)
-    if (mRows * 3 <= localCap) {
+    if (LinRegOps.fitsLocalIrls(mRows, 3)) {
       val out = localQuantile(baseAll, groupNames, tau, maxIter, delta)
       baseAll.unpersist(blocking = false)
       return out

@@ -55,8 +55,7 @@ object SurvOps {
       // persist-ok: unpersisted on both paths below
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mRows = base.count()
-    val localCap = java.lang.Long.getLong("graft.maxLocalIrls", 4000000L)
-    if (mRows * 3 <= localCap) {
+    if (LinRegOps.fitsLocalIrls(mRows, 3)) {
       val out = localCox(base, groupNames, maxIter)
       base.unpersist(blocking = false)
       return out

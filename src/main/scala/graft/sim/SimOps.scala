@@ -460,14 +460,12 @@ object SimOps {
 
   /** Train an IVF index over a deterministic corpus sample (first
     * `sampleCap` ids; at real scale pass a hash-sampled frame). Rows
-    * with a null vector are skipped. */
+    * no search can return ([[VectorTopK.vectors]] drops them: a null
+    * id or vector, a null element) are skipped. */
   def buildIvfIndex(corpus: DataFrame, nCells: Int = 16,
                     sampleCap: Int = 20000, kmeansIter: Int = 8)
       : IvfIndex = {
-    val sample = corpus
-      .select(col("id").cast("long").as("id"),
-        col("vec").cast("array<double>").as("v"))
-      .filter(col("v").isNotNull)
+    val sample = VectorTopK.vectors(corpus)
       .orderBy(col("id")).limit(sampleCap)
       .collect().map(_.getSeq[Double](1).toArray)
     IvfIndex(sphericalKMeans(sample, nCells, kmeansIter))
@@ -512,19 +510,8 @@ object SimOps {
     * so search IO scales with nProbe/nCells of the corpus, not its
     * size. */
   def writeIvfPartitioned(corpus: DataFrame, idx: IvfIndex,
-                          path: String): Unit = {
-    val cellOf = cellUdf(idx.centroids)
-    // Spread a single-split source BY CELL so the per-cell-directory
-    // write parallelizes with each task holding whole cells — one file
-    // per cell instead of (tasks × cells) small files (guide §6).
-    // No-op at production split counts, where partitionBy's own
-    // per-task dynamic partitioning is the right layout.
-    graft.util.Spread.byKey(
-        corpus.select(col("id").cast("long").as("id"),
-          col("vec").cast("array<double>").as("vec"))
-          .withColumn("cell", cellOf(col("vec"))), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-  }
+                          path: String): Unit =
+    writeCells(corpus, idx, path, "overwrite")
 
   /** Append a NEW vector batch into an existing cell-partitioned
     * corpus (from [[writeIvfPartitioned]]) — the ANN state-maintenance
@@ -541,13 +528,24 @@ object SimOps {
     * drift degrades recall (centroids are FROZEN here by design —
     * that is what makes append ≡ rewrite exact). */
   def appendIvfPartitioned(newBatch: DataFrame, idx: IvfIndex,
-                           path: String): Unit = {
+                           path: String): Unit =
+    writeCells(newBatch, idx, path, "append")
+
+  /** The (id, vec, cell) rows of `df` written under `path` partitioned
+    * by cell, in write `mode`. Only rows a search can return
+    * ([[VectorTopK.vectors]]) get a cell. */
+  private def writeCells(df: DataFrame, idx: IvfIndex, path: String,
+                         mode: String): Unit = {
     val cellOf = cellUdf(idx.centroids)
+    // Spread a single-split source BY CELL so the per-cell-directory
+    // write parallelizes with each task holding whole cells — one file
+    // per cell instead of (tasks × cells) small files (guide §6).
+    // No-op at production split counts, where partitionBy's own
+    // per-task dynamic partitioning is the right layout.
     graft.util.Spread.byKey(
-        newBatch.select(col("id").cast("long").as("id"),
-          col("vec").cast("array<double>").as("vec"))
+        VectorTopK.vectors(df).select(col("id"), col("v").as("vec"))
           .withColumn("cell", cellOf(col("vec"))), col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
+      .write.mode(mode).partitionBy("cell").parquet(path)
   }
 
   /** Search a cell-partitioned corpus with a persisted index: compute

@@ -1,8 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode}
+
+import graft.text.{BandJoin, TextOps}
 
 /** Time-bucketed and streaming aggregation (SURVEY §1 last row: the
   * reference's only temporal surface is `Blueprint.group_by_dynamic_agg`
@@ -86,8 +90,7 @@ object StreamOps {
     * degrades to plain dropDuplicates semantics). */
   def streamingExactDedup(df: DataFrame, text: Column,
                           fpCol: String = "__fp"): DataFrame = {
-    val withFp = df.withColumn(fpCol,
-      graft.text.TextOps.fingerprint64(text))
+    val withFp = df.withColumn(fpCol, TextOps.fingerprint64(text))
     (if (withFp.isStreaming) withFp.dropDuplicatesWithinWatermark(fpCol)
      else withFp.dropDuplicates(fpCol)).drop(fpCol)
   }
@@ -104,8 +107,8 @@ object StreamOps {
                            lang: String = "en",
                            minQuality: Double = 0.5): DataFrame =
     streamingExactDedup(
-      df.filter(graft.text.TextOps.langId(text) === lang)
-        .withColumn("__q", graft.text.TextOps.qualityFeatures(text))
+      df.filter(TextOps.langId(text) === lang)
+        .withColumn("__q", TextOps.qualityFeatures(text))
         .filter(col("__q.quality") >= minQuality)
         .drop("__q"),
       text)
@@ -132,98 +135,93 @@ object StreamOps {
       .drop("__fixed", "__g", "__c")
   }
 
-  /** State for one SimHash band bucket: recently seen (id, w0, w1)
-    * 128-bit signatures, newest first, capped at the operator's
-    * `maxPerBucket`.
+  /** State of one (b, h, blk) band bucket across micro-batches: the ids
+    * and fingerprints of its newest documents, newest first, at most
+    * the operator's `maxPerBucket`. A SimHash fingerprint is its two
+    * words (w0, w1); a MinHash fingerprint is its signature.
     *
-    * CHECKPOINT COMPATIBILITY (r14 format change): the r14 128-bit
-    * rework changed both this state schema (was (ids, hashes) over the
-    * 64-bit simhash) and the band-key layout (4×16-bit → 4×32-bit
-    * keys). A streaming query resumed from a pre-r14 checkpoint will
-    * fail state deserialization — discard old checkpoints and restart
-    * the query from the source (the framework is pre-release; no
-    * migration path is provided). */
-  case class BandBucket(ids: Seq[Long], h0: Seq[Long], h1: Seq[Long])
+    * CHECKPOINT COMPATIBILITY: this one state class and its (b, h, blk)
+    * group key replace the per-family bucket states of earlier
+    * revisions, which were keyed on the band alone. A streaming query
+    * resumed from an older checkpoint fails state deserialization:
+    * discard old checkpoints and restart the query from its source
+    * (the framework is pre-release; no migration path is provided). */
+  case class BucketState(ids: Seq[Long], fps: Seq[Seq[Long]])
 
-  /** Streaming twin of `TextOps.simHashDupPairs`: emit near-duplicate
-    * candidate pairs (id1, id2, hamming) as documents arrive, via
-    * 32-bit SimHash band buckets kept in flatMapGroupsWithState state.
-    * Input rows are (id, w0, w1) — the two words of
-    * `TextOps.simHash128` (a native expression; runs fine under
-    * streaming: `element_at(sh, 1)` / `element_at(sh, 2)`).
-    *
-    * Same pigeonhole guarantee as the batch op: a pair within
-    * `maxDist` ≤ 3 bits (over the full 128) shares at least one of
-    * the 4 bands, so it is emitted by that band's group (possibly by
-    * several — pairs are canonically ordered, so a downstream
-    * `dropDuplicatesWithinWatermark` or `distinct` collapses them).
-    * The 32-bit band keys match the batch op's r14 scale fix: a
-    * 16-bit band space pins occupancy growth to the corpus size
-    * (~n²/2¹⁵ candidates); 2³² keys push that out by 2¹⁶.
-    *
-    * State is O(buckets × maxPerBucket), independent of stream length:
-    * each bucket keeps its `maxPerBucket` newest signatures (24 bytes
-    * each), so recall against documents older than the eviction
-    * horizon degrades gracefully — the streaming analogue of the
-    * watermark bound on `streamingExactDedup`. Works identically on a
-    * batch Dataset (state starts empty per run). */
-  def streamingSimhashDupPairs(docs: Dataset[(Long, Long, Long)],
-                               maxDist: Int,
-                               maxPerBucket: Int = 10000)
-      : Dataset[(Long, Long, Int)] = {
-    implicit val encL4 = Encoders.tuple(
-      Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong,
-      Encoders.scalaLong)
-    implicit val encOut = Encoders.tuple(
-      Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaInt)
-    implicit val encState = Encoders.product[BandBucket]
-    val banded = docs.flatMap { case (id, w0, w1) =>
-      Seq(
-        ((0L << 32) | (w0 & 0xffffffffL), id, w0, w1),
-        ((1L << 32) | (w0 >>> 32), id, w0, w1),
-        ((2L << 32) | (w1 & 0xffffffffL), id, w0, w1),
-        ((3L << 32) | (w1 >>> 32), id, w0, w1))
-    }
-    banded.groupByKey(_._1)(Encoders.scalaLong)
-      .flatMapGroupsWithState[BandBucket, (Long, Long, Int)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[(Long, Long, Long, Long)],
-         state: GroupState[BandBucket]) =>
-          var ids = state.getOption.map(_.ids.toList).getOrElse(Nil)
-          var h0s = state.getOption.map(_.h0.toList).getOrElse(Nil)
-          var h1s = state.getOption.map(_.h1.toList).getOrElse(Nil)
-          val out = List.newBuilder[(Long, Long, Int)]
-          rows.foreach { case (_, id, w0, w1) =>
-            var i = ids
-            var a0 = h0s
-            var a1 = h1s
-            while (i.nonEmpty) {
-              val oid = i.head
-              if (oid != id) {
-                val d = java.lang.Long.bitCount(w0 ^ a0.head) +
-                  java.lang.Long.bitCount(w1 ^ a1.head)
-                if (d <= maxDist) {
-                  val (a, b) = if (id < oid) (id, oid) else (oid, id)
-                  out += ((a, b, d))
-                }
-              }
-              i = i.tail
-              a0 = a0.tail
-              a1 = a1.tail
+  /** A stream's band row as [[bucketPairs]] reads it. */
+  private[streaming] case class BandRow(i: Long, fp: Seq[Long])
+
+  /** The one streaming band-bucket loop of the dedup twins. `bands`
+    * holds one row per (document, band): (b, h, blk) keys the bucket
+    * (a struct key, so NULL blocks match each other), `i` is the long
+    * id and `fp` the fingerprint. Each arriving row is scored against
+    * every other id in its bucket's state by `score`, which returns
+    * the pair's score or None to reject it; accepted pairs come out as
+    * (id1, id2, score) with id1 < id2, once per shared bucket. The row
+    * then joins the state, which keeps the newest `maxPerBucket`, so
+    * state is O(buckets × maxPerBucket × fingerprint) whatever the
+    * stream's length. */
+  private def bucketPairs[S](bands: DataFrame, maxPerBucket: Int)
+                            (score: (Seq[Long], Seq[Long]) => Option[S])
+                            (implicit encS: Encoder[S])
+      : Dataset[(Long, Long, S)] = {
+    val key = Seq(col("b"), col("h"), col("blk"))
+    implicit val encState = Encoders.product[BucketState]
+    implicit val encOut = Encoders.tuple(Encoders.scalaLong,
+      Encoders.scalaLong, encS)
+    bands.groupBy(key: _*)
+      .as[Row, BandRow](Encoders.row(bands.select(key: _*).schema),
+        Encoders.product[BandRow])
+      .flatMapGroupsWithState[BucketState, (Long, Long, S)](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+        (_: Row, rows: Iterator[BandRow], state: GroupState[BucketState]) =>
+          var ids = state.getOption.fold(List.empty[Long])(_.ids.toList)
+          var fps =
+            state.getOption.fold(List.empty[Seq[Long]])(_.fps.toList)
+          val out = List.newBuilder[(Long, Long, S)]
+          rows.foreach { r =>
+            ids.iterator.zip(fps.iterator).foreach { case (oid, ofp) =>
+              if (oid != r.i) score(r.fp, ofp).foreach(s =>
+                out += ((math.min(r.i, oid), math.max(r.i, oid), s)))
             }
-            ids = (id :: ids).take(maxPerBucket)
-            h0s = (w0 :: h0s).take(maxPerBucket)
-            h1s = (w1 :: h1s).take(maxPerBucket)
+            ids = (r.i :: ids).take(maxPerBucket)
+            fps = (r.fp :: fps).take(maxPerBucket)
           }
-          state.update(BandBucket(ids, h0s, h1s))
+          state.update(BucketState(ids, fps))
           out.result().iterator
       }
   }
 
-  /** State for one MinHash (band, bucket): recently seen (id,
-    * signature) pairs, newest first, capped at `maxPerBucket`. */
-  case class MinHashBucket(ids: Seq[Long], sigs: Seq[Seq[Long]])
+  /** Streaming twin of `TextOps.simHashDupPairs`: emit near-duplicate
+    * candidate pairs (id1, id2, hamming) as documents arrive. Input
+    * rows are (id, w0, w1) — the two words of `TextOps.simHash128` (a
+    * native expression; runs fine under streaming:
+    * `element_at(sh, 1)` / `element_at(sh, 2)`). They are banded by
+    * the batch op's own 4×32-bit banding (`TextOps.simHashBands`) and
+    * paired in [[bucketPairs]] state.
+    *
+    * Same pigeonhole guarantee as the batch op: a pair within
+    * `maxDist` ≤ 3 bits (over the full 128) shares at least one of
+    * the 4 bands, so it is emitted by that band's bucket (possibly by
+    * several — collapse downstream with `dropDuplicatesWithinWatermark`
+    * or `distinct`). Recall against documents older than a bucket's
+    * eviction horizon degrades gracefully — the streaming analogue of
+    * the watermark bound on `streamingExactDedup`. Works identically
+    * on a batch Dataset (state starts empty per run). */
+  def streamingSimhashDupPairs(docs: Dataset[(Long, Long, Long)],
+                               maxDist: Int,
+                               maxPerBucket: Int = 10000)
+      : Dataset[(Long, Long, Int)] = {
+    val fps = docs.toDF("i", "w0", "w1").select(col("i"),
+      BandJoin.blockKey(None), col("w0"), col("w1"))
+    bucketPairs(TextOps.simHashBands(fps)
+        .withColumn("fp", array(col("w0"), col("w1"))), maxPerBucket) {
+      (a, o) =>
+        val d = java.lang.Long.bitCount(a(0) ^ o(0)) +
+          java.lang.Long.bitCount(a(1) ^ o(1))
+        if (d <= maxDist) Some(d) else None
+    }(Encoders.scalaInt)
+  }
 
   /** Streaming twin of `TextOps.incrementalMinHashDupPairs`: emit
     * near-duplicate pairs of a document STREAM against (a) a persisted
@@ -233,21 +231,23 @@ object StreamOps {
     *
     * Plan shape: the stream is signed and banded once per micro-batch
     * (row-local), then
-    *   1. new-vs-CORPUS: a stream-STATIC equijoin on (band, bucket)
-    *      against the persisted band table — the corpus is never
-    *      re-signed, colliding buckets stream through the join, and
-    *      signatures ride the matching rows (no second lookup);
-    *   2. new-vs-NEW across micro-batches: per-(band, bucket)
-    *      signatures kept in flatMapGroupsWithState state, the same
-    *      banded-bucket state pattern as [[streamingSimhashDupPairs]].
-    * State is O(buckets × maxPerBucket × numHashes·8B), independent of
-    * stream length; recall against stream documents older than the
-    * eviction horizon degrades gracefully.
+    *   1. new-vs-CORPUS: `BandJoin.corpusLeg`, a stream-STATIC
+    *      equijoin on (b, h, blk) against the corpus table's narrow
+    *      (i, blk, b, h) rows — the corpus is never re-signed and its
+    *      signatures never ride the join. The stream rows carry their
+    *      own signature; each corpus signature is fetched by a
+    *      stream-static left join on the corpus's band-0 rows, which
+    *      fails loud on a corpus slice without band 0 (the batch
+    *      sweep's guard);
+    *   2. new-vs-NEW across micro-batches: [[bucketPairs]] state per
+    *      (b, h, blk) bucket.
     *
-    * As with the batch op, a pair colliding in several bands is
-    * emitted once per band — collapse downstream with `distinct`
-    * (batch replay) or `dropDuplicatesWithinWatermark`. Document ids
-    * must be distinct across corpus and stream and long-castable.
+    * `blocking` is the batch op's: pass the same expression the
+    * corpus table was signed with, and pairs never cross blocks. As
+    * with the batch op, a pair colliding in several bands is emitted
+    * once per band — collapse downstream with `distinct` (batch
+    * replay) or `dropDuplicatesWithinWatermark`. Document ids must be
+    * distinct across corpus and stream and long-castable.
     * StreamingSpec pins cross-batch parity: corpus pairs ∪ stream
     * pairs over any micro-batch split equals the batch
     * `incrementalMinHashDupPairs` over the full stream contents. */
@@ -255,86 +255,23 @@ object StreamOps {
       newDocs: DataFrame, id: Column, text: Column,
       corpusBands: DataFrame, threshold: Double, k: Int = 3,
       numHashes: Int = 128, bands: Int = 16,
-      maxPerBucket: Int = 10000): DataFrame = {
-    // NOTE (r15): pass an UNBLOCKED corpus band table. The batch ops
-    // gained an optional blocking column whose key rides in `blk`;
-    // this streaming twin signs the stream side with the default
-    // (constant) block key and joins on (band, bucket) only, so a
-    // BLOCKED corpus table would lose its cross-block exclusion here.
-    // Blocking support for the streaming twin would need the block key
-    // folded into both the stream-static join and the state group key
-    // — not implemented; instead the join FAILS LOUD (r16, r15 ADVICE)
-    // the moment a non-default-key corpus row collides: exactly the
-    // rows that would have produced a wrongly-unblocked pair raise,
-    // and an unblocked table pays nothing (no setup scan of the
-    // corpus).
-    import graft.text.TextOps
-    val nb = TextOps.minHashBandTable(
-      newDocs.select(id.cast("long").as("__id"), text.as("__t")),
-      col("__id"), col("__t"), k, numHashes, bands)
-    val blockedCorpus = raise_error(lit(
-      "streamingIncrementalMinHashDupPairs: the corpus band table " +
-        "carries a non-default blocking key, whose cross-block " +
-        "exclusion this streaming twin cannot honor (it joins on " +
-        "(band, bucket) only). Pass an UNBLOCKED corpus band table."))
-    val vsCorpus = nb.as("n").join(corpusBands.as("c"),
-        col("n.b") === col("c.b") && col("n.h") === col("c.h") &&
-          col("n.i").cast("long") =!= col("c.i").cast("long"))
-      .select(
-        least(col("n.i").cast("long"), col("c.i").cast("long"))
-          .as("id1"),
-        greatest(col("n.i").cast("long"), col("c.i").cast("long"))
-          .as("id2"),
-        // compare the block FIELD, cast to string (r16 ADVICE): the
-        // former whole-struct comparison against struct(lit(0)) hit
-        // type coercion when a caller blocked on a non-int key — a
-        // confusing cast/analysis error (or a never-equal comparison
-        // raising on default-key rows) instead of the crafted message
-        when(!(col("c.blk.k").cast("string") <=> lit("0")),
-            blockedCorpus)
-          .otherwise(TextOps.sigAgreement(col("n.sig"), col("c.sig")))
-          .as("est_jaccard"))
+      maxPerBucket: Int = 10000,
+      blocking: Option[Column] = None): DataFrame = {
+    val nb = TextOps.minHashBandTable(newDocs, id.cast("long"), text, k,
+      numHashes, bands, blocking)
+    val corpus = corpusBands.withColumn("i", col("i").cast("long"))
+    val vsCorpus = TextOps.fetchSig(
+        BandJoin.corpusLeg(nb, BandJoin.keys(corpus),
+          col("r.i").as("__ci"), col("l.sig").as("__sn")),
+        "__ci", TextOps.band0Sigs(corpus), "__sc")
+      .select(col("id1"), col("id2"),
+        TextOps.estJaccard(col("__sn"), col("__sc")))
       .filter(col("est_jaccard") >= threshold)
-    val session = newDocs.sparkSession
-    import session.implicits._
-    val ds = nb.select(col("b"), col("h"), col("i").cast("long"),
-        col("sig"))
-      .as[(Int, Long, Long, Seq[Long])]
-    implicit val encState = Encoders.product[MinHashBucket]
-    implicit val encOut = Encoders.tuple(Encoders.scalaLong,
-      Encoders.scalaLong, Encoders.scalaDouble)
-    val within = ds.groupByKey(r => (r._1, r._2))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .flatMapGroupsWithState[MinHashBucket, (Long, Long, Double)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Seq[Long])],
-         state: GroupState[MinHashBucket]) =>
-          var ids = state.getOption.map(_.ids.toList).getOrElse(Nil)
-          var sigs = state.getOption.map(_.sigs.toList).getOrElse(Nil)
-          val out = List.newBuilder[(Long, Long, Double)]
-          rows.foreach { case (_, _, docId, sig) =>
-            var i = ids
-            var s = sigs
-            while (i.nonEmpty) {
-              val oid = i.head
-              if (oid != docId) {
-                val est = TextOps.agreement(sig, s.head)
-                if (est >= threshold) {
-                  val (a, b) =
-                    if (docId < oid) (docId, oid) else (oid, docId)
-                  out += ((a, b, est))
-                }
-              }
-              i = i.tail
-              s = s.tail
-            }
-            ids = (docId :: ids).take(maxPerBucket)
-            sigs = (sig :: sigs).take(maxPerBucket)
-          }
-          state.update(MinHashBucket(ids, sigs))
-          out.result().iterator
-      }
+    val within = bucketPairs(nb.withColumnRenamed("sig", "fp"),
+        maxPerBucket) { (a, o) =>
+      val est = TextOps.agreement(a, o)
+      if (est >= threshold) Some(est) else None
+    }(Encoders.scalaDouble)
     vsCorpus.unionByName(within.toDF("id1", "id2", "est_jaccard"))
   }
 

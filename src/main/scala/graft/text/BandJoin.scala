@@ -25,24 +25,33 @@ private[graft] object BandJoin {
   def blockKey(blocking: Option[Column]): Column =
     struct(blocking.getOrElse(lit(0)).as("k")).as("blk")
 
+  /** The join columns (i, blk, b, h) of a band table, without its
+    * fingerprint. */
+  def keys(bands: DataFrame): DataFrame =
+    bands.select(col("i"), col("blk"), col("b"), col("h"))
+
   /** Candidate rows (id1, id2, extra*) with id1 < id2, one per shared
     * bucket — a pair colliding in several bands repeats, so callers
     * verify and dedup. `extra` reads the joined sides as `l` and `r`.
     * Legs: `probe` × `fresh` with l.i < r.i, and, given a corpus,
-    * `probe` × corpus with l.i ≠ r.i normalized by least/greatest.
-    * `probe` is `fresh` itself, or `fresh` with each bucket key
-    * expanded to a probe ball (image MIH). */
+    * [[corpusLeg]]. `probe` is `fresh` itself, or `fresh` with each
+    * bucket key expanded to a probe ball (image MIH). */
   def candidates(probe: DataFrame, fresh: DataFrame,
                  corpus: Option[DataFrame], extra: Column*): DataFrame = {
-    def bucket(r: DataFrame, cond: Column) = probe.as("l").join(r.as("r"),
-      col("l.b") === col("r.b") && col("l.h") === col("r.h") &&
-        col("l.blk") === col("r.blk") && cond)
-    val within = bucket(fresh, col("l.i") < col("r.i"))
+    val within = bucket(probe, fresh, col("l.i") < col("r.i"))
       .select(col("l.i").as("id1") +: col("r.i").as("id2") +: extra: _*)
-    corpus.fold(within) { c =>
-      within.union(bucket(c, col("l.i") =!= col("r.i"))
-        .select(least(col("l.i"), col("r.i")).as("id1") +:
-          greatest(col("l.i"), col("r.i")).as("id2") +: extra: _*))
-    }
+    corpus.fold(within)(c => within.union(corpusLeg(probe, c, extra: _*)))
   }
+
+  /** The corpus leg of [[candidates]]: `probe` × `corpus` with
+    * l.i ≠ r.i, normalized to id1 < id2 by least/greatest. */
+  def corpusLeg(probe: DataFrame, corpus: DataFrame,
+                extra: Column*): DataFrame =
+    bucket(probe, corpus, col("l.i") =!= col("r.i"))
+      .select(least(col("l.i"), col("r.i")).as("id1") +:
+        greatest(col("l.i"), col("r.i")).as("id2") +: extra: _*)
+
+  private def bucket(l: DataFrame, r: DataFrame, cond: Column): DataFrame =
+    l.as("l").join(r.as("r"), col("l.b") === col("r.b") &&
+      col("l.h") === col("r.h") && col("l.blk") === col("r.blk") && cond)
 }

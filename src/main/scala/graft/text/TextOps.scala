@@ -806,29 +806,33 @@ object TextOps {
   /** LSH banding: signature → array of (bandIndex, bandHash) structs;
     * explode + groupBy bucket to find candidates. bands·rows must equal
     * the signature length. */
-  def lshBands(sig: Column, bands: Int, rows: Int): Column = {
-    val f = udf { (s: Seq[Long]) =>
-      if (s == null) null
-      else {
-        val a = s.toArray // List at udf call sites: O(1) indexing after
-        (0 until bands).map { b =>
-          var h = 0xcbf29ce484222325L
-          var i = b * rows
-          while (i < (b + 1) * rows) {
-            h ^= a(i); h *= 0x100000001b3L; i += 1
-          }
-          (b, h)
+  def lshBands(sig: Column, bands: Int, rows: Int): Column =
+    lshBandsUdf(sig, lit(bands), lit(rows))
+
+  /** [[lshBands]]' one UDF, with `bands` and `rows` as literal
+    * arguments: ScalaUDF equality is closure identity, so a UDF built
+    * per call would make two band tables over one input never
+    * `sameResult` and defeat the CacheManager's lookup. */
+  private val lshBandsUdf = udf { (s: Seq[Long], bands: Int, rows: Int) =>
+    if (s == null) null
+    else {
+      val a = s.toArray // List at udf call sites: O(1) indexing after
+      (0 until bands).map { b =>
+        var h = 0xcbf29ce484222325L
+        var i = b * rows
+        while (i < (b + 1) * rows) {
+          h ^= a(i); h *= 0x100000001b3L; i += 1
         }
+        (b, h)
       }
     }
-    f(sig)
   }
 
   /** Estimated Jaccard of two minhash signatures: the fraction of
     * `a`'s permutation slots that agree with `b`'s (the unbiased
     * MinHash estimator). Iterates, never indexes: the Seqs are Lists at
     * udf call sites. Shared with
-    * `StreamOps.streamingIncrementalMinHashDupPairs`' in-state loop. */
+    * `StreamOps.streamingIncrementalMinHashDupPairs`' bucket state. */
   private[graft] def agreement(a: Seq[Long], b: Seq[Long]): Double = {
     val ia = a.iterator; val ib = b.iterator
     var n = 0; var eq = 0
@@ -922,8 +926,24 @@ object TextOps {
   }
 
   /** The signature of each document in band tables: its band-0 row. */
-  private def band0Sigs(bands: DataFrame): DataFrame =
+  private[graft] def band0Sigs(bands: DataFrame): DataFrame =
     bands.filter(col("b") === 0).select(col("i"), col("sig"))
+
+  /** `cand` with the signature of its `id` column's document from
+    * `sigs` (i, sig) as column `out`, null where `sigs` lacks it. */
+  private[graft] def fetchSig(cand: DataFrame, id: String, sigs: DataFrame,
+                              out: String): DataFrame =
+    cand.join(sigs.select(col("i").as(id), col("sig").as(out)), Seq(id),
+      "left")
+
+  /** `est_jaccard` of two fetched signatures ([[fetchSig]]), failing
+    * loud when either is missing. */
+  private[graft] def estJaccard(s1: Column, s2: Column): Column =
+    when(s1.isNull || s2.isNull, raise_error(lit(
+      "minhash sweep: candidate id has no band-0 signature row — the " +
+        "band table slice is missing band 0. Pass a slice that " +
+        "includes b = 0 (signatures are fetched from it).")))
+      .otherwise(sigAgreement(s1, s2)).as("est_jaccard")
 
   /** The one MinHash sweep: [[BandJoin]] candidates over (i, blk, b, h)
     * of `fresh` (and `corpus`), then signatures `sigs` (i, sig) fetched
@@ -946,23 +966,11 @@ object TextOps {
   private def minHashSweep(fresh: DataFrame, corpus: Option[DataFrame],
                            sigs: DataFrame, threshold: Double)
       : DataFrame = {
-    def narrow(df: DataFrame) =
-      df.select(col("i"), col("blk"), col("b"), col("h"))
-    val nf = narrow(fresh)
-    val cand = BandJoin.candidates(nf, nf, corpus.map(narrow)).distinct()
-    val missing = raise_error(lit(
-      "minhash sweep: candidate id has no band-0 signature row — the " +
-        "band table slice is missing band 0. Pass a slice that " +
-        "includes b = 0 (signatures are fetched from it)."))
-    cand
-      .join(sigs.select(col("i").as("id1"), col("sig").as("__s1")),
-        Seq("id1"), "left")
-      .join(sigs.select(col("i").as("id2"), col("sig").as("__s2")),
-        Seq("id2"), "left")
-      .select(col("id1"), col("id2"),
-        when(col("__s1").isNull || col("__s2").isNull, missing)
-          .otherwise(sigAgreement(col("__s1"), col("__s2")))
-          .as("est_jaccard"))
+    val nf = BandJoin.keys(fresh)
+    val cand = BandJoin.candidates(nf, nf, corpus.map(BandJoin.keys))
+      .distinct()
+    fetchSig(fetchSig(cand, "id1", sigs, "__s1"), "id2", sigs, "__s2")
+      .select(col("id1"), col("id2"), estJaccard(col("__s1"), col("__s2")))
       .filter(col("est_jaccard") >= threshold)
   }
 
@@ -1104,17 +1112,21 @@ object TextOps {
         df.select(id.as("i"), text.as("__t"), BandJoin.blockKey(blocking)),
         col("i"))
       .select(col("i"), simHash128(col("__t")).as("sh"), col("blk"))
-    val w0 = element_at(col("sh"), 1)
-    val w1 = element_at(col("sh"), 2)
-    withSh.select(col("i"), col("blk"), w0.as("w0"), w1.as("w1"),
-        explode(array(
-          struct(lit(0).as("b"),
-            w0.bitwiseAND(lit(0xffffffffL)).as("h")),
-          struct(lit(1).as("b"), shiftrightunsigned(w0, 32).as("h")),
-          struct(lit(2).as("b"),
-            w1.bitwiseAND(lit(0xffffffffL)).as("h")),
-          struct(lit(3).as("b"),
-            shiftrightunsigned(w1, 32).as("h")))).as("band"))
+    simHashBands(withSh.select(col("i"), col("blk"),
+      element_at(col("sh"), 1).as("w0"), element_at(col("sh"), 2).as("w1")))
+  }
+
+  /** Fingerprint rows (i, blk, w0, w1) → the band table: one row per
+    * 32-bit half of the 128-bit SimHash, band b keying on bits
+    * 32·b … 32·b + 31 — (i, blk, w0, w1, b, h). */
+  private[graft] def simHashBands(fps: DataFrame): DataFrame = {
+    val (w0, w1) = (col("w0"), col("w1"))
+    val halves = Seq(w0.bitwiseAND(lit(0xffffffffL)),
+      shiftrightunsigned(w0, 32), w1.bitwiseAND(lit(0xffffffffL)),
+      shiftrightunsigned(w1, 32))
+    fps.select(col("i"), col("blk"), w0, w1,
+        explode(array(halves.zipWithIndex.map { case (h, b) =>
+          struct(lit(b).as("b"), h.as("h")) }: _*)).as("band"))
       .select(col("i"), col("blk"), col("w0"), col("w1"),
         col("band.b").as("b"), col("band.h").as("h"))
   }

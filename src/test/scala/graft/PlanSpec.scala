@@ -456,8 +456,38 @@ class PlanSpec extends AnyFunSuite {
         col("text"), corpusBands, 0.5)
       .queryExecution.executedPlan.toString
     val streamAgreements =
-      raw"UDF\(sig#\d+, sig#\d+\)".r.findAllIn(streamPlan).size
+      raw"UDF\(__sn#\d+, __sc#\d+\)".r.findAllIn(streamPlan).size
     assert(streamAgreements == 1, streamPlan)
+  }
+
+  test("minhash band tables and their sweeps over one input are " +
+    "sameResult, so the CacheManager can match them") {
+    import graft.text.TextOps
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    def bands() = TextOps.minHashBandTable(docs, col("doc_id"), col("text"))
+    val (b1, b2) = (bands(), bands())
+    assert(b1.queryExecution.analyzed.sameResult(b2.queryExecution.analyzed))
+    val (p1, p2) = (TextOps.minHashDupPairsFromBands(b1, 0.5),
+      TextOps.minHashDupPairsFromBands(b2, 0.5))
+    assert(p1.queryExecution.analyzed.sameResult(p2.queryExecution.analyzed))
+    // a different banding is a different plan
+    val other = TextOps.minHashBandTable(docs, col("doc_id"), col("text"),
+      bands = 8)
+    assert(!b1.queryExecution.analyzed.sameResult(
+      other.queryExecution.analyzed))
+  }
+
+  test("repeated q_incremental_dedup calls hold a constant cache entry " +
+    "count") {
+    // the query persists its signed band table and never releases it;
+    // a plan-stable table makes every later call's persist find that
+    // one entry instead of adding its own (CacheHygieneSpec's probe)
+    val run = SparkEntry.queries("q_incremental_dedup")
+    val counts = (1 to 3).map { _ =>
+      run(spark, dir).collect()
+      org.apache.spark.sql.graft.CacheProbe.numCachedEntries(spark)
+    }
+    assert(counts.distinct.size == 1, s"entries after each call: $counts")
   }
 
   test("urlDedup is one hash aggregation over a narrow projection " +

@@ -188,6 +188,66 @@ class StreamingSpec extends AnyFunSuite {
     } finally { q.stop(); corpusBands.unpersist() }
   }
 
+  test("streamingIncrementalMinHashDupPairs honours blocking: a blocked " +
+      "corpus + stream match the blocked batch op, no pair crosses a " +
+      "block") {
+    import spark.implicits._
+    import graft.text.TextOps
+    implicit val sqlCtx = spark.sqlContext
+    val base = "the quick brown fox jumps over the lazy dog again and " +
+      "again with many more words to shingle"
+    def doc(i: Long, extra: String, src: String) = (i, s"$base $extra", src)
+    // near-dups inside blocks (1~10 in a, 2~11 in b, 12~15 in a across
+    // batches, 13~14 in the NULL block) and across them (1~11, 10~11,
+    // 2~10, 12~13 …)
+    val corpusDocs = Seq(doc(1L, "alpha", "a"), doc(2L, "alpha", "b"),
+        (3L, "parquet footers bloom filters and row groups", "a"))
+      .toDF("doc_id", "text", "source")
+    val blocking = Some(col("source"))
+    val corpusBands = TextOps.minHashBandTable(corpusDocs, col("doc_id"),
+      col("text"), blocking = blocking).cache()
+    corpusBands.count()
+    val b1 = Seq(doc(10L, "alpha beta", "a"), doc(11L, "alpha beta", "b"))
+    val b2 = Seq(doc(12L, "gamma delta", "a"), doc(13L, "gamma delta", null))
+    val b3 = Seq(doc(14L, "gamma delta", null), doc(15L, "gamma delta", "a"))
+    val mem = MemoryStream[(Long, String, String)]
+    val pairs = StreamOps.streamingIncrementalMinHashDupPairs(
+      mem.toDS().toDF("doc_id", "text", "source"), col("doc_id"),
+      col("text"), corpusBands, threshold = 0.6, blocking = blocking)
+    val q = pairs.writeStream.format("memory")
+      .queryName("graft_incmh_block_test").outputMode("append").start()
+    def idPairs(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id1"), col("id2"), round(col("est_jaccard"), 9))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    try {
+      Seq(b1, b2, b3).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      val got = idPairs(spark.sql(
+        "SELECT DISTINCT id1, id2, est_jaccard FROM graft_incmh_block_test"))
+      val all = (b1 ++ b2 ++ b3).toDF("doc_id", "text", "source")
+      def batch(blk: Option[org.apache.spark.sql.Column]) =
+        idPairs(TextOps.incrementalMinHashDupPairs(all, col("doc_id"),
+          col("text"), TextOps.minHashBandTable(corpusDocs, col("doc_id"),
+            col("text"), blocking = blk), threshold = 0.6, blocking = blk))
+      val want = batch(blocking)
+      val ids = want.map(p => (p._1, p._2))
+      Seq((1L, 10L), (2L, 11L), (12L, 15L), (13L, 14L)).foreach(p =>
+        assert(ids.contains(p), s"$p missing from the batch pairs: $want"))
+      // the fixture does plant cross-block near-dups
+      val unblocked = batch(None).map(p => (p._1, p._2))
+      assert(Seq((1L, 11L), (10L, 11L), (12L, 13L)).forall(unblocked),
+        s"cross-block near-dups missing unblocked: $unblocked")
+      assert(got == want,
+        s"streaming vs batch:\n only-stream=${got -- want}\n " +
+          s"only-batch=${want -- got}")
+      val src = (corpusDocs.collect().map(r =>
+          (r.getLong(0), Option(r.getString(2)))) ++
+        (b1 ++ b2 ++ b3).map(d => (d._1, Option(d._3)))).toMap
+      assert(got.forall(p => src(p._1) == src(p._2)),
+        s"a streamed pair crosses blocks: $got")
+    } finally { q.stop(); corpusBands.unpersist() }
+  }
+
   test("streamingExactDedup state survives a checkpoint stop/restart " +
     "(a duplicate of a pre-restart doc is still dropped)") {
     import spark.implicits._

@@ -736,6 +736,27 @@ class TextSimSpec extends AnyFunSuite {
     assert(inc == rw && inc.nonEmpty)
   }
 
+  test("IVF training and cell writes skip null-element vectors, as " +
+      "every search does") {
+    import spark.implicits._
+    val clean = (1 to 40).map(i => (i.toLong,
+      Seq[java.lang.Double](math.cos(i * 0.7), math.sin(i * 0.7))))
+    def nullRow(id: Long) = (id, Seq[java.lang.Double](1.0, null))
+    val withNull = (nullRow(0L) +: clean).toDF("id", "vec")
+    def cents(idx: SimOps.IvfIndex) = idx.centroids.map(_.toSeq).toSeq
+    val idx = SimOps.buildIvfIndex(withNull, nCells = 4)
+    assert(cents(idx) ==
+      cents(SimOps.buildIvfIndex(clean.toDF("id", "vec"), nCells = 4)))
+    val root =
+      s"${System.getProperty("java.io.tmpdir")}/graft_ivf_null_spec"
+    SimOps.writeIvfPartitioned(withNull, idx, root)
+    SimOps.appendIvfPartitioned(Seq(nullRow(100L)).toDF("id", "vec"), idx,
+      root)
+    val written = spark.read.parquet(root).select(col("id")).collect()
+      .map(_.getLong(0)).sorted.toSeq
+    assert(written == (1L to 40L))
+  }
+
   test("decodeBatch (mapPartitions) matches the scalar decode UDF") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$docsDir/documents.parquet")
